@@ -1752,7 +1752,7 @@ stem/Z
                  .agg(F.countDistinct("docid").cast("long").alias("freq")))
         ranked = suggest_similar_ranked(
             spark, words, "smal", 5, mode="SUGGEST_WHEN_NOT_IN_INDEX")
-        w = Window.orderBy(F.desc("score"), F.desc("freq"), F.desc("word"))
+        w = Window.orderBy(F.desc("score"), F.desc("freq"), F.asc("word"))
         return ranked.select(
             (F.row_number().over(w) - 1).cast("long").alias("pos"),
             "word", "freq",
@@ -9015,7 +9015,7 @@ sc AS (
   WHERE p.word <> 'smal'
 )
 SELECT CAST(row_number() OVER (
-         ORDER BY score DESC, freq DESC, word DESC) - 1 AS BIGINT) AS pos,
+         ORDER BY score DESC, freq DESC, word ASC) - 1 AS BIGINT) AS pos,
        word, freq, CAST(floor(score * 10000) AS BIGINT) AS score_q
 FROM sc WHERE score >= 0.5
 ORDER BY pos LIMIT 5""",

@@ -231,7 +231,7 @@ def classify_bm25_nb(
     # per-(class, word) max text-field BM25 over that class's docs
     from .search import term_dfs
 
-    dfs = term_dfs(words, index.termdict)
+    dfs = term_dfs(words, index)
     weights = spark.createDataFrame(
         [(t, math.log(1.0 + (n - dfs[t] + 0.5) / (dfs[t] + 0.5)))
          for t in words if t in dfs] or [("", 0.0)],

@@ -6,11 +6,12 @@ IndexSearcher.java:470-511,728-753 — traced in SURVEY §3.1):
   1. parse + analyze the query with the same analyzer
      (queryparser/.../classic/QueryParserBase.java:437 getFieldQuery);
   2. rewrite (drop unknown/stopword-only clauses → MatchNoDocs analog);
-  3. "createWeight": look up query terms in the term dictionary — a pushed-down
-     isin() filter against the sorted termdict parquet (the FST analog) — and
-     build one BM25Scorer per term from global stats (TermStates.build walks
-     all segments: index/TermStates.java:95; here stats are global by
-     construction);
+  3. "createWeight": look up query terms' df/cf in the index's term-statistics
+     snapshot (``Index.term_stats``: the whole termdict as sorted columnar
+     arrays, collected once per handle and binary-searched on the driver, so
+     the lookup launches no Spark job) and build one BM25Scorer per term from
+     global stats (TermStates.build reads reader-resident terms dictionaries:
+     index/TermStates.java:95; here stats are global by construction);
   4. per-segment execution: postings rows for the query terms are grouped by
      segment and scored by the windowed block-max kernel inside applyInPandas
      — segment == Lucene leaf, executor == searcher thread;
@@ -759,11 +760,7 @@ def fuzzy_like_this(
         cand = expand_terms(index, fuzzy=(t, max_edits, prefix_length))
         if not cand:
             continue
-        td_rows = (
-            index.termdict.filter(F.col("term").isin(list(set(cand) | {t})))
-            .select("term", "df").collect()
-        )
-        dfs = {r["term"]: int(r["df"]) for r in td_rows}
+        dfs = term_dfs(list(set(cand) | {t}), index)
         scored = []
         for v in cand:
             ed = damerau_levenshtein(v, t, max_edits)
@@ -891,12 +888,7 @@ def combined_field_score(
         f: (term if f == default_field else f"{f}:{term}") for f in weights
     }
     spark = index.postings.sparkSession
-    td_rows = (
-        index.termdict.filter(F.col("term").isin(list(names.values())))
-        .select("term", "df")
-        .collect()
-    )
-    dfs = {r["term"]: int(r["df"]) for r in td_rows}
+    dfs = term_dfs(list(names.values()), index)
     if not dfs:
         return spark.createDataFrame([], "docid long, score double")
     df_pseudo = max(dfs.values())
@@ -1067,7 +1059,7 @@ def common_terms_query(
     toks = list(dict.fromkeys(analyze(text, analyzer)))
     if not toks:
         return None
-    dfs = term_dfs(toks, index.termdict)
+    dfs = term_dfs(toks, index)
     cutoff = (
         max_term_frequency if max_term_frequency >= 1.0
         else _math.ceil(max_term_frequency * index.doc_count)
@@ -2183,50 +2175,28 @@ class TopDocs:
         return pd.DataFrame(d)
 
 
-def term_dfs(terms: list[str], termdict: DataFrame) -> dict[str, int]:
-    """Term stats lookup — a pushed-down isin() against the sorted termdict
-    (the FST/BlockTree lookup analog; TermStates.build, index/TermStates.java:95)."""
-    rows = termdict.filter(F.col("term").isin(list(set(terms)))).select("term", "df").collect()
-    return {r["term"]: r["df"] for r in rows}
+def term_dfs(terms: list[str], index: Index) -> dict[str, int]:
+    """Document frequency of each present term — a binary search in the
+    index's term-statistics snapshot (``Index.term_stats``: the reader-resident
+    terms-dictionary analog TermStates.build reads, index/TermStates.java:95),
+    so a query launches no Spark job for its term stats.  Absent terms are
+    omitted."""
+    return {t: df for t, (df, _) in index.term_stats().lookup(terms).items()}
 
 
-def term_cfs(terms: list[str], termdict: DataFrame) -> dict[str, int]:
-    """Per-term COLLECTION frequency (totalTermFreq) — fetched only for
-    similarities that declare NEEDS_CF (LM-Dirichlet); same pushed-down
-    isin() scan shape as term_dfs."""
-    rows = termdict.filter(F.col("term").isin(list(set(terms)))).select("term", "cf").collect()
-    return {r["term"]: r["cf"] for r in rows}
+def term_cfs(terms: list[str], index: Index) -> dict[str, int]:
+    """Per-term COLLECTION frequency (totalTermFreq) from the same snapshot —
+    read by similarities that declare NEEDS_CF (LM-Dirichlet, DFI)."""
+    return {t: cf for t, (_, cf) in index.term_stats().lookup(terms).items()}
 
 
-def _cf_kwargs(sim_cls, terms, termdict):
+def _cf_kwargs(sim_cls, terms, index):
     """{} per term, or {'cf': n} when the similarity needs collection
     frequency — keeps the scorer-construction sites one-line."""
     if not getattr(sim_cls, "NEEDS_CF", False):
         return lambda t: {}
-    cfs = term_cfs(terms, termdict)
+    cfs = term_cfs(terms, index)
     return lambda t: {"cf": cfs.get(t)}
-
-
-def make_scorers(
-    terms: list[str],
-    termdict: DataFrame,
-    stats: CollectionStats,
-    k1: float = 1.2,
-    b: float = 0.75,
-    precision: str = "lucene",
-    boosts: dict[str, float] | None = None,
-) -> dict[str, BM25Scorer]:
-    """Per-term scorers; ``boosts`` maps term → boost (BoostQuery.java:30 —
-    boost folds into weight = boost * idf, BM25Similarity.java:246)."""
-    dfs = term_dfs(terms, termdict)
-    boosts = boosts or {}
-    return {
-        t: BM25Scorer(
-            dfs[t], stats, k1=k1, b=b, boost=boosts.get(t, 1.0), precision=precision
-        )
-        for t in set(terms)
-        if t in dfs
-    }
 
 
 def search(
@@ -2283,11 +2253,11 @@ def search(
         boosts = {**term_boosts, **(boosts or {})}
     terms = sorted(set(query_terms(node)))
     stats = CollectionStats(index.doc_count, index.sum_total_term_freq)
-    dfs = term_dfs(terms, index.termdict)
+    dfs = term_dfs(terms, index)
     boosts = boosts or {}
     sim_cls = SIMILARITIES[similarity]
     stats_for = _stats_resolver(index, stats)
-    cf_kw = _cf_kwargs(sim_cls, terms, index.termdict)
+    cf_kw = _cf_kwargs(sim_cls, terms, index)
     scorers = {
         t: sim_cls(dfs[t], stats_for(t), k1=k1, b=b, boost=boosts.get(t, 1.0),
                    precision=precision, **cf_kw(t))
@@ -2493,9 +2463,9 @@ def score_docs(
     terms = sorted(set(query_terms(node)))
     stats = CollectionStats(index.doc_count, index.sum_total_term_freq)
     stats_for = _stats_resolver(index, stats)
-    dfs = term_dfs(terms, index.termdict)
+    dfs = term_dfs(terms, index)
     sim_cls = SIMILARITIES[similarity]
-    cf_kw = _cf_kwargs(sim_cls, terms, index.termdict)
+    cf_kw = _cf_kwargs(sim_cls, terms, index)
     scorers = {
         t: sim_cls(dfs[t], stats_for(t), k1=k1, b=b,
                    boost=term_boosts.get(t, 1.0), precision=precision,
@@ -2576,7 +2546,7 @@ def count_hits(index: Index, query: str | tuple, analyzer=ENGLISH_STOP_WORDS) ->
     node, _ = apply_boosts(node)  # boosts don't change the match set
     terms = sorted(set(query_terms(node)))
     stats = CollectionStats(index.doc_count, index.sum_total_term_freq)
-    dfs = term_dfs(terms, index.termdict)
+    dfs = term_dfs(terms, index)
     node = attach_scorers(node, dfs, stats, 1.2, 0.75, "float64")
     if node is None:
         return 0
@@ -2679,7 +2649,7 @@ def sorted_topk(
         return (empty, {"segments_probed": 0, "segments_total": 0}) if return_stats else empty
     terms = sorted(set(query_terms(node)))
     stats = CollectionStats(index.doc_count, index.sum_total_term_freq)
-    dfs = term_dfs(terms, index.termdict)
+    dfs = term_dfs(terms, index)
     node = attach_scorers(node, dfs, stats, 1.2, 0.75, "float64",
                           stats_for=_stats_resolver(index, stats))
     present = [t for t in terms if t in dfs]
@@ -2812,7 +2782,7 @@ def search_many(
     if not prepared:
         return {qid: empty for qid in queries}
 
-    dfs = term_dfs(sorted(all_terms), index.termdict)
+    dfs = term_dfs(sorted(all_terms), index)
     sim_cls = SIMILARITIES[similarity]
     exec_nodes: dict[str, tuple] = {}
     needed_terms: set[str] = set()
@@ -2829,7 +2799,7 @@ def search_many(
     if not exec_nodes:
         return {qid: empty for qid in queries}
 
-    cf_kw = _cf_kwargs(sim_cls, sorted(needed_terms), index.termdict)
+    cf_kw = _cf_kwargs(sim_cls, sorted(needed_terms), index)
     scorers = {
         t: sim_cls(dfs[t], stats_for(t), k1=k1, b=b, precision=precision,
                    **cf_kw(t))
@@ -2973,7 +2943,7 @@ def explain(
         return pd.DataFrame(columns=cols)
     terms = sorted(set(query_terms(node)))
     stats = CollectionStats(index.doc_count, index.sum_total_term_freq)
-    dfs = term_dfs(terms, index.termdict)
+    dfs = term_dfs(terms, index)
     boosts = boosts or {}
     seg = docid // index.seg_size
     local = docid - seg * index.seg_size
@@ -3020,7 +2990,7 @@ def more_like_this_terms(
     cands = [t for t, c in tf.items() if c >= min_term_freq]
     if not cands:
         return []
-    dfs = term_dfs(cands, index.termdict)
+    dfs = term_dfs(cands, index)
     n = index.doc_count
     scored = [
         (tf[t] * (math.log((n + 1.0) / (dfs[t] + 1.0)) + 1.0), t)

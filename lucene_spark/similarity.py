@@ -935,9 +935,14 @@ class DFIScorer:
     def _score64(self, f: np.ndarray, dl: np.ndarray) -> np.ndarray:
         expected = ((self.cf + 1.0) * dl
                     / (self.stats.sum_total_term_freq + 1.0))
-        m = self._measure64(f, np.maximum(expected, 1e-300))
-        out = self.boost * np.log2(m + 1.0)
-        return np.where(f <= expected, 0.0, out)
+        f, expected = np.broadcast_arrays(f, np.maximum(expected, 1e-300))
+        # only f > expected scores; the log2 never sees the measure of the
+        # other docs, so a NaN there is a real defect, not an expected warning
+        hit = f > expected
+        out = np.zeros(f.shape)
+        out[hit] = self.boost * np.log2(
+            self._measure64(f[hit], expected[hit]) + 1.0)
+        return out
 
     def score(self, freq: np.ndarray, norm: np.ndarray) -> np.ndarray:
         if self.precision == "lucene":

@@ -27,6 +27,7 @@ distributed top-k deliberately does not replicate).
 
 from __future__ import annotations
 
+import functools
 import math
 
 __all__ = ["SpellChecker", "levenshtein_distance_score",
@@ -50,6 +51,19 @@ def levenshtein_distance_score(target: str, other: str) -> float:
             d[i] = min(d[i - 1] + 1, p[i] + 1, p[i - 1] + cost)
         p = d
     return 1.0 - p[n] / max(n, m)
+
+
+def _suggest_word_cmp(a: tuple, b: tuple) -> int:
+    """SuggestWordScoreComparator / SuggestWordFrequencyComparator on
+    (primary, secondary, word) queue entries: both metrics ascend, then the
+    lexicographically SMALLER word ranks higher
+    (``second.string.compareTo(first.string)``)."""
+    if a[:2] != b[:2]:
+        return -1 if a[:2] < b[:2] else 1
+    return (a[2] < b[2]) - (a[2] > b[2])
+
+
+_SUGGEST_WORD_KEY = functools.cmp_to_key(_suggest_word_cmp)
 
 
 def _gram_min(length: int) -> int:
@@ -175,14 +189,14 @@ class SpellChecker:
                 score_of = lambda e: e[0]  # noqa: E731
             if len(queue) < num_sug:
                 queue.append(entry)
-                queue.sort()
+                queue.sort(key=_SUGGEST_WORD_KEY)
                 if len(queue) == num_sug:
                     accuracy = score_of(queue[0])
-            elif entry >= queue[0]:
+            elif _suggest_word_cmp(entry, queue[0]) >= 0:
                 queue[0] = entry
-                queue.sort()
+                queue.sort(key=_SUGGEST_WORD_KEY)
                 accuracy = score_of(queue[0])
-        return [e[2] for e in sorted(queue, reverse=True)]
+        return [e[2] for e in sorted(queue, key=_SUGGEST_WORD_KEY, reverse=True)]
 
 
 # ------------------------------------------- dictionary adapters
@@ -310,7 +324,7 @@ def suggest_similar_ranked(spark, words_df, word: str, num_sug: int,
     ``num_sug`` result rows ever reach the driver.
 
     Returns a DataFrame (word, freq, score) ranked like SuggestWordQueue
-    under SuggestWordScoreComparator — score desc, freq desc, word desc —
+    under SuggestWordScoreComparator — score desc, freq desc, word asc —
     already limited to ``num_sug``.  The queue's dynamic accuracy raise
     (accuracy := kth score once full) is a pure top-k prune under the score
     comparator, so plain top-``num_sug`` is rank-identical; the frequency
@@ -346,7 +360,7 @@ def suggest_similar_ranked(spark, words_df, word: str, num_sug: int,
     if has_freq and mode != "SUGGEST_ALWAYS":
         scored = scored.filter(F.col("freq") >= max(1, goal_freq))
     return (scored
-            .orderBy(F.desc("score"), F.desc("freq"), F.desc("word"))
+            .orderBy(F.desc("score"), F.desc("freq"), F.asc("word"))
             .limit(num_sug)
             .select("word", "freq", "score"))
 

@@ -118,7 +118,7 @@ def direct_spell_suggest(
     the Damerau UDF runs on the surviving sliver; TakeOrderedAndProject
     returns ``num_sug`` rows.
     """
-    from .search import damerau_levenshtein
+    from .search import damerau_levenshtein, term_dfs
 
     if max_edits < 1 or max_edits > 2:
         raise ValueError("max_edits must be in [1, 2] (LevenshteinAutomata)")
@@ -126,10 +126,7 @@ def direct_spell_suggest(
     if n_cp < min_query_length or n_cp > max_query_length:
         return _empty_suggestions(index)
 
-    qdf_row = (
-        index.termdict.filter(F.col("term") == text).select("df").collect()
-    )
-    query_df = int(qdf_row[0]["df"]) if qdf_row else 0
+    query_df = term_dfs([text], index).get(text, 0)
     if query_df > 0 and not suggest_when_in_index:
         return _empty_suggestions(index)
     max_doc = index.doc_count
@@ -324,21 +321,6 @@ def fuzzy_suggest(
 # --------------------------------------------------- WordBreakSpellChecker
 
 
-def _df_map(index: Index, strings: set[str]) -> dict[str, int]:
-    """One batched vocabulary probe for every candidate substring — the
-    `isin` list pushes to the term-sorted parquet scan, replacing the
-    reference's per-candidate ``ir.docFreq`` calls (WordBreakSpellChecker
-    .java:300-304) with a single pruned lookup."""
-    if not strings:
-        return {}
-    rows = (
-        index.termdict.filter(F.col("term").isin(sorted(strings)))
-        .select("term", "df")
-        .collect()
-    )
-    return {r["term"]: int(r["df"]) for r in rows}
-
-
 def suggest_word_breaks(
     index: Index,
     text: str,
@@ -361,9 +343,13 @@ def suggest_word_breaks(
     unspecified).  Returns (words array, n_words, freq_max).
 
     All vocabulary probes for the whole split lattice are batched into ONE
-    pushdown lookup (:func:`_df_map`); the recursion itself walks a
-    lattice of at most len(text)^max_changes candidates driver-side.
+    lookup in the index's term-statistics snapshot (replacing the
+    reference's per-candidate ``ir.docFreq`` calls, :300-304); the recursion
+    itself walks a lattice of at most len(text)^max_changes candidates
+    driver-side.
     """
+    from .search import term_dfs
+
     spark = index.termdict.sparkSession
     empty = spark.createDataFrame(
         [], "words array<string>, n_words int, freq_max long")
@@ -374,7 +360,7 @@ def suggest_word_breaks(
         for i in range(len(text))
         for j in range(i + 1, len(text) + 1)
     }
-    dfs = _df_map(index, subs)
+    dfs = term_dfs(subs, index)
     if dfs.get(text, 0) > 0 and not suggest_when_in_index:
         return empty
     mbw = max(min_break_word_length, 1)
@@ -432,6 +418,8 @@ def suggest_word_combinations(
     constituent absent from the index.  score = #terms combined - 1; order
     score asc then freq desc (CombinationsThenFreqComparator), ties by
     term.  Returns (term, first_idx, last_idx, df, score)."""
+    from .search import term_dfs
+
     spark = index.termdict.sparkSession
     schema = "term string, first_idx int, last_idx int, df long, score int"
     if max_suggestions < 1 or len(terms) < 2:
@@ -442,7 +430,7 @@ def suggest_word_combinations(
         for j in range(i + 1, min(len(terms), i + max_changes + 1)):
             comb = comb + terms[j]
             probes.add(comb)
-    dfs = _df_map(index, probes)
+    dfs = term_dfs(probes, index)
     rows = []
     for i in range(len(terms) - 1):
         if len(terms[i]) > max_combine_word_length:

@@ -472,9 +472,7 @@ class _Ctx:
             return float(idx.doc_count)
         if kind == "sumtotaltermfreq":
             return float(idx.sum_total_term_freq)
-        row = (idx.termdict.filter(F.col("term") == term)
-               .select("df", "cf").collect())
-        df_, cf_ = (int(row[0]["df"]), int(row[0]["cf"])) if row else (0, 0)
+        df_, cf_ = idx.term_stats().lookup([term]).get(term, (0, 0))
         if kind == "docfreq":
             return float(df_)
         if kind == "totaltermfreq":

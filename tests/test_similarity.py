@@ -365,3 +365,37 @@ def test_multi_is_sum_of_subs():
     dl = np.array([10.0, 50.0, 200.0])
     want = b.score_from_dl(f, dl) + c.score_from_dl(f, dl)
     assert m.score_from_dl(f, dl).tolist() == pytest.approx(want.tolist())
+
+
+@pytest.mark.parametrize("name", ["dfi_standardized", "dfi_saturated",
+                                  "dfi_chisquared"])
+@pytest.mark.parametrize("precision", ["lucene", "float64"])
+def test_dfi_scores_without_runtime_warnings(name, precision):
+    """Docs at or below the expected frequency score 0 without their measure
+    ever reaching log2, so no RuntimeWarning can mask a NaN regression."""
+    import warnings
+
+    from lucene_spark.similarity import SIMILARITIES
+    from lucene_spark.smallfloat import LENGTH_TABLE, int_to_byte4_np
+
+    stats = CollectionStats(100, 5000)
+    sc = SIMILARITIES[name](10, stats, precision=precision, cf=400)
+    f = np.array([1.0, 2.0, 3.0, 40.0, 90.0])
+    dl = np.array([200.0, 10.0, 400.0, 60.0, 300.0])
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        got = np.asarray(sc.score_from_dl(f, dl), dtype=np.float64)
+    if precision == "lucene":
+        dl = LENGTH_TABLE[int_to_byte4_np(dl.astype(np.int64)).astype(np.int64)]
+    e = 401.0 * dl / 5001.0
+    m = {"dfi_standardized": (f - e) / np.sqrt(e),
+         "dfi_saturated": (f - e) / e,
+         "dfi_chisquared": (f - e) ** 2 / e}[name]
+    above = f > e
+    assert above.any() and not above.all()
+    assert np.isfinite(got).all()
+    assert (got[~above] == 0.0).all()
+    want = np.log2(m[above] + 1.0)
+    if precision == "lucene":
+        want = want.astype(np.float32)
+    assert got[above].tolist() == pytest.approx(want.tolist())

@@ -69,3 +69,22 @@ def test_accuracy_threshold(spark, words, sc12):
     want = sc12.suggest_similar("fvie", 3, accuracy=0.93)
     got = suggest_similar_distributed(spark, words, "fvie", 3, accuracy=0.93)
     assert got == want == []
+
+
+def test_exact_tie_at_cut_keeps_smaller_word(spark):
+    """SuggestWordScoreComparator's third criterion is
+    ``second.string.compareTo(first.string)``: on an exact score+freq tie
+    the lexicographically smaller word ranks higher, so it survives the
+    ``num_sug`` cut in both the in-memory queue and the distributed top-k."""
+    dictionary = ["abcg", "abce", "abcf", "wxyz"]
+    sc = SpellChecker()
+    sc.index_dictionary(dictionary)
+    words = spark.createDataFrame([(w, 7) for w in dictionary],
+                                  "word string, freq long")
+    freqs = dict.fromkeys(dictionary, 7)
+    for n, want in [(2, ["abce", "abcf"]), (3, ["abce", "abcf", "abcg"])]:
+        assert sc.suggest_similar("abcd", n) == want
+        assert sc.suggest_similar("abcd", n, freqs, mode="SUGGEST_MORE_POPULAR") == want
+        assert suggest_similar_distributed(spark, words, "abcd", n) == want
+        assert suggest_similar_distributed(
+            spark, words, "abcd", n, mode="SUGGEST_MORE_POPULAR") == want
