@@ -242,6 +242,9 @@ def decode_gif(payload: bytes) -> np.ndarray:
         rgb = pal[np.clip(rows, 0, len(pal) - 1)].astype(np.uint8)
         y0, x0 = fr["top"], fr["left"]
         target = canvas[y0 : y0 + fr["h"], x0 : x0 + fr["w"]]
+        # a frame descriptor may extend past the logical screen: clip it
+        th, tw = target.shape[:2]
+        rows, rgb = rows[:th, :tw], rgb[:th, :tw]
         if fr["transparent"] is not None:
             m = rows != fr["transparent"]
             target[m] = rgb[m]

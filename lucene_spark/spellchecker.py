@@ -344,10 +344,10 @@ def suggest_similar_ranked(spark, words_df, word: str, num_sug: int,
         freq = int(row[0]["freq"]) if row else 0
         if mode == "SUGGEST_MORE_POPULAR":
             goal_freq = freq
-        elif freq > 0:  # word already in index: the reference returns it
-            return (dict_df.filter(F.col("word") == word)
-                    .withColumn("score", F.lit(1.0))
-                    .select("word", "freq", "score"))
+        elif freq > 0:  # word already in index: the reference returns it,
+            # whatever its length (dict_df holds only words of 3+ chars)
+            return spark.createDataFrame([(word, freq, 1.0)],
+                                         "word string, freq long, score double")
 
     pool = spell_candidates_df(spark, dict_df, word, 10 * num_sug)
     scored = (pool.join(dict_df, "word")

@@ -245,7 +245,12 @@ def run_zipf(n_docs: int, alpha: float = 2.0) -> dict:
             # over (term, seg), light terms = the old hash placement —
             # index.merge_partials_stage/balanced_bin_expr); the r3 probe
             # hashed on term alone, a partitioning the build never uses,
-            # which co-located every segment of the head term
+            # which co-located every segment of the head term.  Caveat: both
+            # placements depend on the partition count, so the probe
+            # reproduces the build's bins only when ``parts`` equals the
+            # build's encode-shuffle partition count (merge_partials_stage:
+            # 2 x defaultParallelism unless given); otherwise it measures
+            # the same rule at a different bin count
             times = (
                 idx.postings.withColumn("__bin", bin_col)
                 .repartition(parts, "__bin").drop("__bin")

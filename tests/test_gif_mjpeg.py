@@ -3,6 +3,8 @@ transparency) and MJPEG-AVI container (multimodal.encode_mjpeg_avi /
 decode_mjpeg_avi — RIFF walk + per-frame T.81 JPEG), plus the Spark
 frame_sample kernel over a real compressed video column."""
 
+import struct
+
 import numpy as np
 import pytest
 
@@ -50,6 +52,38 @@ def test_gif_transparency_composites_background():
     np.testing.assert_array_equal(out[~m], img[~m])
     _, _, rgb, mask = next(gif_frames(data))
     assert mask is not None and mask.sum() == m.sum()
+
+
+def _oversize_frame(data: bytes, screen_w: int, screen_h: int,
+                    left: int = 0, top: int = 0) -> bytes:
+    """Shrink the logical screen of a single-frame ``encode_gif`` stream
+    and move its frame, so the frame descriptor runs past the screen."""
+    out = bytearray(data)
+    out[6:10] = struct.pack("<HH", screen_w, screen_h)
+    desc = 13 + 3 * (2 << (out[10] & 7))  # past the global color table
+    if out[desc] == 0x21:  # graphic-control extension
+        desc += 8
+    out[desc + 1 : desc + 5] = struct.pack("<HH", left, top)
+    return bytes(out)
+
+
+@pytest.mark.parametrize("left,top", [(0, 0), (4, 3), (12, 0)])
+def test_gif_frame_clipped_to_screen(left, top):
+    img = _paletted(10, 10, seed=4)
+    out = decode_gif(_oversize_frame(encode_gif(img), 8, 6, left, top))
+    assert out.shape == (6, 8, 3)
+    vis = out[top:, left:]
+    np.testing.assert_array_equal(vis, img[: vis.shape[0], : vis.shape[1]])
+
+
+def test_gif_transparent_frame_clipped_to_screen():
+    img = _paletted(10, 10, seed=1)
+    data = encode_gif(img, transparent_color=(255, 0, 0))
+    out = decode_gif(_oversize_frame(data, 7, 9, 2, 1))
+    assert out.shape == (9, 7, 3)
+    vis, src = out[1:, 2:], img[:8, :5]
+    m = (src == np.array([255, 0, 0])).all(axis=2)
+    np.testing.assert_array_equal(vis[~m], src[~m])
 
 
 def test_gif_too_many_colors_rejected():

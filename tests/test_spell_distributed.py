@@ -10,6 +10,7 @@ import pytest
 from lucene_spark.spellchecker import (
     SpellChecker,
     suggest_similar_distributed,
+    suggest_similar_ranked,
 )
 from tests.test_spellchecker import _corpus, _df, _terms
 
@@ -53,6 +54,21 @@ def test_parity_when_not_in_index(spark, words, sc12):
     got = suggest_similar_distributed(
         spark, words, "eigt", 3, mode="SUGGEST_WHEN_NOT_IN_INDEX")
     assert got == want
+
+
+def test_when_not_in_index_returns_short_in_index_word(spark):
+    """The in-index early return comes before the 3-char dictionary cut:
+    a 1-2 character word present in the index is returned as itself."""
+    dictionary = ["ab", "abc", "abd"]
+    freqs = {"ab": 4, "abc": 2, "abd": 1}
+    sc = SpellChecker()
+    sc.index_dictionary(dictionary)
+    words = spark.createDataFrame(sorted(freqs.items()),
+                                  "word string, freq long")
+    assert sc.suggest_similar("ab", 2, freqs) == ["ab"]
+    ranked = suggest_similar_ranked(
+        spark, words, "ab", 2, mode="SUGGEST_WHEN_NOT_IN_INDEX").collect()
+    assert [tuple(r) for r in ranked] == [("ab", 4, 1.0)]
 
 
 def test_more_popular_filter(spark, words, sc12):
