@@ -490,7 +490,6 @@ def encode_jpeg(img: np.ndarray, quality: int = 90,
     ac_l = _canonical_codes(*K3_AC_LUMA)
     dc_c = _canonical_codes(*K3_DC_CHROMA)
     ac_c = _canonical_codes(*K3_AC_CHROMA)
-    inv_zz = np.argsort(ZIGZAG)
 
     bw = _BitWriter()
     pred = {c[0]: 0 for c in comps_cfg}
@@ -506,7 +505,7 @@ def encode_jpeg(img: np.ndarray, quality: int = 90,
             mcu_count += 1
             for (cid, ch, cv, tq), p in zip(comps_cfg, padded):
                 q = qluma if tq == 0 else qchroma
-                qmat = q[inv_zz].reshape(8, 8)
+                qmat = q.reshape(8, 8)  # K1 tables are in natural order
                 for vy in range(cv):
                     for vx in range(ch):
                         y0 = (my * cv + vy) * 8
@@ -525,9 +524,10 @@ def encode_jpeg(img: np.ndarray, quality: int = 90,
 
     out = bytearray(b"\xff\xd8")
     out += seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(0xDB, bytes([0x00]) + bytes(qluma[i] for i in range(64)))
+    # T.81 B.2.4.1: DQT elements are stored in zigzag order
+    out += seg(0xDB, bytes([0x00]) + bytes(qluma[ZIGZAG].tolist()))
     if not gray:
-        out += seg(0xDB, bytes([0x01]) + bytes(qchroma[i] for i in range(64)))
+        out += seg(0xDB, bytes([0x01]) + bytes(qchroma[ZIGZAG].tolist()))
     sof = bytearray(struct.pack(">BHHB", 8, h, w, len(comps_cfg)))
     for cid, ch, cv, tq in comps_cfg:
         sof += bytes([cid, (ch << 4) | cv, tq])

@@ -14,12 +14,16 @@ IndexSearcher.java:470-511,728-753 — traced in SURVEY §3.1):
      index/TermStates.java:95; here stats are global by construction);
   4. per-segment execution: postings rows for the query terms are grouped by
      segment and scored by the windowed block-max kernel inside applyInPandas
-     — segment == Lucene leaf, executor == searcher thread;
+     — segment == Lucene leaf, executor == searcher thread.  A query with at
+     most ``LOCAL_SCORE_MAX_POSTINGS`` postings runs the same kernel on the
+     driver after one collect of its rows (IndexSearcher runs leaves that
+     fit one slice on the calling thread);
   5. reduce: per-segment top-k merged on the driver with the
      (score desc, docID asc) contract (TopDocs.java:93-120; segments are
      docID ranges so docBase order == docID order).
 
-The driver only ever collects k rows per segment — never postings.
+The driver collects k rows per segment — never postings, except a small
+query's (≤ ``LOCAL_SCORE_MAX_POSTINGS``) on the driver-scored path.
 """
 
 from __future__ import annotations
@@ -2199,6 +2203,66 @@ def _cf_kwargs(sim_cls, terms, index):
     return lambda t: {"cf": cfs.get(t)}
 
 
+# Posting volume — Σ df over the scanned terms of a query, or of a
+# search_many batch's union of terms — at or below which search() and
+# search_many() score on the driver: one Arrow collect of the posting rows,
+# then the same per-segment closures the distributed path runs inside
+# applyInPandas, so docids and scores are bit-identical.  That skips the
+# groupBy("seg") shuffle, the Python-UDF stage and the top-k job: 1 Spark job
+# per search() or batch instead of 2 or 3.  Lucene's IndexSearcher likewise
+# scores on the calling thread when the leaves fit one slice
+# (MAX_DOCS_PER_SLICE = 250_000).  Measured crossover (BENCH.md; 50k docs,
+# local[4]): the driver path is faster up to ~570k postings, slower from
+# ~950k, so this bound keeps a margin for hosts with more cores.
+LOCAL_SCORE_MAX_POSTINGS = 250_000
+
+
+def _fits_driver(dfs: dict[str, int], terms) -> bool:
+    """True when the postings of ``terms`` are few enough to score on the
+    driver — read from the term-stats snapshot, so choosing costs no job."""
+    return sum(dfs[t] for t in terms) <= LOCAL_SCORE_MAX_POSTINGS
+
+
+def _pulsed_rows(index: Index, terms: list[str]) -> tuple[list[dict], list[str]]:
+    """Singleton pulsing (pulsing.py): df==1 terms are served from the
+    vocabulary-sized sidecar (pushdown isin scan, tiny rows to the driver) and
+    synthesized into standard posting rows.  → (synthesized rows, the terms
+    left for the big postings scan — none when every term is a singleton)."""
+    if getattr(index, "pulsed", None) is None or not terms:
+        return [], terms
+    from .pulsing import synthesize_posting_rows
+
+    pl = index.pulsed.filter(F.col("term").isin(terms)).collect()
+    got = {r["term"] for r in pl}
+    return (synthesize_posting_rows([r.asDict() for r in pl]),
+            [t for t in terms if t not in got])
+
+
+def _posting_rows_df(index: Index, terms: list[str], synth: list[dict]) -> DataFrame:
+    """Distributed path: the scanned postings of ``terms`` plus the
+    synthesized pulsed rows, as one DataFrame."""
+    from .index import POSTINGS_SCHEMA
+
+    rows = index.postings.filter(F.col("term").isin(terms)) if terms else None
+    if synth or rows is None:
+        extra = index.postings.sparkSession.createDataFrame(synth, POSTINGS_SCHEMA)
+        rows = extra if rows is None else rows.unionByName(extra)
+    return rows
+
+
+def _segments_on_driver(table, synth: list[dict], run) -> pd.DataFrame:
+    """Driver path: the collected posting rows (an Arrow table, or None when
+    every term was pulsed) plus the synthesized pulsed rows, grouped by
+    segment and handed to ``run`` — the closure applyInPandas calls once per
+    segment group on the distributed path.  → the concatenated results."""
+    parts = [] if table is None else [table.to_pandas()]
+    if synth:
+        parts.append(pd.DataFrame(synth))
+    pdf = pd.concat(parts, ignore_index=True)
+    return pd.concat([run(g) for _, g in pdf.groupby("seg", sort=False)]
+                     or [run(pdf.iloc[:0])], ignore_index=True)
+
+
 def search(
     index: Index,
     query: str | tuple,
@@ -2228,6 +2292,11 @@ def search(
     picks columnar execution for such predicates — here the predicate runs as
     a plain Catalyst filter producing the docid set, then cogroups with the
     postings by segment so each kernel masks before ranking).
+
+    Small queries — at most ``LOCAL_SCORE_MAX_POSTINGS`` postings (Σ df of
+    the scanned terms, read from ``Index.term_stats``), no ``filter_docs``,
+    no tombstones — are scored on the driver after one collect of their
+    posting rows: 1 Spark job instead of 2, bit-identical results.
 
     ``after``: searchAfter cursor ``(score, docid)`` of the LAST hit of the
     previous page (IndexSearcher.searchAfter, search/IndexSearcher.java:
@@ -2273,41 +2342,15 @@ def search(
         return empty
 
     scan_terms = [t for t in terms if t in scorers]
-    pulsed_synth: list[dict] | None = None
-    if getattr(index, "pulsed", None) is not None and scan_terms:
-        # singleton pulsing (pulsing.py): df==1 terms are served from the
-        # vocabulary-sized sidecar (pushdown isin scan, k tiny rows to the
-        # driver) and synthesized into standard posting rows; the BIG
-        # postings table is scanned only for the remaining terms — or not
-        # at all when every query term is a singleton
-        from .pulsing import synthesize_posting_rows
-
-        pl = index.pulsed.filter(F.col("term").isin(scan_terms)).collect()
-        if pl:
-            pulsed_synth = synthesize_posting_rows([r.asDict() for r in pl])
-            got = {r["term"] for r in pl}
-            scan_terms = [t for t in scan_terms if t not in got]
-    spark_sess = index.postings.sparkSession
-    if scan_terms:
-        rows = index.postings.filter(F.col("term").isin(scan_terms))
-        if pulsed_synth:
-            from .index import POSTINGS_SCHEMA
-
-            rows = rows.unionByName(
-                spark_sess.createDataFrame(pulsed_synth, POSTINGS_SCHEMA)
-            )
-    elif pulsed_synth:
-        from .index import POSTINGS_SCHEMA
-
-        rows = spark_sess.createDataFrame(pulsed_synth, POSTINGS_SCHEMA)
-    else:
-        from .index import POSTINGS_SCHEMA
-
-        rows = spark_sess.createDataFrame([], POSTINGS_SCHEMA)
+    local = (filter_docs is None and index.tombstones is None
+             and _fits_driver(dfs, scan_terms))
+    pulsed_synth, scan_terms = _pulsed_rows(index, scan_terms)
 
     # per-segment execution: posting rows are self-contained (inline dls), so
     # the only shuffle is the query's own rows grouped by seg — segment ==
     # Lucene leaf, executor == searcher slice; the driver collects k rows/seg.
+    # A query of at most LOCAL_SCORE_MAX_POSTINGS postings (Σ df) skips the
+    # shuffle: one collect of its rows, the same closure run on the driver.
     seg_size = index.seg_size
     if not getattr(sim_cls, "ALLOW_PRUNE", True):
         prune = False  # negative-score similarities void the zero lower bound
@@ -2322,16 +2365,18 @@ def search(
             return None
         return (after_b[0], after_b[1] - seg * seg_size)
 
-    def _run(post_pdf: pd.DataFrame, allow: np.ndarray | None) -> pd.DataFrame:
+    def _run(post_pdf: pd.DataFrame, allow: np.ndarray | None,
+             deny: np.ndarray | None = None) -> pd.DataFrame:
         if len(post_pdf) == 0:
             return pd.DataFrame({"seg": pd.Series(dtype="int64"),
                                  "docid": pd.Series(dtype="int64"),
                                  "score": pd.Series(dtype="float64")})
         seg = int(post_pdf["seg"].iloc[0])
-        term_rows = {r["term"]: r for _, r in post_pdf.iterrows()}
+        term_rows = {r["term"]: r for r in post_pdf.to_dict("records")}
         d, s = segment_topk(
             node_b, term_rows, scorers, seg_size, kparam,
-            precision=prec, prune=pr, allow=allow, after=_seg_after(seg),
+            precision=prec, prune=pr, allow=allow, deny=deny,
+            after=_seg_after(seg),
         )
         return pd.DataFrame({"seg": seg, "docid": d + seg * seg_size, "score": s})
 
@@ -2341,6 +2386,14 @@ def search(
     def run_segment(post_pdf: pd.DataFrame) -> pd.DataFrame:
         return _run(post_pdf, None)
 
+    if local:
+        table = (index.postings.filter(F.col("term").isin(scan_terms)).toArrow()
+                 if scan_terms else None)
+        hits = _segments_on_driver(table, pulsed_synth, run_segment)
+        return _top_docs(index, hits["docid"].to_numpy(dtype=np.int64),
+                         hits["score"].to_numpy(dtype=np.float64), k, with_urls)
+
+    rows = _posting_rows_df(index, scan_terms, pulsed_synth)
     # deletes applied at read (LiveDocsFormat analog): fold tombstones into
     # the allow set when a FILTER is present, else run the deny-mask path
     deny_docs = None
@@ -2359,20 +2412,8 @@ def search(
 
         def run_denied(key, post_pdf: pd.DataFrame, deny_pdf: pd.DataFrame) -> pd.DataFrame:
             seg = int(key[0])
-            if len(post_pdf) == 0:
-                return pd.DataFrame({"seg": pd.Series(dtype="int64"),
-                                     "docid": pd.Series(dtype="int64"),
-                                     "score": pd.Series(dtype="float64")})
             deny = np.sort(deny_pdf["docid"].to_numpy(dtype=np.int64) - seg * seg_size)
-
-            def _run_deny(pdf):
-                term_rows = {r["term"]: r for _, r in pdf.iterrows()}
-                d, s = segment_topk(node_b, term_rows, scorers, seg_size, kparam,
-                                    precision=prec, prune=pr, deny=deny,
-                                    after=_seg_after(seg))
-                return pd.DataFrame({"seg": seg, "docid": d + seg * seg_size, "score": s})
-
-            return _run_deny(post_pdf)
+            return _run(post_pdf, None, deny)
 
         per_seg = (
             rows.groupBy("seg")
@@ -2404,27 +2445,34 @@ def search(
         per_seg = rows.groupBy("seg").applyInPandas(run_segment, schema=out_schema)
     # hierarchical reduce: the per-segment top-k rows are cut to a global
     # top-k IN SPARK (TakeOrderedAndProject — per-partition heaps + a k-row
-    # merge) before anything reaches the driver.  At 10^12 docs / 10^6-doc
-    # segments a flat collect would ship k x 10^6 rows; this ships k.
+    # merge) before anything reaches the driver, which so receives k rows,
+    # not k per segment.  Only queries over LOCAL_SCORE_MAX_POSTINGS
+    # postings, or with filter_docs or tombstones, come this way.
     # (TopDocs.merge contract: score desc, docID asc — TopDocs.java:93-120.)
     out = (
         per_seg.orderBy(F.col("score").desc(), F.col("docid").asc())
         .limit(k)
         .collect()
     )
-    if not out:
-        return empty
-    docids = np.array([r["docid"] for r in out], dtype=np.int64)
-    scores = np.array([r["score"] for r in out], dtype=np.float64)
+    return _top_docs(index, np.array([r["docid"] for r in out], dtype=np.int64),
+                     np.array([r["score"] for r in out], dtype=np.float64), k, with_urls)
+
+
+def _top_docs(index: Index, docids: np.ndarray, scores: np.ndarray, k: int,
+              with_urls: bool) -> TopDocs:
+    """Per-segment hits → the global top k (TopDocs.merge: score desc, docID
+    asc — TopDocs.java:93-120), with urls when asked."""
     order = np.lexsort((docids, -scores))[:k]
     docids, scores = docids[order], scores[order]
     urls = None
     if with_urls:
-        url_rows = index.docs.filter(F.col("docid").isin(docids.tolist())).select(
-            "docid", "url"
-        ).collect()
-        umap = {r["docid"]: r["url"] for r in url_rows}
-        urls = [umap.get(int(d)) for d in docids]
+        urls = []
+        if len(docids):
+            url_rows = index.docs.filter(F.col("docid").isin(docids.tolist())).select(
+                "docid", "url"
+            ).collect()
+            umap = {r["docid"]: r["url"] for r in url_rows}
+            urls = [umap.get(int(d)) for d in docids]
     return TopDocs(docids, scores, urls)
 
 
@@ -2742,7 +2790,7 @@ def search_many(
     analyzer=ENGLISH_STOP_WORDS,
     afters: dict[str, tuple[float, int]] | None = None,
 ) -> dict[str, TopDocs]:
-    """Run MANY queries in ONE Spark job — the throughput path.
+    """Run MANY queries in one postings pass — the throughput path.
     ``ks`` optionally overrides ``k`` per query id.  ``afters`` optionally
     gives a per-query searchAfter cursor ``(score, docid)`` (same contract
     as ``search(after=...)``) — a paged query log batches pages 2+ at the
@@ -2752,8 +2800,12 @@ def search_many(
     ReadTask loop); Spark's analog is batching: a single postings scan +
     shuffle for the union of all query terms, with every segment kernel
     evaluating every query against its local rows.  Per-query driver work is
-    microseconds; the fixed job-scheduling cost (~0.5 s in local mode) is
-    paid once for the whole batch instead of per query.
+    microseconds; the fixed Spark cost (3 jobs: the shuffle-map stage, the
+    Python-UDF scoring stage and the per-query top-k window) is paid once for
+    the whole batch instead of per query.  A batch whose union of terms holds
+    at most ``LOCAL_SCORE_MAX_POSTINGS`` postings, on an index without
+    tombstones, is scored on the driver after one collect of its posting
+    rows: 1 job per batch, same results.
     """
     stats = CollectionStats(index.doc_count, index.sum_total_term_freq)
     stats_for = _stats_resolver(index, stats)
@@ -2805,32 +2857,8 @@ def search_many(
                    **cf_kw(t))
         for t in needed_terms
     }
-    # singleton pulsing, mirrored from search() so the batched path has the
-    # same sidecar fast path (df==1 terms never touch the big postings scan)
-    scan_terms = sorted(needed_terms)
-    pulsed_synth: list[dict] | None = None
-    if getattr(index, "pulsed", None) is not None and scan_terms:
-        from .pulsing import synthesize_posting_rows
-
-        pl = index.pulsed.filter(F.col("term").isin(scan_terms)).collect()
-        if pl:
-            pulsed_synth = synthesize_posting_rows([r.asDict() for r in pl])
-            got = {r["term"] for r in pl}
-            scan_terms = [t for t in scan_terms if t not in got]
-    if scan_terms:
-        rows = index.postings.filter(F.col("term").isin(scan_terms))
-        if pulsed_synth:
-            from .index import POSTINGS_SCHEMA
-
-            rows = rows.unionByName(
-                index.postings.sparkSession.createDataFrame(pulsed_synth, POSTINGS_SCHEMA)
-            )
-    else:
-        from .index import POSTINGS_SCHEMA
-
-        rows = index.postings.sparkSession.createDataFrame(
-            pulsed_synth or [], POSTINGS_SCHEMA
-        )
+    local = index.tombstones is None and _fits_driver(dfs, needed_terms)
+    pulsed_synth, scan_terms = _pulsed_rows(index, sorted(needed_terms))
     seg_size = index.seg_size
     ks = {qid: (ks or {}).get(qid, k) for qid in exec_nodes}
     if not getattr(sim_cls, "ALLOW_PRUNE", True):
@@ -2851,7 +2879,7 @@ def search_many(
         seg = int(post_pdf["seg"].iloc[0])
         # shared decoded postings across the whole query batch
         term_rows = {
-            r["term"]: TermPostings(r, seg_size) for _, r in post_pdf.iterrows()
+            r["term"]: TermPostings(r, seg_size) for r in post_pdf.to_dict("records")
         }
         out_q, out_d, out_s = [], [], []
         for qid, node in nodes_b.items():
@@ -2874,6 +2902,16 @@ def search_many(
     def run_segment(post_pdf: pd.DataFrame) -> pd.DataFrame:
         return _run_many(post_pdf, None)
 
+    if local:
+        # small batch: one collect of the postings, every segment scored on
+        # the driver by the same closure (see LOCAL_SCORE_MAX_POSTINGS)
+        table = (index.postings.filter(F.col("term").isin(scan_terms)).toArrow()
+                 if scan_terms else None)
+        hits = _segments_on_driver(table, pulsed_synth, run_segment)
+        return _top_docs_many(queries, zip(hits["qid"], hits["docid"], hits["score"]),
+                              ks, k)
+
+    rows = _posting_rows_df(index, scan_terms, pulsed_synth)
     if index.tombstones is not None:
         # same read-time LiveDocs deny mask as search() — batched queries must
         # not resurrect deleted docs (Lucene: every scorer sees liveDocs)
@@ -2905,9 +2943,18 @@ def search_many(
         .filter(F.col("rn") <= F.lit(kmax))
         .collect()
     )
+    return _top_docs_many(
+        queries, ((r["qid"], r["docid"], r["score"]) for r in collected), ks, k)
+
+
+def _top_docs_many(queries, hits, ks: dict[str, int], k: int) -> dict[str, TopDocs]:
+    """(qid, docid, score) hits → per-query top ``ks[qid]`` (default ``k``)
+    in (score desc, docid asc) order; queries without hits get empty
+    TopDocs."""
     by_q: dict[str, list] = {}
-    for r in collected:
-        by_q.setdefault(r["qid"], []).append((r["docid"], r["score"]))
+    for qid, docid, score in hits:
+        by_q.setdefault(qid, []).append((docid, score))
+    empty = TopDocs(np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
     out: dict[str, TopDocs] = {}
     for qid in queries:
         pairs = by_q.get(qid)

@@ -8,7 +8,9 @@ import struct
 import numpy as np
 import pytest
 
-from lucene_spark.jpeg import ZIGZAG, decode_jpeg, encode_jpeg
+from lucene_spark.jpeg import (
+    K1_CHROMA, K1_LUMA, ZIGZAG, _quality_tables, decode_jpeg, encode_jpeg,
+)
 
 
 def _gradient(h, w):
@@ -113,3 +115,32 @@ def test_decoder_reads_own_dims_from_sof():
     i = data.find(b"\xff\xc0")
     h, w = struct.unpack_from(">HH", data, i + 5)
     assert (h, w) == (19, 11)
+
+
+def _dqt_tables(data: bytes) -> dict[int, list[int]]:
+    """Table id → the 64 8-bit DQT elements, as stored (zigzag order)."""
+    out, i = {}, 2
+    while i < len(data) and data[i + 1] != 0xDA:
+        marker = data[i + 1]
+        (ln,) = struct.unpack_from(">H", data, i + 2)
+        if marker == 0xDB:
+            body = data[i + 4 : i + 2 + ln]
+            out[body[0] & 0x0F] = list(body[1:65])
+        i += 2 + ln
+    return out
+
+
+@pytest.mark.parametrize("quality", [50, 75, 92])
+def test_dqt_is_scaled_annex_k_in_zigzag_order(quality):
+    img = _gradient(24, 24)
+    data = encode_jpeg(img, quality=quality)
+    qluma, qchroma = _quality_tables(quality)
+    tables = _dqt_tables(data)
+    assert tables[0] == qluma[ZIGZAG].tolist()
+    assert tables[1] == qchroma[ZIGZAG].tolist()
+    # K1 is natural (row-major) order: the zigzag stream's 3rd element is
+    # row 1, column 0 — 12 in Annex K's luminance table, not K1_LUMA[2] = 10
+    if quality == 50:
+        assert tables[0][:3] == [16, 11, 12] and K1_LUMA[8] == 12
+        assert tables[1][:3] == [17, 18, 18] and K1_CHROMA[8] == 18
+    assert _err(decode_jpeg(data), img).max() <= 12

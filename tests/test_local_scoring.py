@@ -1,0 +1,218 @@
+"""Driver-side scoring of small queries (``LOCAL_SCORE_MAX_POSTINGS``).
+
+A query whose scanned terms hold at most that many postings is scored on the
+driver after one collect of its posting rows, by the same per-segment closure
+the distributed ``groupBy("seg").applyInPandas`` path runs.  Both paths must
+return identical docids and bit-identical float64 scores; the distributed
+path is forced by setting the bound to 0.  Queries with ``filter_docs`` and
+indexes with tombstones always take the distributed path."""
+
+import importlib
+import itertools
+
+import numpy as np
+import pytest
+
+from lucene_spark.corpus import generate_pages
+from lucene_spark.index import build_index
+from lucene_spark.pulsing import pulse_index
+from lucene_spark.search import search, search_many
+
+S = importlib.import_module("lucene_spark.search")  # the package exports search()
+_GROUPS = itertools.count()
+
+
+def _counted(spark, fn):
+    """(fn(), number of Spark jobs it launched)."""
+    sc = spark.sparkContext
+    group = f"local_scoring_{next(_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _both_paths(spark, monkeypatch, fn):
+    """→ ((local result, jobs), (distributed result, jobs))."""
+    local = _counted(spark, fn)
+    with monkeypatch.context() as m:
+        m.setattr(S, "LOCAL_SCORE_MAX_POSTINGS", 0)
+        dist = _counted(spark, fn)
+    return local, dist
+
+
+def _assert_same(a, b):
+    assert a.docids.dtype == b.docids.dtype == np.int64
+    assert a.scores.dtype == b.scores.dtype == np.float64
+    assert a.docids.tolist() == b.docids.tolist()
+    assert a.scores.tobytes() == b.scores.tobytes()
+
+
+def _pages(spark, n, seed):
+    pdf = generate_pages(n, seed=seed)[["url", "text"]]
+    pdf["url"] = [f"https://ls{seed}.example/{i}" for i in range(n)]
+    return spark.createDataFrame(pdf)
+
+
+@pytest.fixture(scope="module")
+def idx(spark):
+    index = build_index(spark, _pages(spark, 600, seed=3), seg_size=100)
+    index.postings = index.postings.persist()
+    index.termdict = index.termdict.persist()
+    index.postings.count()
+    search(index, "court", k=5)  # warm: loads the term-stats snapshot
+    return index
+
+
+@pytest.fixture(scope="module")
+def pulsed(idx):
+    p = pulse_index(idx)
+    p.pulsed = p.pulsed.persist()
+    p.pulsed.count()
+    p.term_stats()
+    return p
+
+
+@pytest.fixture(scope="module")
+def by_df(idx):
+    """Indexed terms, most frequent first (ties in term order)."""
+    ts = idx.term_stats()
+    return ts.terms[np.argsort(-ts.df, kind="stable")].tolist()
+
+
+@pytest.fixture(scope="module")
+def singles(idx):
+    """df == 1 terms of the generated vocabulary (``w00410``, ...)."""
+    ts = idx.term_stats()
+    return [t for t in ts.terms[ts.df == 1].tolist() if t.startswith("w")]
+
+
+def _queries(t):
+    return {
+        "single": t[0],
+        "or": f"{t[0]} OR {t[5]} OR {t[40]}",
+        "and": f"{t[0]} AND {t[1]}",
+        "not": f"{t[0]} NOT {t[1]}",
+        "and_or": f"({t[0]} AND {t[2]}) OR ({t[3]} AND {t[4]})",
+    }
+
+
+KINDS = ["single", "or", "and", "not", "and_or"]
+
+
+@pytest.mark.parametrize("similarity", ["bm25", "classic", "lmd"])
+@pytest.mark.parametrize("k", [10, 100])
+@pytest.mark.parametrize("kind", KINDS)
+def test_search_parity(spark, monkeypatch, idx, by_df, kind, k, similarity):
+    q = _queries(by_df)[kind]
+    (local, lj), (dist, dj) = _both_paths(
+        spark, monkeypatch, lambda: search(idx, q, k=k, similarity=similarity))
+    assert len(local.docids) > 0
+    _assert_same(local, dist)
+    assert (lj, dj) == (1, 2)
+
+
+@pytest.mark.parametrize("similarity", ["bm25", "classic", "lmd"])
+@pytest.mark.parametrize("k", [10, 100])
+def test_search_many_parity(spark, monkeypatch, idx, by_df, k, similarity):
+    batch = _queries(by_df)
+    (local, lj), (dist, dj) = _both_paths(
+        spark, monkeypatch,
+        lambda: search_many(idx, batch, k=k, similarity=similarity))
+    assert set(local) == set(dist) == set(batch)
+    for qid in batch:
+        assert len(local[qid].docids) > 0
+        _assert_same(local[qid], dist[qid])
+    assert (lj, dj) == (1, 3)
+
+
+def test_search_after_cursor_parity(spark, monkeypatch, idx, by_df):
+    q = _queries(by_df)["or"]
+    page1 = search(idx, q, k=10)
+    after = (float(page1.scores[-1]), int(page1.docids[-1]))
+    (local, _), (dist, _) = _both_paths(
+        spark, monkeypatch, lambda: search(idx, q, k=10, after=after))
+    assert len(local.docids) == 10
+    assert not set(local.docids.tolist()) & set(page1.docids.tolist())
+    _assert_same(local, dist)
+
+
+def test_search_many_after_cursor_parity(spark, monkeypatch, idx, by_df):
+    batch = _queries(by_df)
+    first = search_many(idx, batch, k=10)
+    afters = {qid: (float(td.scores[-1]), int(td.docids[-1]))
+              for qid, td in first.items() if len(td.docids) == 10}
+    assert afters
+    (local, _), (dist, _) = _both_paths(
+        spark, monkeypatch,
+        lambda: search_many(idx, batch, k=10, ks={"single": 7}, afters=afters))
+    for qid in batch:
+        _assert_same(local[qid], dist[qid])
+    assert len(local["single"].docids) == 7
+
+
+def test_pulsed_index_parity(spark, monkeypatch, pulsed, by_df, singles):
+    q = f"{by_df[0]} OR {singles[0]} OR {singles[1]} OR {by_df[7]}"
+    (local, lj), (dist, dj) = _both_paths(
+        spark, monkeypatch, lambda: search(pulsed, q, k=100))
+    assert len(local.docids) > 0
+    _assert_same(local, dist)
+    # the sidecar lookup is one job on both paths
+    assert (lj, dj) == (2, 3)
+    (many, _), (many_d, _) = _both_paths(
+        spark, monkeypatch,
+        lambda: search_many(pulsed, {"mixed": q, "frequent": by_df[2]}, k=50))
+    for qid in ("mixed", "frequent"):
+        _assert_same(many[qid], many_d[qid])
+
+
+def test_all_pulsed_query_parity(spark, monkeypatch, pulsed, singles):
+    q = " OR ".join(singles[:5])
+    (local, lj), (dist, dj) = _both_paths(
+        spark, monkeypatch, lambda: search(pulsed, q, k=10))
+    assert len(local.docids) == 5
+    _assert_same(local, dist)
+    # no postings scan at all: the sidecar collect is the only job
+    assert lj == 1 and dj == 3
+    (many, mj), (many_d, _) = _both_paths(
+        spark, monkeypatch, lambda: search_many(pulsed, {"s": q}, k=10))
+    _assert_same(many["s"], many_d["s"])
+    assert mj == 1
+
+
+def test_bound_is_inclusive_sum_of_df(spark, monkeypatch, idx, by_df):
+    q = _queries(by_df)["or"]
+    total = sum(S.term_dfs([by_df[0], by_df[5], by_df[40]], idx).values())
+    monkeypatch.setattr(S, "LOCAL_SCORE_MAX_POSTINGS", total)
+    assert _counted(spark, lambda: search(idx, q, k=10))[1] == 1
+    monkeypatch.setattr(S, "LOCAL_SCORE_MAX_POSTINGS", total - 1)
+    assert _counted(spark, lambda: search(idx, q, k=10))[1] == 2
+
+
+def _forbid_driver_scoring(monkeypatch):
+    def fail(*a, **kw):
+        raise AssertionError("took the driver-scored path")
+
+    monkeypatch.setattr(S, "_segments_on_driver", fail)
+
+
+def test_tombstoned_index_takes_distributed_path(spark, monkeypatch, idx, by_df):
+    q = _queries(by_df)["or"]
+    top = search(idx, q, k=10).docids[:3].tolist()
+    _forbid_driver_scoring(monkeypatch)
+    deleted = idx.delete_docs(spark.createDataFrame([(d,) for d in top], "docid long"))
+    td = search(deleted, q, k=10)
+    assert len(td.docids) == 10 and not set(td.docids.tolist()) & set(top)
+    many = search_many(deleted, {"q": q}, k=10)
+    assert many["q"].docids.tolist() == td.docids.tolist()
+
+
+def test_filter_docs_takes_distributed_path(spark, monkeypatch, idx, by_df):
+    q = _queries(by_df)["or"]
+    _forbid_driver_scoring(monkeypatch)
+    allow = spark.range(0, 300).withColumnRenamed("id", "docid")
+    td = search(idx, q, k=10, filter_docs=allow)
+    assert len(td.docids) > 0 and (td.docids < 300).all()

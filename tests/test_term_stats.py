@@ -1,8 +1,11 @@
 """Index-resident term statistics (``Index.term_stats``): every query entry
 point reads df/cf from a once-loaded snapshot of the termdict, so a query
 launches no Spark job for its term stats — and the snapshot agrees with the
-termdict on every kind of handle."""
+termdict on every kind of handle.  Job counts are pinned on both scoring
+paths: distributed (2 per search(), 3 per search_many batch) and, for
+queries within ``LOCAL_SCORE_MAX_POSTINGS``, driver-scored (1 each)."""
 
+import importlib
 import itertools
 
 import pytest
@@ -16,6 +19,7 @@ from lucene_spark.index import (
 from lucene_spark.search import search, search_many, term_cfs, term_dfs
 from lucene_spark.streaming import refresh_reader, update_batch
 
+S = importlib.import_module("lucene_spark.search")  # the package exports search()
 ABSENT = "zzzabsentterm"
 _GROUPS = itertools.count()
 
@@ -54,14 +58,31 @@ BATCH = {"a": "court", "b": "planes AND court", "c": "w00152 OR w01420",
          "d": "court NOT planes", "e": ABSENT}
 
 
+@pytest.fixture
+def distributed(monkeypatch):
+    """Force the distributed scoring path (the fixture's queries are small
+    enough to be scored on the driver)."""
+    monkeypatch.setattr(S, "LOCAL_SCORE_MAX_POSTINGS", 0)
+
+
 @pytest.mark.parametrize("similarity", ["bm25", "lmd", "dfi_standardized"])
-def test_search_launches_two_jobs(spark, idx, similarity):
+def test_search_launches_two_jobs(spark, idx, similarity, distributed):
     assert _jobs(spark, lambda: search(idx, QUERY, k=5, similarity=similarity)) == 2
 
 
 @pytest.mark.parametrize("similarity", ["bm25", "lmd", "dfi_standardized"])
-def test_search_many_launches_three_jobs(spark, idx, similarity):
+def test_search_many_launches_three_jobs(spark, idx, similarity, distributed):
     assert _jobs(spark, lambda: search_many(idx, BATCH, k=5, similarity=similarity)) == 3
+
+
+@pytest.mark.parametrize("similarity", ["bm25", "lmd", "dfi_standardized"])
+def test_small_search_launches_one_job(spark, idx, similarity):
+    assert _jobs(spark, lambda: search(idx, QUERY, k=5, similarity=similarity)) == 1
+
+
+@pytest.mark.parametrize("similarity", ["bm25", "lmd", "dfi_standardized"])
+def test_small_search_many_launches_one_job(spark, idx, similarity):
+    assert _jobs(spark, lambda: search_many(idx, BATCH, k=5, similarity=similarity)) == 1
 
 
 def test_fixture_has_five_or_more_segments(idx):
