@@ -2445,9 +2445,9 @@ def search(
         per_seg = rows.groupBy("seg").applyInPandas(run_segment, schema=out_schema)
     # hierarchical reduce: the per-segment top-k rows are cut to a global
     # top-k IN SPARK (TakeOrderedAndProject — per-partition heaps + a k-row
-    # merge) before anything reaches the driver, which so receives k rows,
-    # not k per segment.  Only queries over LOCAL_SCORE_MAX_POSTINGS
-    # postings, or with filter_docs or tombstones, come this way.
+    # merge) before anything reaches the driver: it receives k rows, not k
+    # per segment.  Only queries over LOCAL_SCORE_MAX_POSTINGS postings, or
+    # with filter_docs or tombstones, come this way.
     # (TopDocs.merge contract: score desc, docID asc — TopDocs.java:93-120.)
     out = (
         per_seg.orderBy(F.col("score").desc(), F.col("docid").asc())
