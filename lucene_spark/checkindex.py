@@ -34,7 +34,7 @@ def _audit_rows(seg_size: int):
             rows = 0
             postings = 0
             bad_df = bad_order = bad_range = bad_cf = bad_blocks = bad_pos = 0
-            for _, r in pdf.iterrows():
+            for r in pdf.to_dict("records"):
                 rows += 1
                 tp = TermPostings(r, seg_size)
                 d, f, dl = tp.decode()

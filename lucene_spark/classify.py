@@ -13,14 +13,12 @@ from __future__ import annotations
 
 import math
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .analysis import ENGLISH_STOP_WORDS, analyze
 from .index import Index
-from .search import search
+from .search import _explode_postings, search
 
 
 def classify_knn(
@@ -61,28 +59,10 @@ def _term_docids(index: Index, terms: list[str]) -> DataFrame:
     spark = index.postings.sparkSession
     if not terms:
         return spark.createDataFrame([], "term string, docid long")
-    seg_size = index.seg_size
     rows = index.postings.filter(F.col("term").isin(sorted(set(terms))))
-
-    def explode(batches):
-        from .kernel import TermPostings
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            segs = pdf["seg"].to_numpy(dtype=np.int64)
-            out_t, out_d = [], []
-            for i, (_, row) in enumerate(pdf.iterrows()):
-                docids = TermPostings(row, seg_size).decode()[0]
-                out_d.append(docids + segs[i] * seg_size)
-                out_t.append(np.repeat(np.array([row["term"]], dtype=object), len(docids)))
-            yield pd.DataFrame(
-                {"term": np.concatenate(out_t), "docid": np.concatenate(out_d)}
-            )
-
     # NOTE: the singleton-pulsing sidecar is additive (pulse_index keeps the
     # underlying posting rows), so scanning index.postings alone is complete.
-    return rows.mapInPandas(explode, schema="term string, docid long")
+    return _explode_postings(rows, index.seg_size, "term string, docid long")
 
 
 def classify_naive_bayes(
@@ -277,30 +257,8 @@ def _term_tfs(index: Index, terms: list[str]) -> DataFrame:
     spark = index.postings.sparkSession
     if not terms:
         return spark.createDataFrame([], "term string, docid long, tf long")
-    seg_size = index.seg_size
     rows = index.postings.filter(F.col("term").isin(sorted(set(terms))))
-
-    def explode(batches):
-        from .kernel import TermPostings
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            segs = pdf["seg"].to_numpy(dtype=np.int64)
-            out_t, out_d, out_f = [], [], []
-            for i, (_, row) in enumerate(pdf.iterrows()):
-                docids, tfs, _ = TermPostings(row, seg_size).decode()
-                out_d.append(docids.astype(np.int64) + segs[i] * seg_size)
-                out_f.append(tfs.astype(np.int64))
-                out_t.append(np.repeat(np.array([row["term"]], dtype=object),
-                                       len(docids)))
-            yield pd.DataFrame({
-                "term": np.concatenate(out_t),
-                "docid": np.concatenate(out_d),
-                "tf": np.concatenate(out_f),
-            })
-
-    return rows.mapInPandas(explode, schema="term string, docid long, tf long")
+    return _explode_postings(rows, index.seg_size, "term string, docid long, tf long")
 
 
 def classify_knn_fuzzy(

@@ -770,6 +770,13 @@ def score_query_node(node, postings_by_term, scorers_by_term, precision, pos_by_
     raise ValueError(f"bad node {node!r}")
 
 
+def _clause(kind: str, c):
+    """A boolean node's member as a node: "and", "not", "reqopt" and "msm"
+    nodes list bare terms where their "andn", "notn", "reqoptn" and "or"
+    twins list sub-clauses."""
+    return ("term", c) if kind in ("and", "not", "reqopt", "msm") else c
+
+
 def match_docids(node, postings_by_term, pos_by_term=None) -> np.ndarray:
     """Matching docID set of a boolean tree — NO scoring (the
     TotalHitCountCollector fast path, search/TotalHitCountCollector.java:28:
@@ -781,24 +788,8 @@ def match_docids(node, postings_by_term, pos_by_term=None) -> np.ndarray:
         if t not in postings_by_term:
             return np.empty(0, dtype=np.int64)
         return postings_by_term[t][0]
-    if kind == "and":
-        if any(t not in postings_by_term for t in node[1]):
-            return np.empty(0, dtype=np.int64)
-        lists = sorted((postings_by_term[t][0] for t in node[1]), key=len)
-        common = lists[0]
-        for d in lists[1:]:
-            common = common[np.isin(common, d, assume_unique=True)]
-            if len(common) == 0:
-                break
-        return common
-    if kind == "not":
-        d = match_docids(node[1], postings_by_term, pos_by_term)
-        for t in node[2]:
-            if t in postings_by_term and len(d):
-                d = d[~np.isin(d, postings_by_term[t][0], assume_unique=True)]
-        return d
-    if kind == "andn":
-        subs = [match_docids(c, postings_by_term, pos_by_term) for c in node[1]]
+    if kind in ("and", "andn"):
+        subs = [match_docids(_clause(kind, c), postings_by_term, pos_by_term) for c in node[1]]
         if any(len(d) == 0 for d in subs):
             return np.empty(0, dtype=np.int64)
         subs.sort(key=len)
@@ -808,26 +799,19 @@ def match_docids(node, postings_by_term, pos_by_term=None) -> np.ndarray:
             if len(common) == 0:
                 break
         return common
-    if kind == "notn":
+    if kind in ("not", "notn"):
         d = match_docids(node[1], postings_by_term, pos_by_term)
         for c in node[2]:
             if len(d) == 0:
                 break
-            nd = match_docids(c, postings_by_term, pos_by_term)
+            nd = match_docids(_clause(kind, c), postings_by_term, pos_by_term)
             if len(nd):
                 d = d[~np.isin(d, nd, assume_unique=True)]
         return d
-    if kind in ("reqopt", "reqoptn"):
+    if kind in ("reqopt", "reqoptn", "boost"):
         # optional clauses don't gate matching — ReqOptSumScorer matches = req
         return match_docids(node[1], postings_by_term, pos_by_term)
-    if kind == "const":
-        present = [t for t in node[1] if t in postings_by_term]
-        if not present:
-            return np.empty(0, dtype=np.int64)
-        return np.unique(np.concatenate([postings_by_term[t][0] for t in present]))
-    if kind == "boost":
-        return match_docids(node[1], postings_by_term, pos_by_term)
-    if kind in ("syn",):
+    if kind in ("const", "syn"):
         present = [t for t in node[1] if t in postings_by_term]
         if not present:
             return np.empty(0, dtype=np.int64)
@@ -853,6 +837,46 @@ def match_docids(node, postings_by_term, pos_by_term=None) -> np.ndarray:
         d, _ = score_query_node(node, postings_by_term, {}, "float64", pos_by_term)
         return d
     raise ValueError(f"bad node {node!r}")
+
+
+def decode_segment(
+    node,
+    term_rows: dict,
+    seg_size: int,
+    allow: np.ndarray | None = None,
+    deny: np.ndarray | None = None,
+) -> tuple[dict, dict, dict | None]:
+    """One segment's posting rows → ``(tps, postings_by_term, pos_by_term)``
+    restricted to the allowed, live docs — the per-leaf decode every query
+    entry point shares (LeafReader postings + liveDocs/FILTER acceptDocs).
+
+    ``term_rows``: term → posting row (a dict, or a TermPostings, so that a
+    search_many batch decodes each posting list once, not once per query).
+    ``tps`` keeps the unmasked TermPostings (their impact bounds remain
+    valid upper bounds for pruning); ``pos_by_term`` holds the positions of
+    the node's phrase members, None when it has none.  ``allow`` / ``deny``:
+    sorted local docIDs to keep / drop; a term's positions are cut with the
+    same mask repeated per freq, so they stay aligned with its postings."""
+    tps = {
+        t: (r if isinstance(r, TermPostings) else TermPostings(r, seg_size))
+        for t, r in term_rows.items()
+    }
+    postings_by_term = {t: tp.decode() for t, tp in tps.items()}
+    phrase_terms = _phrase_member_terms(node)
+    pos_by_term = {
+        t: tps[t].positions_flat() for t in phrase_terms if t in tps
+    } if phrase_terms else None
+    if allow is not None or deny is not None:
+        for t, (d, f, dl) in list(postings_by_term.items()):
+            m = np.ones(len(d), dtype=bool)
+            if allow is not None:
+                m &= np.isin(d, allow, assume_unique=True)
+            if deny is not None:
+                m &= ~np.isin(d, deny, assume_unique=True)
+            postings_by_term[t] = (d[m], f[m], dl[m])
+            if pos_by_term is not None and t in pos_by_term:
+                pos_by_term[t] = pos_by_term[t][np.repeat(m, f)]
+    return tps, postings_by_term, pos_by_term
 
 
 def segment_topk(
@@ -890,29 +914,8 @@ def segment_topk(
     pruning threshold stays valid: kth is the kth AFTER-FILTERED score, and
     a window whose upper bound is below it cannot contain a competitive hit.
     """
-    # accept pre-built TermPostings so a multi-query batch (search_many)
-    # decodes each posting list once, not once per query
-    tps = {
-        t: (r if isinstance(r, TermPostings) else TermPostings(r, seg_size))
-        for t, r in term_rows.items()
-    }
-    postings_by_term = {t: tp.decode() for t, tp in tps.items()}
-    phrase_terms = _phrase_member_terms(node)
-    pos_by_term = {
-        t: tps[t].positions_flat() for t in phrase_terms if t in tps
-    } if phrase_terms else None
-    if allow is not None or deny is not None:
-        masked = {}
-        for t, (d, f, dl) in postings_by_term.items():
-            m = np.ones(len(d), dtype=bool)
-            if allow is not None:
-                m &= np.isin(d, allow, assume_unique=True)
-            if deny is not None:
-                m &= ~np.isin(d, deny, assume_unique=True)
-            masked[t] = (d[m], f[m], dl[m])
-            if pos_by_term is not None and t in pos_by_term:
-                pos_by_term[t] = pos_by_term[t][np.repeat(m, f)]
-        postings_by_term = masked
+    tps, postings_by_term, pos_by_term = decode_segment(
+        node, term_rows, seg_size, allow, deny)
 
     # cost-based strategy selection (BooleanWeight.scorerSupplier cost
     # heuristics, search/BooleanWeight.java:318-392): when the union of the
@@ -951,33 +954,25 @@ def segment_topk(
             if t not in tps:
                 return np.zeros(n_windows, dtype=np.float64)
             return window_max_scores(tps[t], scorers_by_term[t], n_windows, window_bits)
-        if kind_ == "and":
-            acc = np.zeros(n_windows, dtype=np.float64)
-            present = np.ones(n_windows, dtype=bool)
-            for t in n_[1]:
-                wms = node_ub(("term", t))
-                acc += wms
-                present &= wms > 0
-            acc[~present] = 0.0
-            return acc
-        if kind_ == "andn":
-            # BlockMaxConjunction over sub-clauses: summed bounds, zeroed
-            # where any sub-clause provably has no match in the window
+        if kind_ in ("and", "andn"):
+            # BlockMaxConjunction: summed bounds, zeroed where any member
+            # provably has no match in the window
             acc = np.zeros(n_windows, dtype=np.float64)
             present = np.ones(n_windows, dtype=bool)
             for c in n_[1]:
-                wms = node_ub(c)
+                wms = node_ub(_clause(kind_, c))
                 acc += wms
                 present &= wms > 0
             acc[~present] = 0.0
             return acc
-        if kind_ == "notn":
+        if kind_ in ("not", "notn"):
             return node_ub(n_[1])
-        if kind_ == "reqoptn":
+        if kind_ in ("reqopt", "reqoptn"):
+            # req bound gates the window; optional bounds add on top
             req_ub = node_ub(n_[1])
             acc = req_ub.copy()
             for c in n_[2]:
-                acc += node_ub(c)
+                acc += node_ub(_clause(kind_, c))
             acc[req_ub <= 0] = 0.0
             return acc
         if kind_ == "const":
@@ -1083,30 +1078,11 @@ def segment_topk(
                 if t in tps:
                     acc += window_max_scores(tps[t], scorer, n_windows, window_bits)
             return acc
-        if kind_ == "msm":
-            acc = np.zeros(n_windows, dtype=np.float64)
-            for t in n_[1]:
-                acc += node_ub(("term", t))
-            return acc
-        if kind_ == "dismax":
-            # max + tie*(sum-max) <= sum for tie <= 1
-            acc = np.zeros(n_windows, dtype=np.float64)
-            for c in n_[1]:
-                acc += node_ub(c)
-            return acc
-        if kind_ == "not":
-            return node_ub(n_[1])
-        if kind_ == "reqopt":
-            # req bound gates the window; optional bounds add on top
-            req_ub = node_ub(n_[1])
-            acc = req_ub.copy()
-            for t in n_[2]:
-                acc += node_ub(("term", t))
-            acc[req_ub <= 0] = 0.0
-            return acc
+        # or / msm / dismax: sum of clause bounds (max + tie*(sum-max) <= sum
+        # for tie <= 1)
         acc = np.zeros(n_windows, dtype=np.float64)
         for c in n_[1]:
-            acc += node_ub(c)
+            acc += node_ub(_clause(kind_, c))
         return acc
 
     if node[0] == "and" and any(t not in tps for t in node[1]):

@@ -44,7 +44,7 @@ def pulse_index(index):
         for pdf in batches:
             out = {"term": [], "seg": [], "docid": [], "tf": [], "dl": [],
                    "pos_blob": []}
-            for _, r in pdf.iterrows():
+            for r in pdf.to_dict("records"):
                 tp = TermPostings(r, seg_size)
                 d, f, dl = tp.decode()
                 if len(d) != 1:

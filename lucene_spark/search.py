@@ -1,26 +1,34 @@
-"""Query parsing + distributed top-k search over the index tables.
+"""Query parsing + top-k search over the index tables.
 
-Lifecycle mirrors IndexSearcher.search (lucene/core/.../search/
-IndexSearcher.java:470-511,728-753 — traced in SURVEY §3.1):
+Every query entry point — search, search_many, score_docs, count_hits and
+sorted_topk — runs ONE pipeline, the IndexSearcher.search(Query, Collector)
+lifecycle (lucene/core/.../search/IndexSearcher.java:470-511,728-753 —
+traced in SURVEY §3.1) with only the collector varying:
 
-  1. parse + analyze the query with the same analyzer
-     (queryparser/.../classic/QueryParserBase.java:437 getFieldQuery);
-  2. rewrite (drop unknown/stopword-only clauses → MatchNoDocs analog);
-  3. "createWeight": look up query terms' df/cf in the index's term-statistics
-     snapshot (``Index.term_stats``: the whole termdict as sorted columnar
-     arrays, collected once per handle and binary-searched on the driver, so
-     the lookup launches no Spark job) and build one BM25Scorer per term from
-     global stats (TermStates.build reads reader-resident terms dictionaries:
-     index/TermStates.java:95; here stats are global by construction);
-  4. per-segment execution: postings rows for the query terms are grouped by
-     segment and scored by the windowed block-max kernel inside applyInPandas
-     — segment == Lucene leaf, executor == searcher thread.  A query with at
-     most ``LOCAL_SCORE_MAX_POSTINGS`` postings runs the same kernel on the
-     driver after one collect of its rows (IndexSearcher runs leaves that
-     fit one slice on the calling thread);
-  5. reduce: per-segment top-k merged on the driver with the
-     (score desc, docID asc) contract (TopDocs.java:93-120; segments are
-     docID ranges so docBase order == docID order).
+  1. plan (``_plan``, once per query): parse + analyze with the index's
+     analyzer (queryparser/.../classic/QueryParserBase.java:437
+     getFieldQuery); rewrite (drop unknown/stopword-only clauses →
+     MatchNoDocs analog); expand multi-term queries; fold ``^boost``s; then
+     "createWeight": df/cf of the query terms from the index's
+     term-statistics snapshot (``Index.term_stats``: the termdict as sorted
+     columnar arrays, collected once per handle and binary-searched on the
+     driver, so no Spark job — TermStates.build, index/TermStates.java:95)
+     and one scorer per term from global stats;
+  2. scan: the posting rows of the plan's terms (df == 1 terms from the
+     pulsed sidecar, when the index has one);
+  3. per segment: each segment's rows are decoded and masked by
+     ``kernel.decode_segment`` — tombstones (deny) or filter minus
+     tombstones (allow) as one (docid, seg) frame (``_live_mask``),
+     cogrouped by the one distributed executor (``_per_segment``): segment
+     == Lucene leaf, executor == searcher slice.  search and search_many
+     score with the block-max kernel (a search is a batch of one); a query
+     or batch of at most ``LOCAL_SCORE_MAX_POSTINGS`` postings, unmasked,
+     runs the same closure on the driver after one collect of its rows
+     (IndexSearcher runs leaves that fit one slice on the calling thread);
+  4. reduce: each entry point's own collector and its own Spark action —
+     top-k by (score desc, docID asc) (TopDocs.java:93-120; segments are
+     docID ranges so docBase order == docID order), a per-query window, a
+     count sum, sort-order probes, or the scored DataFrame itself.
 
 The driver collects k rows per segment — never postings, except a small
 query's (≤ ``LOCAL_SCORE_MAX_POSTINGS``) on the driver-scored path.
@@ -39,7 +47,8 @@ from pyspark.sql import functions as F
 
 from .analysis import ENGLISH_STOP_WORDS, analyze
 from .index import Index
-from .kernel import segment_topk
+from .kernel import (TermPostings, decode_segment, match_docids, score_query_node,
+                     segment_topk)
 from .similarity import SIMILARITIES, BM25Scorer, CollectionStats
 
 # --- query AST + parser ---------------------------------------------------------
@@ -904,31 +913,11 @@ def combined_field_score(
     avgdl = sttf_pseudo / float(n_pseudo)
     idf = math.log(1.0 + (n_pseudo - df_pseudo + 0.5) / (df_pseudo + 0.5))
 
-    seg_size = index.seg_size
-    wmap = {v: float(weights[f]) for f, v in names.items()}
+    weight = F.create_map(*[F.lit(x) for f, v in names.items() for x in (v, float(weights[f]))])
     rows = index.postings.filter(F.col("term").isin(list(names.values())))
-
-    def decode(batches):
-        from .kernel import TermPostings
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            outs = []
-            for _, row in pdf.iterrows():
-                d, fq, _dl = TermPostings(row, seg_size).decode()
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "docid": d + int(row["seg"]) * seg_size,
-                            "wf": fq.astype("float64") * wmap[row["term"]],
-                        }
-                    )
-                )
-            yield pd.concat(outs)
-
     cf = (
-        rows.mapInPandas(decode, "docid long, wf double")
+        _explode_postings(rows, index.seg_size, "term string, docid long, tf long")
+        .select("docid", (F.col("tf").cast("double") * weight[F.col("term")]).alias("wf"))
         .groupBy("docid")
         .agg(F.sum("wf").alias("cf"))
     )
@@ -2194,13 +2183,71 @@ def term_cfs(terms: list[str], index: Index) -> dict[str, int]:
     return {t: cf for t, (_, cf) in index.term_stats().lookup(terms).items()}
 
 
-def _cf_kwargs(sim_cls, terms, index):
-    """{} per term, or {'cf': n} when the similarity needs collection
-    frequency — keeps the scorer-construction sites one-line."""
-    if not getattr(sim_cls, "NEEDS_CF", False):
-        return lambda t: {}
-    cfs = term_cfs(terms, index)
-    return lambda t: {"cf": cfs.get(t)}
+# --- the query pipeline: plan → scan → per segment → reduce ----------------------
+
+
+@dataclass
+class _Plan:
+    """A query after the createWeight chain: the executable node (scorers
+    attached), its scanned terms — present in the index, sorted — with their
+    dfs, and one scorer per scanned term."""
+
+    node: tuple
+    terms: list[str]
+    dfs: dict[str, int]
+    scorers: dict
+
+
+def _plan(
+    index: Index,
+    query: str | tuple,
+    analyzer=ENGLISH_STOP_WORDS,
+    similarity: str = "bm25",
+    k1: float = 1.2,
+    b: float = 0.75,
+    precision: str = "lucene",
+    boosts: dict[str, float] | None = None,
+    batch_qid: str | None = None,
+) -> _Plan | None:
+    """The query chain of every entry point: parse → rewrite →
+    expand_multiterm → apply_boosts → term stats (``term_dfs``, no job) →
+    scorers → attach_scorers (IndexSearcher.createWeight).  ``boosts``
+    override the query's own ``^boost``s; a ``^boost`` in a search_many
+    query (``batch_qid``) is rejected.  → None when the query provably
+    matches nothing: rewritten away, no term in the index, an AND with an
+    absent term, or a node attach_scorers drops."""
+    node = rewrite(
+        parse_query(query, fields=index_fields(index))
+        if isinstance(query, str) else query, analyzer,
+    )
+    if node is not None:
+        node = expand_multiterm(node, index)
+    if node is None:
+        return None
+    node, term_boosts = apply_boosts(node)
+    if term_boosts and batch_qid is not None:
+        # a batch's queries share one scorer per term — a per-query term
+        # boost would leak into other queries' scores
+        raise ValueError(
+            f"query {batch_qid!r}: ^boost is not supported in the batched "
+            "search_many path; use search()"
+        )
+    boosts = {**term_boosts, **(boosts or {})}
+    terms = sorted(set(query_terms(node)))
+    stats = CollectionStats(index.doc_count, index.sum_total_term_freq)
+    stats_for = _stats_resolver(index, stats)
+    dfs = term_dfs(terms, index)
+    sim_cls = SIMILARITIES[similarity]
+    cfs = term_cfs(terms, index) if getattr(sim_cls, "NEEDS_CF", False) else {}
+    scorers = {
+        t: sim_cls(dfs[t], stats_for(t), k1=k1, b=b, boost=boosts.get(t, 1.0),
+                   precision=precision, **({"cf": cfs[t]} if t in cfs else {}))
+        for t in terms if t in dfs
+    }
+    node = attach_scorers(node, dfs, stats, k1, b, precision, sim_cls, stats_for)
+    if node is None or not scorers or (node[0] == "and" and len(scorers) < len(terms)):
+        return None
+    return _Plan(node, sorted(scorers), dfs, scorers)
 
 
 # Posting volume — Σ df over the scanned terms of a query, or of a
@@ -2223,16 +2270,22 @@ def _fits_driver(dfs: dict[str, int], terms) -> bool:
     return sum(dfs[t] for t in terms) <= LOCAL_SCORE_MAX_POSTINGS
 
 
-def _pulsed_rows(index: Index, terms: list[str]) -> tuple[list[dict], list[str]]:
+def _pulsed_rows(index: Index, terms: list[str],
+                 dfs: dict[str, int]) -> tuple[list[dict], list[str]]:
     """Singleton pulsing (pulsing.py): df==1 terms are served from the
     vocabulary-sized sidecar (pushdown isin scan, tiny rows to the driver) and
-    synthesized into standard posting rows.  → (synthesized rows, the terms
-    left for the big postings scan — none when every term is a singleton)."""
-    if getattr(index, "pulsed", None) is None or not terms:
+    synthesized into standard posting rows.  Only terms whose snapshot df is
+    1 are looked up: ``pulse_index`` pulses no other, and a pulsed term
+    whose df has grown since (``append_batch`` keeps the sidecar) must come
+    from the postings.  A query without such a term launches no sidecar
+    job.  → (synthesized rows, the terms left for the big postings scan —
+    none when every term is a singleton)."""
+    singles = [t for t in terms if dfs[t] == 1]
+    if getattr(index, "pulsed", None) is None or not singles:
         return [], terms
     from .pulsing import synthesize_posting_rows
 
-    pl = index.pulsed.filter(F.col("term").isin(terms)).collect()
+    pl = index.pulsed.filter(F.col("term").isin(singles)).collect()
     got = {r["term"] for r in pl}
     return (synthesize_posting_rows([r.asDict() for r in pl]),
             [t for t in terms if t not in got])
@@ -2250,17 +2303,124 @@ def _posting_rows_df(index: Index, terms: list[str], synth: list[dict]) -> DataF
     return rows
 
 
-def _segments_on_driver(table, synth: list[dict], run) -> pd.DataFrame:
+_DTYPES = {"string": object, "long": "int64", "double": "float64"}
+
+
+def _segment_runner(seg_size: int, schema: str, run):
+    """``run(seg, term_rows, allow, deny)`` → the group function both
+    executors call once per segment with its posting rows (and its sorted
+    local allow/deny docids).  A group without postings, or with nothing
+    allowed, yields the empty frame of ``schema`` without calling ``run``."""
+    empty = pd.DataFrame({c: pd.Series(dtype=_DTYPES[t])
+                          for c, t in (f.split() for f in schema.split(","))})
+
+    def run_group(post_pdf: pd.DataFrame, allow=None, deny=None) -> pd.DataFrame:
+        if len(post_pdf) == 0 or (allow is not None and len(allow) == 0):
+            return empty
+        term_rows = {r["term"]: r for r in post_pdf.to_dict("records")}
+        return run(int(post_pdf["seg"].iloc[0]), term_rows, allow, deny)
+
+    return run_group
+
+
+def _segments_on_driver(table, synth: list[dict], seg_size: int, schema: str,
+                        run) -> pd.DataFrame:
     """Driver path: the collected posting rows (an Arrow table, or None when
     every term was pulsed) plus the synthesized pulsed rows, grouped by
-    segment and handed to ``run`` — the closure applyInPandas calls once per
-    segment group on the distributed path.  → the concatenated results."""
+    segment and handed to ``run`` as on the distributed path.  → the
+    concatenated results."""
+    run_group = _segment_runner(seg_size, schema, run)
     parts = [] if table is None else [table.to_pandas()]
     if synth:
         parts.append(pd.DataFrame(synth))
     pdf = pd.concat(parts, ignore_index=True)
-    return pd.concat([run(g) for _, g in pdf.groupby("seg", sort=False)]
-                     or [run(pdf.iloc[:0])], ignore_index=True)
+    return pd.concat([run_group(g) for _, g in pdf.groupby("seg", sort=False)]
+                     or [run_group(pdf.iloc[:0])], ignore_index=True)
+
+
+def _live_mask(index: Index, filter_docs: DataFrame | None = None):
+    """The read-time docid mask as ONE (docid, seg) frame plus its kind: the
+    tombstones to "deny" (LiveDocsFormat analog: deletes applied at read),
+    or, with a FILTER, the filter's docids minus the tombstones to "allow"
+    (BooleanClause.Occur.FILTER: required match, no score contribution —
+    search/BooleanQuery.java:40; IndexOrDocValuesQuery.java:51 picks
+    columnar execution for such predicates, here a Catalyst filter).  None
+    when every doc is live and nothing is filtered."""
+    dead = None if index.tombstones is None else index.tombstones.select("docid")
+    if filter_docs is not None:
+        docs = filter_docs if dead is None else filter_docs.join(dead, "docid", "left_anti")
+        kind = "allow"
+    elif dead is not None:
+        docs, kind = dead, "deny"
+    else:
+        return None
+    seg = (F.col("docid") / F.lit(index.seg_size)).cast("long").alias("seg")
+    return docs.select(F.col("docid"), seg), kind
+
+
+def _per_segment(index: Index, rows: DataFrame, schema: str, run,
+                 mask=None) -> DataFrame:
+    """The distributed per-segment executor: posting rows are self-contained
+    (inline dls), so the only shuffle is ``rows`` grouped by seg — segment ==
+    Lucene leaf, executor == searcher slice — and ``run`` scores each group
+    inside applyInPandas.  A ``mask`` from ``_live_mask`` is cogrouped by seg,
+    so each kernel masks before ranking or counting."""
+    seg_size = index.seg_size
+    run_group = _segment_runner(seg_size, schema, run)
+    grouped = rows.groupBy("seg")
+    if mask is None:
+        # applyInPandas dispatches on function arity — a second parameter
+        # would be interpreted as the grouping key
+        def run_plain(post_pdf: pd.DataFrame) -> pd.DataFrame:
+            return run_group(post_pdf)
+
+        return grouped.applyInPandas(run_plain, schema=schema)
+    frame, kind = mask
+
+    def run_masked(key, post_pdf: pd.DataFrame, mask_pdf: pd.DataFrame) -> pd.DataFrame:
+        m = np.sort(mask_pdf["docid"].to_numpy(dtype=np.int64) - int(key[0]) * seg_size)
+        return run_group(post_pdf, m, None) if kind == "allow" else run_group(post_pdf, None, m)
+
+    return grouped.cogroup(frame.groupBy("seg")).applyInPandas(run_masked, schema=schema)
+
+
+_HITS = "qid string, docid long, score double"
+
+
+def _topk_segment(seg_size: int, queries: dict[str, tuple], scorers: dict,
+                  ks: dict[str, int], afters: dict, similarity: str,
+                  precision: str, prune: bool):
+    """search/search_many's per-segment scoring: every query of the batch
+    (``queries``: qid → (node, terms)) against one segment's rows with the
+    windowed block-max kernel, sharing each posting list's decode.
+    ``afters``: qid → global searchAfter cursor (score, docid)."""
+    # negative-score similarities void the zero lower bound
+    prune = prune and getattr(SIMILARITIES[similarity], "ALLOW_PRUNE", True)
+    afters = {qid: (float(a[0]), int(a[1])) for qid, a in afters.items()}
+
+    def run(seg, term_rows, allow, deny):
+        tps = {t: TermPostings(r, seg_size) for t, r in term_rows.items()}
+        out_q, out_d, out_s = [], [], []
+        for qid, (node, terms) in queries.items():
+            sub = {t: tps[t] for t in terms if t in tps}
+            if not sub:
+                continue
+            # global cursor docid → this segment's local space (degenerates
+            # correctly for segments before/after the cursor's segment)
+            a = afters.get(qid)
+            d, s = segment_topk(node, sub, scorers, seg_size, ks[qid],
+                                precision=precision, prune=prune, allow=allow, deny=deny,
+                                after=None if a is None else (a[0], a[1] - seg * seg_size))
+            out_q.extend([qid] * len(d))
+            out_d.append(d + seg * seg_size)
+            out_s.append(s)
+        return pd.DataFrame({
+            "qid": out_q,
+            "docid": np.concatenate(out_d) if out_d else np.empty(0, dtype=np.int64),
+            "score": np.concatenate(out_s) if out_s else np.empty(0, dtype=np.float64),
+        })
+
+    return run
 
 
 def search(
@@ -2278,7 +2438,8 @@ def search(
     analyzer=ENGLISH_STOP_WORDS,
     after: tuple[float, int] | None = None,
 ) -> TopDocs:
-    """Distributed top-k search.  ``similarity``: 'bm25' (default),
+    """Top-k search: the ``k`` best docs in (score desc, docid asc) order.
+    ``similarity``: 'bm25' (default),
     'classic' (TF-IDF, ClassicSimilarity.java), or 'boolean'
     (BooleanSimilarity.java) — the IndexSearcher.setSimilarity analog
     (search/IndexSearcher.java:286-294); the kernels are similarity-agnostic
@@ -2306,143 +2467,26 @@ def search(
     collect-(N·k)-and-slice driver-side skip.  Pass
     ``(td.scores[-1], td.docids[-1])`` from the previous page computed under
     the SAME precision/similarity/k1/b; scores are compared exactly."""
-    node = (
-        parse_query(query, fields=index_fields(index))
-        if isinstance(query, str) else query
-    )
-    node = rewrite(node, analyzer)
-    empty = TopDocs(np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64), [] if with_urls else None)
-    if node is None:
-        return empty
-    node = expand_multiterm(node, index)
-    if node is None:
-        return empty
-    node, term_boosts = apply_boosts(node)
-    if term_boosts:
-        boosts = {**term_boosts, **(boosts or {})}
-    terms = sorted(set(query_terms(node)))
-    stats = CollectionStats(index.doc_count, index.sum_total_term_freq)
-    dfs = term_dfs(terms, index)
-    boosts = boosts or {}
-    sim_cls = SIMILARITIES[similarity]
-    stats_for = _stats_resolver(index, stats)
-    cf_kw = _cf_kwargs(sim_cls, terms, index)
-    scorers = {
-        t: sim_cls(dfs[t], stats_for(t), k1=k1, b=b, boost=boosts.get(t, 1.0),
-                   precision=precision, **cf_kw(t))
-        for t in terms
-        if t in dfs
-    }
-    node = attach_scorers(node, dfs, stats, k1, b, precision, sim_cls, stats_for)
-    if node is None:
-        return empty
-    if node[0] == "and" and any(t not in scorers for t in terms):
-        return empty
-    if not scorers:
-        return empty
-
-    scan_terms = [t for t in terms if t in scorers]
+    plan = _plan(index, query, analyzer, similarity, k1, b, precision, boosts)
+    if plan is None:
+        return TopDocs(np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64),
+                       [] if with_urls else None)
+    # a batch of one: search_many's scoring closure, with this query's boosts
+    run = _topk_segment(index.seg_size, {"q": (plan.node, plan.terms)}, plan.scorers,
+                        {"q": k}, {} if after is None else {"q": after},
+                        similarity, precision, prune)
     local = (filter_docs is None and index.tombstones is None
-             and _fits_driver(dfs, scan_terms))
-    pulsed_synth, scan_terms = _pulsed_rows(index, scan_terms)
-
-    # per-segment execution: posting rows are self-contained (inline dls), so
-    # the only shuffle is the query's own rows grouped by seg — segment ==
-    # Lucene leaf, executor == searcher slice; the driver collects k rows/seg.
-    # A query of at most LOCAL_SCORE_MAX_POSTINGS postings (Σ df) skips the
-    # shuffle: one collect of its rows, the same closure run on the driver.
-    seg_size = index.seg_size
-    if not getattr(sim_cls, "ALLOW_PRUNE", True):
-        prune = False  # negative-score similarities void the zero lower bound
-    node_b, kparam, prec, pr = node, k, precision, prune
-    after_b = (float(after[0]), int(after[1])) if after is not None else None
-    out_schema = "seg long, docid long, score double"
-
-    def _seg_after(seg: int):
-        # global cursor docid → this segment's local space (degenerates
-        # correctly for segments before/after the cursor's segment)
-        if after_b is None:
-            return None
-        return (after_b[0], after_b[1] - seg * seg_size)
-
-    def _run(post_pdf: pd.DataFrame, allow: np.ndarray | None,
-             deny: np.ndarray | None = None) -> pd.DataFrame:
-        if len(post_pdf) == 0:
-            return pd.DataFrame({"seg": pd.Series(dtype="int64"),
-                                 "docid": pd.Series(dtype="int64"),
-                                 "score": pd.Series(dtype="float64")})
-        seg = int(post_pdf["seg"].iloc[0])
-        term_rows = {r["term"]: r for r in post_pdf.to_dict("records")}
-        d, s = segment_topk(
-            node_b, term_rows, scorers, seg_size, kparam,
-            precision=prec, prune=pr, allow=allow, deny=deny,
-            after=_seg_after(seg),
-        )
-        return pd.DataFrame({"seg": seg, "docid": d + seg * seg_size, "score": s})
-
-    # NOTE: applyInPandas dispatches on function arity — a second parameter
-    # would be interpreted as the grouping key — so the no-filter entrypoint
-    # must be strictly single-argument.
-    def run_segment(post_pdf: pd.DataFrame) -> pd.DataFrame:
-        return _run(post_pdf, None)
-
+             and _fits_driver(plan.dfs, plan.terms))
+    synth, scan_terms = _pulsed_rows(index, plan.terms, plan.dfs)
     if local:
         table = (index.postings.filter(F.col("term").isin(scan_terms)).toArrow()
                  if scan_terms else None)
-        hits = _segments_on_driver(table, pulsed_synth, run_segment)
+        hits = _segments_on_driver(table, synth, index.seg_size, _HITS, run)
         return _top_docs(index, hits["docid"].to_numpy(dtype=np.int64),
                          hits["score"].to_numpy(dtype=np.float64), k, with_urls)
 
-    rows = _posting_rows_df(index, scan_terms, pulsed_synth)
-    # deletes applied at read (LiveDocsFormat analog): fold tombstones into
-    # the allow set when a FILTER is present, else run the deny-mask path
-    deny_docs = None
-    if index.tombstones is not None:
-        if filter_docs is not None:
-            filter_docs = filter_docs.join(
-                index.tombstones.select("docid"), "docid", "left_anti"
-            )
-        else:
-            deny_docs = index.tombstones
-
-    if deny_docs is not None:
-        ddf = deny_docs.select(
-            F.col("docid"), (F.col("docid") / F.lit(seg_size)).cast("long").alias("seg")
-        )
-
-        def run_denied(key, post_pdf: pd.DataFrame, deny_pdf: pd.DataFrame) -> pd.DataFrame:
-            seg = int(key[0])
-            deny = np.sort(deny_pdf["docid"].to_numpy(dtype=np.int64) - seg * seg_size)
-            return _run(post_pdf, None, deny)
-
-        per_seg = (
-            rows.groupBy("seg")
-            .cogroup(ddf.groupBy("seg"))
-            .applyInPandas(run_denied, schema=out_schema)
-        )
-    elif filter_docs is not None:
-        fdf = filter_docs.select(
-            F.col("docid"), (F.col("docid") / F.lit(seg_size)).cast("long").alias("seg")
-        )
-
-        def run_filtered(key, post_pdf: pd.DataFrame, filt_pdf: pd.DataFrame) -> pd.DataFrame:
-            seg = int(key[0])
-            allow = np.sort(
-                filt_pdf["docid"].to_numpy(dtype=np.int64) - seg * seg_size
-            )
-            if len(allow) == 0 or len(post_pdf) == 0:
-                return pd.DataFrame({"seg": pd.Series(dtype="int64"),
-                                     "docid": pd.Series(dtype="int64"),
-                                     "score": pd.Series(dtype="float64")})
-            return _run(post_pdf, allow)
-
-        per_seg = (
-            rows.groupBy("seg")
-            .cogroup(fdf.groupBy("seg"))
-            .applyInPandas(run_filtered, schema=out_schema)
-        )
-    else:
-        per_seg = rows.groupBy("seg").applyInPandas(run_segment, schema=out_schema)
+    per_seg = _per_segment(index, _posting_rows_df(index, scan_terms, synth), _HITS,
+                           run, _live_mask(index, filter_docs))
     # hierarchical reduce: the per-segment top-k rows are cut to a global
     # top-k IN SPARK (TakeOrderedAndProject — per-partition heaps + a k-row
     # merge) before anything reaches the driver: it receives k rows, not k
@@ -2496,83 +2540,20 @@ def score_docs(
     any postings decode (the LeafReaderContext-ord short-circuit pattern,
     e.g. ParentChildrenBlockJoinQuery.java:115-118) — global stats are
     unchanged, so per-doc scores are identical to a full scan."""
-    node = rewrite(
-        parse_query(query, fields=index_fields(index))
-        if isinstance(query, str) else query, analyzer,
-    )
-    spark = index.postings.sparkSession
-    empty = spark.createDataFrame([], "docid long, score double")
-    if node is None:
-        return empty
-    node = expand_multiterm(node, index)
-    if node is None:
-        return empty
-    node, term_boosts = apply_boosts(node)
-    terms = sorted(set(query_terms(node)))
-    stats = CollectionStats(index.doc_count, index.sum_total_term_freq)
-    stats_for = _stats_resolver(index, stats)
-    dfs = term_dfs(terms, index)
-    sim_cls = SIMILARITIES[similarity]
-    cf_kw = _cf_kwargs(sim_cls, terms, index)
-    scorers = {
-        t: sim_cls(dfs[t], stats_for(t), k1=k1, b=b,
-                   boost=term_boosts.get(t, 1.0), precision=precision,
-                   **cf_kw(t))
-        for t in terms if t in dfs
-    }
-    node = attach_scorers(node, dfs, stats, k1, b, precision, sim_cls, stats_for)
-    if node is None or not scorers:
-        return empty
-    if node[0] == "and" and any(t not in scorers for t in terms):
-        return empty
-    rows = index.postings.filter(F.col("term").isin(sorted(scorers)))
+    plan = _plan(index, query, analyzer, similarity, k1, b, precision)
+    if plan is None:
+        return index.postings.sparkSession.createDataFrame([], "docid long, score double")
+    rows = index.postings.filter(F.col("term").isin(plan.terms))
     if segs is not None:
         rows = rows.filter(F.col("seg").isin([int(s) for s in segs]))
-    seg_size, node_b, prec = index.seg_size, node, precision
+    node, scorers, seg_size = plan.node, plan.scorers, index.seg_size
 
-    def _score(post_pdf: pd.DataFrame, deny: np.ndarray | None) -> pd.DataFrame:
-        from .kernel import TermPostings, _phrase_member_terms, score_query_node
-
-        if len(post_pdf) == 0:
-            return pd.DataFrame({"docid": pd.Series(dtype="int64"),
-                                 "score": pd.Series(dtype="float64")})
-        seg = int(post_pdf["seg"].iloc[0])
-        tps = {r["term"]: TermPostings(r, seg_size) for _, r in post_pdf.iterrows()}
-        pbt = {t: tp.decode() for t, tp in tps.items()}
-        phrase_terms = _phrase_member_terms(node_b)
-        pos_by_term = {
-            t: tps[t].positions_flat() for t in phrase_terms if t in tps
-        } if phrase_terms else None
-        if deny is not None:
-            masked = {}
-            for t, (d, f, dl) in pbt.items():
-                m = ~np.isin(d, deny, assume_unique=True)
-                masked[t] = (d[m], f[m], dl[m])
-                if pos_by_term is not None and t in pos_by_term:
-                    pos_by_term[t] = pos_by_term[t][np.repeat(m, f)]
-            pbt = masked
-        d, s = score_query_node(node_b, pbt, scorers, prec, pos_by_term)
+    def score(seg, term_rows, allow, deny):
+        _, pbt, pos = decode_segment(node, term_rows, seg_size, allow, deny)
+        d, s = score_query_node(node, pbt, scorers, precision, pos)
         return pd.DataFrame({"docid": d + seg * seg_size, "score": s})
 
-    if index.tombstones is not None:
-        ddf = index.tombstones.select(
-            F.col("docid"), (F.col("docid") / F.lit(seg_size)).cast("long").alias("seg")
-        )
-
-        def run_denied(key, post_pdf: pd.DataFrame, deny_pdf: pd.DataFrame) -> pd.DataFrame:
-            seg = int(key[0])
-            deny = np.sort(deny_pdf["docid"].to_numpy(dtype=np.int64) - seg * seg_size)
-            return _score(post_pdf, deny)
-
-        return (
-            rows.groupBy("seg").cogroup(ddf.groupBy("seg"))
-            .applyInPandas(run_denied, schema="docid long, score double")
-        )
-
-    def run_segment(post_pdf: pd.DataFrame) -> pd.DataFrame:
-        return _score(post_pdf, None)
-
-    return rows.groupBy("seg").applyInPandas(run_segment, schema="docid long, score double")
+    return _per_segment(index, rows, "docid long, score double", score, _live_mask(index))
 
 
 def count_hits(index: Index, query: str | tuple, analyzer=ENGLISH_STOP_WORDS) -> int:
@@ -2581,78 +2562,17 @@ def count_hits(index: Index, query: str | tuple, analyzer=ENGLISH_STOP_WORDS) ->
     computed inside the kernel (no scoring) and summed by a Spark
     aggregation — only one number per segment ever moves, never hits.
     Tombstoned docs are excluded (liveDocs semantics)."""
-    node = (
-        parse_query(query, fields=index_fields(index))
-        if isinstance(query, str) else query
-    )
-    node = rewrite(node, analyzer)
-    if node is None:
+    plan = _plan(index, query, analyzer, precision="float64")
+    if plan is None:
         return 0
-    node = expand_multiterm(node, index)
-    if node is None:
-        return 0
-    node, _ = apply_boosts(node)  # boosts don't change the match set
-    terms = sorted(set(query_terms(node)))
-    stats = CollectionStats(index.doc_count, index.sum_total_term_freq)
-    dfs = term_dfs(terms, index)
-    node = attach_scorers(node, dfs, stats, 1.2, 0.75, "float64")
-    if node is None:
-        return 0
-    if node[0] == "and" and any(t not in dfs for t in terms):
-        return 0
-    present = [t for t in terms if t in dfs]
-    if not present:
-        return 0
-    rows = index.postings.filter(F.col("term").isin(present))
-    seg_size, node_b = index.seg_size, node
+    node, seg_size = plan.node, index.seg_size
 
-    def _count(post_pdf: pd.DataFrame, deny: np.ndarray | None) -> pd.DataFrame:
-        from .kernel import TermPostings, match_docids
+    def count(seg, term_rows, allow, deny):
+        _, pbt, pos = decode_segment(node, term_rows, seg_size, allow, deny)
+        return pd.DataFrame({"n": [len(match_docids(node, pbt, pos))]})
 
-        if len(post_pdf) == 0:
-            return pd.DataFrame({"n": pd.Series(dtype="int64")})
-        tps = {r["term"]: TermPostings(r, seg_size) for _, r in post_pdf.iterrows()}
-        postings_by_term = {t: tp.decode() for t, tp in tps.items()}
-        if deny is not None:
-            postings_by_term = {
-                t: (d[m], f[m], dl[m])
-                for t, (d, f, dl) in postings_by_term.items()
-                for m in [~np.isin(d, deny, assume_unique=True)]
-            }
-        from .kernel import _phrase_member_terms
-
-        phrase_terms = _phrase_member_terms(node_b)
-        pos_by_term = None
-        if phrase_terms:
-            pos_by_term = {t: tps[t].positions_flat() for t in phrase_terms if t in tps}
-            if deny is not None:
-                for t in list(pos_by_term):
-                    d, f, _ = tps[t].decode()
-                    m = ~np.isin(d, deny, assume_unique=True)
-                    pos_by_term[t] = pos_by_term[t][np.repeat(m, f)]
-        d = match_docids(node_b, postings_by_term, pos_by_term)
-        return pd.DataFrame({"n": [len(d)]})
-
-    if index.tombstones is not None:
-        ddf = index.tombstones.select(
-            F.col("docid"), (F.col("docid") / F.lit(seg_size)).cast("long").alias("seg")
-        )
-
-        def run_denied(key, post_pdf: pd.DataFrame, deny_pdf: pd.DataFrame) -> pd.DataFrame:
-            seg = int(key[0])
-            deny = np.sort(deny_pdf["docid"].to_numpy(dtype=np.int64) - seg * seg_size)
-            return _count(post_pdf, deny)
-
-        per_seg = (
-            rows.groupBy("seg").cogroup(ddf.groupBy("seg"))
-            .applyInPandas(run_denied, schema="n long")
-        )
-    else:
-
-        def run_segment(post_pdf: pd.DataFrame) -> pd.DataFrame:
-            return _count(post_pdf, None)
-
-        per_seg = rows.groupBy("seg").applyInPandas(run_segment, schema="n long")
+    rows = index.postings.filter(F.col("term").isin(plan.terms))
+    per_seg = _per_segment(index, rows, "n long", count, _live_mask(index))
     total = per_seg.agg(F.sum("n")).collect()[0][0]
     return int(total or 0)
 
@@ -2683,90 +2603,30 @@ def sorted_topk(
     Returns sorted docids (ascending or descending by index order); with
     ``return_stats`` → (docids, {"segments_probed": n, "segments_total": m}).
     """
-    node = (
-        parse_query(query, fields=index_fields(index))
-        if isinstance(query, str) else query
-    )
-    node = rewrite(node, analyzer)
-    empty = np.empty(0, dtype=np.int64)
-    if node is not None:
-        node = expand_multiterm(node, index)
-    if node is not None:
-        node, _ = apply_boosts(node)
-    if node is None:
+    plan = _plan(index, query, analyzer, precision="float64")
+    if plan is None:
+        empty = np.empty(0, dtype=np.int64)
         return (empty, {"segments_probed": 0, "segments_total": 0}) if return_stats else empty
-    terms = sorted(set(query_terms(node)))
-    stats = CollectionStats(index.doc_count, index.sum_total_term_freq)
-    dfs = term_dfs(terms, index)
-    node = attach_scorers(node, dfs, stats, 1.2, 0.75, "float64",
-                          stats_for=_stats_resolver(index, stats))
-    present = [t for t in terms if t in dfs]
-    bad = node is None or not present or (
-        node[0] == "and" and any(t not in dfs for t in terms)
-    )
-    if bad:
-        return (empty, {"segments_probed": 0, "segments_total": 0}) if return_stats else empty
-    rows = index.postings.filter(F.col("term").isin(present))
+    rows = index.postings.filter(F.col("term").isin(plan.terms))
     segs = sorted(
         (r["seg"] for r in rows.select("seg").distinct().collect()),
         reverse=not ascending,
     )
-    seg_size, node_b, kk = index.seg_size, node, k
+    node, seg_size, mask = plan.node, index.seg_size, _live_mask(index)
 
-    deny_df = None
-    if index.tombstones is not None:
-        deny_df = index.tombstones.select(
-            F.col("docid"), (F.col("docid") / F.lit(seg_size)).cast("long").alias("seg")
-        )
-
-    def _first_k(post_pdf: pd.DataFrame, deny: np.ndarray | None) -> pd.DataFrame:
-        from .kernel import TermPostings, _phrase_member_terms, match_docids
-
-        if len(post_pdf) == 0:
-            return pd.DataFrame({"docid": pd.Series(dtype="int64")})
-        seg = int(post_pdf["seg"].iloc[0])
-        tps = {r["term"]: TermPostings(r, seg_size) for _, r in post_pdf.iterrows()}
-        pbt = {t: tp.decode() for t, tp in tps.items()}
-        phrase_terms = _phrase_member_terms(node_b)
-        pos_by_term = None
-        if phrase_terms:
-            pos_by_term = {t: tps[t].positions_flat() for t in phrase_terms if t in tps}
-        if deny is not None:
-            masked = {}
-            for t, (d, f, dl) in pbt.items():
-                m = ~np.isin(d, deny, assume_unique=True)
-                masked[t] = (d[m], f[m], dl[m])
-                if pos_by_term is not None and t in pos_by_term:
-                    pos_by_term[t] = pos_by_term[t][np.repeat(m, f)]
-            pbt = masked
-        d = match_docids(node_b, pbt, pos_by_term)  # sorted ascending
-        d = d[:kk] if ascending else d[-kk:]
-        return pd.DataFrame({"docid": d + seg * seg_size})
-
-    def run_plain(post_pdf: pd.DataFrame) -> pd.DataFrame:
-        return _first_k(post_pdf, None)
-
-    def run_denied(key, post_pdf: pd.DataFrame, deny_pdf: pd.DataFrame) -> pd.DataFrame:
-        seg = int(key[0])
-        deny = np.sort(deny_pdf["docid"].to_numpy(dtype=np.int64) - seg * seg_size)
-        return _first_k(post_pdf, deny)
+    def first_k(seg, term_rows, allow, deny):
+        _, pbt, pos = decode_segment(node, term_rows, seg_size, allow, deny)
+        d = match_docids(node, pbt, pos)  # sorted ascending
+        return pd.DataFrame({"docid": (d[:k] if ascending else d[-k:]) + seg * seg_size})
 
     acc: list[int] = []
     i, batch = 0, max(1, probe_segments)
     while i < len(segs) and len(acc) < k:
-        probe = segs[i : i + batch]
-        sub = rows.filter(F.col("seg").isin([int(s) for s in probe]))
-        if deny_df is not None:
-            dsub = deny_df.filter(F.col("seg").isin([int(s) for s in probe]))
-            got = (
-                sub.groupBy("seg").cogroup(dsub.groupBy("seg"))
-                .applyInPandas(run_denied, schema="docid long").collect()
-            )
-        else:
-            got = (
-                sub.groupBy("seg").applyInPandas(run_plain, schema="docid long")
-                .collect()
-            )
+        probe = F.col("seg").isin([int(s) for s in segs[i : i + batch]])
+        got = _per_segment(
+            index, rows.filter(probe), "docid long", first_k,
+            None if mask is None else (mask[0].filter(probe), mask[1]),
+        ).collect()
         acc.extend(r["docid"] for r in got)
         i += batch
         batch *= 2  # geometric widening: O(log segments) probe rounds worst case
@@ -2807,131 +2667,35 @@ def search_many(
     tombstones, is scored on the driver after one collect of its posting
     rows: 1 job per batch, same results.
     """
-    stats = CollectionStats(index.doc_count, index.sum_total_term_freq)
-    stats_for = _stats_resolver(index, stats)
     empty = TopDocs(np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
-
-    prepared: dict[str, tuple] = {}
-    all_terms: set[str] = set()
+    plans = {}
     for qid, q in queries.items():
-        node = rewrite(
-            parse_query(q, fields=index_fields(index))
-            if isinstance(q, str) else q, analyzer,
-        )
-        if node is not None:
-            node = expand_multiterm(node, index)
-        if node is not None:
-            node, tb = apply_boosts(node)
-            if tb:
-                # scorers are shared across the batch — a per-query term
-                # boost would leak into other queries' scores
-                raise ValueError(
-                    f"query {qid!r}: ^boost is not supported in the batched "
-                    "search_many path; use search()"
-                )
-            prepared[qid] = node
-            all_terms.update(query_terms(node))
-    if not prepared:
+        plan = _plan(index, q, analyzer, similarity, k1, b, precision, batch_qid=qid)
+        if plan is not None:
+            plans[qid] = plan
+    if not plans:
         return {qid: empty for qid in queries}
 
-    dfs = term_dfs(sorted(all_terms), index)
-    sim_cls = SIMILARITIES[similarity]
-    exec_nodes: dict[str, tuple] = {}
-    needed_terms: set[str] = set()
-    for qid, node in prepared.items():
-        node = attach_scorers(node, dfs, stats, k1, b, precision, sim_cls, stats_for)
-        if node is None:
-            continue
-        terms = [t for t in query_terms(node) if t in dfs]
-        if node[0] == "and" and len(terms) < len(query_terms(node)):
-            continue
-        if terms:
-            exec_nodes[qid] = node
-            needed_terms.update(terms)
-    if not exec_nodes:
-        return {qid: empty for qid in queries}
-
-    cf_kw = _cf_kwargs(sim_cls, sorted(needed_terms), index)
-    scorers = {
-        t: sim_cls(dfs[t], stats_for(t), k1=k1, b=b, precision=precision,
-                   **cf_kw(t))
-        for t in needed_terms
-    }
-    local = index.tombstones is None and _fits_driver(dfs, needed_terms)
-    pulsed_synth, scan_terms = _pulsed_rows(index, sorted(needed_terms))
-    seg_size = index.seg_size
-    ks = {qid: (ks or {}).get(qid, k) for qid in exec_nodes}
-    if not getattr(sim_cls, "ALLOW_PRUNE", True):
-        prune = False  # negative-score similarities void the zero lower bound
-    nodes_b, kmap, prec, pr = exec_nodes, ks, precision, prune
-    afters_b = {
-        qid: (float(a[0]), int(a[1])) for qid, a in (afters or {}).items()
-    }
-    many_schema = "qid string, docid long, score double"
-
-    def _run_many(post_pdf: pd.DataFrame, deny: np.ndarray | None) -> pd.DataFrame:
-        from .kernel import TermPostings, segment_topk
-
-        if len(post_pdf) == 0:
-            return pd.DataFrame({"qid": pd.Series(dtype=object),
-                                 "docid": pd.Series(dtype="int64"),
-                                 "score": pd.Series(dtype="float64")})
-        seg = int(post_pdf["seg"].iloc[0])
-        # shared decoded postings across the whole query batch
-        term_rows = {
-            r["term"]: TermPostings(r, seg_size) for r in post_pdf.to_dict("records")
-        }
-        out_q, out_d, out_s = [], [], []
-        for qid, node in nodes_b.items():
-            sub = {t: term_rows[t] for t in query_terms(node) if t in term_rows}
-            if not sub:
-                continue
-            qa = afters_b.get(qid)
-            d, s = segment_topk(node, sub, scorers, seg_size, kmap[qid],
-                                precision=prec, prune=pr, deny=deny,
-                                after=(qa[0], qa[1] - seg * seg_size) if qa else None)
-            out_q.extend([qid] * len(d))
-            out_d.append(d + seg * seg_size)
-            out_s.append(s)
-        return pd.DataFrame({
-            "qid": out_q,
-            "docid": np.concatenate(out_d) if out_d else np.empty(0, dtype=np.int64),
-            "score": np.concatenate(out_s) if out_s else np.empty(0, dtype=np.float64),
-        })
-
-    def run_segment(post_pdf: pd.DataFrame) -> pd.DataFrame:
-        return _run_many(post_pdf, None)
-
+    scorers = {t: sc for p in plans.values() for t, sc in p.scorers.items()}
+    dfs = {t: p.dfs[t] for p in plans.values() for t in p.terms}
+    ks = {qid: (ks or {}).get(qid, k) for qid in plans}
+    run = _topk_segment(index.seg_size, {qid: (p.node, p.terms) for qid, p in plans.items()},
+                        scorers, ks, afters or {}, similarity, precision, prune)
+    local = index.tombstones is None and _fits_driver(dfs, scorers)
+    synth, scan_terms = _pulsed_rows(index, sorted(scorers), dfs)
     if local:
         # small batch: one collect of the postings, every segment scored on
         # the driver by the same closure (see LOCAL_SCORE_MAX_POSTINGS)
         table = (index.postings.filter(F.col("term").isin(scan_terms)).toArrow()
                  if scan_terms else None)
-        hits = _segments_on_driver(table, pulsed_synth, run_segment)
+        hits = _segments_on_driver(table, synth, index.seg_size, _HITS, run)
         return _top_docs_many(queries, zip(hits["qid"], hits["docid"], hits["score"]),
                               ks, k)
 
-    rows = _posting_rows_df(index, scan_terms, pulsed_synth)
-    if index.tombstones is not None:
-        # same read-time LiveDocs deny mask as search() — batched queries must
-        # not resurrect deleted docs (Lucene: every scorer sees liveDocs)
-        ddf = index.tombstones.select(
-            F.col("docid"), (F.col("docid") / F.lit(seg_size)).cast("long").alias("seg")
-        )
-
-        def run_denied(key, post_pdf: pd.DataFrame, deny_pdf: pd.DataFrame) -> pd.DataFrame:
-            seg = int(key[0])
-            deny = np.sort(deny_pdf["docid"].to_numpy(dtype=np.int64) - seg * seg_size)
-            return _run_many(post_pdf, deny)
-
-        per_seg = (
-            rows.groupBy("seg")
-            .cogroup(ddf.groupBy("seg"))
-            .applyInPandas(run_denied, schema=many_schema)
-        )
-    else:
-        per_seg = rows.groupBy("seg").applyInPandas(run_segment, schema=many_schema)
-
+    # batched queries must not resurrect deleted docs (Lucene: every scorer
+    # sees liveDocs)
+    per_seg = _per_segment(index, _posting_rows_df(index, scan_terms, synth), _HITS,
+                           run, _live_mask(index))
     # hierarchical per-query reduce in Spark: rank per qid and keep k before
     # collect — ships sum(k_q) rows to the driver instead of k x num_segments
     from pyspark.sql.window import Window
@@ -2997,8 +2761,6 @@ def explain(
     rows = index.postings.filter(
         (F.col("seg") == seg) & F.col("term").isin([t for t in terms if t in dfs])
     ).collect()
-    from .kernel import TermPostings
-
     out = []
     for r in rows:
         d, f, dl = TermPostings(r.asDict(), index.seg_size).decode()
@@ -3265,27 +3027,11 @@ def field_exists_docs(index: Index, field: str,
         return (index.norms.filter(F.col("dl") > 0)
                 .select("docid").distinct())
     pref = field + ":"
-    seg_size = index.seg_size
     # [field + ':', field + ';') — ';' is chr(ord(':') + 1): a sargable
     # range over the term-sorted postings parquet (pushdown scan);
     # matched rows decode distributed, exactly the match_any_docs shape
-    rows = index.postings.filter(
-        (F.col("term") >= pref) & (F.col("term") < field + ";"))
-
-    def explode(batches):
-        from .kernel import TermPostings
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = []
-            segs = pdf["seg"].to_numpy(dtype=np.int64)
-            for i, (_, row) in enumerate(pdf.iterrows()):
-                docids = TermPostings(row, seg_size).decode()[0]
-                out.append(docids + segs[i] * seg_size)
-            yield pd.DataFrame({"docid": np.concatenate(out)})
-
-    return rows.mapInPandas(explode, schema="docid long").distinct()
+    return _explode_postings(index.postings.filter(
+        (F.col("term") >= pref) & (F.col("term") < field + ";")), index.seg_size).distinct()
 
 
 def match_any_docs(index: Index, terms: list[str]) -> DataFrame:
@@ -3295,23 +3041,32 @@ def match_any_docs(index: Index, terms: list[str]) -> DataFrame:
     spark = index.postings.sparkSession
     if not terms:
         return spark.createDataFrame([], "docid long")
-    seg_size = index.seg_size
-    rows = index.postings.filter(F.col("term").isin(list(set(terms))))
+    return _explode_postings(
+        index.postings.filter(F.col("term").isin(list(set(terms)))), index.seg_size).distinct()
+
+
+def _explode_postings(rows: DataFrame, seg_size: int,
+                      schema: str = "docid long") -> DataFrame:
+    """Posting rows → one row per posting with the columns of ``schema``
+    (of ``term``, global ``docid`` and ``tf``), decoded distributed in one
+    mapInPandas pass."""
+    cols = [f.split()[0] for f in schema.split(",")]
 
     def explode(batches):
-        from .kernel import TermPostings
-
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            out = []
-            segs = pdf["seg"].to_numpy(dtype=np.int64)
-            for i, (_, row) in enumerate(pdf.iterrows()):
-                docids = TermPostings(row, seg_size).decode()[0]
-                out.append(docids + segs[i] * seg_size)
-            yield pd.DataFrame({"docid": np.concatenate(out)})
+            parts: dict[str, list] = {c: [] for c in cols}
+            for r in pdf.to_dict("records"):
+                d, tf, _ = TermPostings(r, seg_size).decode()
+                got = {"docid": d + int(r["seg"]) * seg_size, "tf": tf}
+                if "term" in parts:
+                    got["term"] = np.full(len(d), r["term"], dtype=object)
+                for c in cols:
+                    parts[c].append(got[c])
+            yield pd.DataFrame({c: np.concatenate(v) for c, v in parts.items()})
 
-    return rows.mapInPandas(explode, schema="docid long").distinct()
+    return rows.mapInPandas(explode, schema=schema)
 
 
 def search_with_total(

@@ -49,8 +49,6 @@ from __future__ import annotations
 
 import math
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -495,25 +493,10 @@ class _Ctx:
 def _term_tf_frame(index: Index, term: str) -> DataFrame:
     """(docid, tf) for one term — decode only the matched postings rows
     (same distributed shape as search.match_any_docs, keeping freqs)."""
-    seg_size = index.seg_size
-    rows = index.postings.filter(F.col("term") == term)
+    from .search import _explode_postings
 
-    def explode(batches):
-        from .kernel import TermPostings
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out_d, out_t = [], []
-            segs = pdf["seg"].to_numpy(dtype=np.int64)
-            for i, (_, row) in enumerate(pdf.iterrows()):
-                docids, tfs, _ = TermPostings(row, seg_size).decode()
-                out_d.append(docids.astype(np.int64) + segs[i] * seg_size)
-                out_t.append(tfs.astype(np.int64))
-            yield pd.DataFrame({"docid": np.concatenate(out_d),
-                                "tf": np.concatenate(out_t)})
-
-    return rows.mapInPandas(explode, schema="docid long, tf long")
+    return _explode_postings(index.postings.filter(F.col("term") == term),
+                             index.seg_size, "docid long, tf long")
 
 
 # one 256-entry decode table: norm byte → 1/sqrt(byte4ToInt(b))

@@ -106,3 +106,23 @@ def test_search_many_pulsed_identical(spark, pulsed_pair):
     for k in qs:
         assert r1[k].docids.tolist() == r2[k].docids.tolist(), k
         assert r1[k].scores.tolist() == r2[k].scores.tolist(), k
+
+
+def test_pulsed_term_found_in_appended_docs(spark, tmp_path):
+    """append_batch keeps the sidecar on disk, so a term pulsed before the
+    append is stale once a new doc holds it: its snapshot df is 2, and the
+    postings scan — not the sidecar — must serve it."""
+    from lucene_spark.index import build_index, write_index
+    from lucene_spark.search import search
+    from lucene_spark.streaming import append_batch, refresh_reader
+
+    pages = spark.createDataFrame(
+        [(f"u{i}", "common words " + ("zebra" if i == 0 else f"filler{i % 3}"))
+         for i in range(20)], "url string, text string")
+    out = str(tmp_path / "live")
+    write_index(pulse_index(build_index(spark, pages, seg_size=8)), out)
+    append_batch(spark, spark.createDataFrame([("u99", "zebra crossing")],
+                                              "url string, text string"), out, seg_size=8)
+    live = refresh_reader(spark, out)
+    assert live.pulsed is not None
+    assert search(live, "zebra", k=10, with_urls=True).urls == ["u99", "u0"]

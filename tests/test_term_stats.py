@@ -3,7 +3,8 @@ point reads df/cf from a once-loaded snapshot of the termdict, so a query
 launches no Spark job for its term stats — and the snapshot agrees with the
 termdict on every kind of handle.  Job counts are pinned on both scoring
 paths: distributed (2 per search(), 3 per search_many batch) and, for
-queries within ``LOCAL_SCORE_MAX_POSTINGS``, driver-scored (1 each)."""
+queries within ``LOCAL_SCORE_MAX_POSTINGS``, driver-scored (1 each); and for
+count_hits, sorted_topk and score_docs on a plain and a tombstoned handle."""
 
 import importlib
 import itertools
@@ -12,11 +13,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from lucene_spark.corpus import generate_pages
+from lucene_spark.pulsing import pulse_index
 from lucene_spark.index import (
     add_indexes, add_reversed_terms, build_index, build_multifield_index,
     read_index, split_index, write_index,
 )
-from lucene_spark.search import search, search_many, term_cfs, term_dfs
+from lucene_spark.search import (
+    count_hits, score_docs, search, search_many, sorted_topk, term_cfs, term_dfs,
+)
 from lucene_spark.streaming import refresh_reader, update_batch
 
 S = importlib.import_module("lucene_spark.search")  # the package exports search()
@@ -83,6 +87,43 @@ def test_small_search_launches_one_job(spark, idx, similarity):
 @pytest.mark.parametrize("similarity", ["bm25", "lmd", "dfi_standardized"])
 def test_small_search_many_launches_one_job(spark, idx, similarity):
     assert _jobs(spark, lambda: search_many(idx, BATCH, k=5, similarity=similarity)) == 1
+
+
+# --- the other entry points: count_hits, sorted_topk, score_docs ----------------
+
+
+@pytest.fixture(scope="module")
+def deleted(spark, idx):
+    return idx.delete_docs(spark.range(0, 600, 7).withColumnRenamed("id", "docid"))
+
+
+# (plain, tombstoned) — the tombstoned handle adds the liveDocs mask's job
+@pytest.mark.parametrize("name, call, want", [
+    ("count_hits", lambda h: count_hits(h, QUERY), (3, 4)),
+    ("sorted_topk", lambda h: sorted_topk(h, "court", k=5), (4, 5)),
+    ("sorted_topk_rounds", lambda h: sorted_topk(h, QUERY, k=200, probe_segments=1), (6, 8)),
+    ("score_docs", lambda h: score_docs(h, QUERY).count(), (3, 4)),
+])
+def test_other_entry_point_jobs(spark, idx, deleted, name, call, want):
+    assert (_jobs(spark, lambda: call(idx)), _jobs(spark, lambda: call(deleted))) == want
+
+
+@pytest.fixture(scope="module")
+def pulsed(idx):
+    handle = pulse_index(idx)
+    handle.pulsed = handle.pulsed.persist()
+    handle.pulsed.count()
+    handle.term_stats()  # a new handle loads its own snapshot
+    return handle
+
+
+def test_pulsed_query_without_singletons_launches_one_job(spark, pulsed):
+    """The sidecar holds only df == 1 terms, so a query without one must
+    not look it up."""
+    batch = {"a": "court", "b": "planes AND court", "c": "court NOT planes"}
+    assert min(term_dfs(["court", "planes"], pulsed).values()) > 1
+    assert _jobs(spark, lambda: search(pulsed, "court", k=5)) == 1
+    assert _jobs(spark, lambda: search_many(pulsed, batch, k=5)) == 1
 
 
 def test_fixture_has_five_or_more_segments(idx):
