@@ -913,11 +913,10 @@ def combined_field_score(
     avgdl = sttf_pseudo / float(n_pseudo)
     idf = math.log(1.0 + (n_pseudo - df_pseudo + 0.5) / (df_pseudo + 0.5))
 
-    weight = F.create_map(*[F.lit(x) for f, v in names.items() for x in (v, float(weights[f]))])
+    wmap = {v: float(weights[f]) for f, v in names.items()}
     rows = index.postings.filter(F.col("term").isin(list(names.values())))
     cf = (
-        _explode_postings(rows, index.seg_size, "term string, docid long, tf long")
-        .select("docid", (F.col("tf").cast("double") * weight[F.col("term")]).alias("wf"))
+        _explode_postings(rows, index.seg_size, "docid long, wf double", wmap)
         .groupBy("docid")
         .agg(F.sum("wf").alias("cf"))
     )
@@ -2233,21 +2232,25 @@ def _plan(
             "search_many path; use search()"
         )
     boosts = {**term_boosts, **(boosts or {})}
-    terms = sorted(set(query_terms(node)))
     stats = CollectionStats(index.doc_count, index.sum_total_term_freq)
     stats_for = _stats_resolver(index, stats)
-    dfs = term_dfs(terms, index)
+    dfs = term_dfs(sorted(set(query_terms(node))), index)
     sim_cls = SIMILARITIES[similarity]
+    node = attach_scorers(node, dfs, stats, k1, b, precision, sim_cls, stats_for)
+    if node is None or (node[0] == "and" and any(t not in dfs for t in node[1])):
+        return None
+    # the scanned terms are those of the executable node: a clause that
+    # attach_scorers dropped (a phrase with an absent member) scans nothing
+    terms = sorted(t for t in set(query_terms(node)) if t in dfs)
+    if not terms:
+        return None
     cfs = term_cfs(terms, index) if getattr(sim_cls, "NEEDS_CF", False) else {}
     scorers = {
         t: sim_cls(dfs[t], stats_for(t), k1=k1, b=b, boost=boosts.get(t, 1.0),
                    precision=precision, **({"cf": cfs[t]} if t in cfs else {}))
-        for t in terms if t in dfs
+        for t in terms
     }
-    node = attach_scorers(node, dfs, stats, k1, b, precision, sim_cls, stats_for)
-    if node is None or not scorers or (node[0] == "and" and len(scorers) < len(terms)):
-        return None
-    return _Plan(node, sorted(scorers), dfs, scorers)
+    return _Plan(node, terms, dfs, scorers)
 
 
 # Posting volume — Σ df over the scanned terms of a query, or of a
@@ -2306,7 +2309,7 @@ def _posting_rows_df(index: Index, terms: list[str], synth: list[dict]) -> DataF
 _DTYPES = {"string": object, "long": "int64", "double": "float64"}
 
 
-def _segment_runner(seg_size: int, schema: str, run):
+def _segment_runner(schema: str, run):
     """``run(seg, term_rows, allow, deny)`` → the group function both
     executors call once per segment with its posting rows (and its sorted
     local allow/deny docids).  A group without postings, or with nothing
@@ -2323,13 +2326,12 @@ def _segment_runner(seg_size: int, schema: str, run):
     return run_group
 
 
-def _segments_on_driver(table, synth: list[dict], seg_size: int, schema: str,
-                        run) -> pd.DataFrame:
+def _segments_on_driver(table, synth: list[dict], schema: str, run) -> pd.DataFrame:
     """Driver path: the collected posting rows (an Arrow table, or None when
     every term was pulsed) plus the synthesized pulsed rows, grouped by
     segment and handed to ``run`` as on the distributed path.  → the
     concatenated results."""
-    run_group = _segment_runner(seg_size, schema, run)
+    run_group = _segment_runner(schema, run)
     parts = [] if table is None else [table.to_pandas()]
     if synth:
         parts.append(pd.DataFrame(synth))
@@ -2365,8 +2367,7 @@ def _per_segment(index: Index, rows: DataFrame, schema: str, run,
     Lucene leaf, executor == searcher slice — and ``run`` scores each group
     inside applyInPandas.  A ``mask`` from ``_live_mask`` is cogrouped by seg,
     so each kernel masks before ranking or counting."""
-    seg_size = index.seg_size
-    run_group = _segment_runner(seg_size, schema, run)
+    run_group = _segment_runner(schema, run)
     grouped = rows.groupBy("seg")
     if mask is None:
         # applyInPandas dispatches on function arity — a second parameter
@@ -2376,6 +2377,7 @@ def _per_segment(index: Index, rows: DataFrame, schema: str, run,
 
         return grouped.applyInPandas(run_plain, schema=schema)
     frame, kind = mask
+    seg_size = index.seg_size
 
     def run_masked(key, post_pdf: pd.DataFrame, mask_pdf: pd.DataFrame) -> pd.DataFrame:
         m = np.sort(mask_pdf["docid"].to_numpy(dtype=np.int64) - int(key[0]) * seg_size)
@@ -2481,7 +2483,7 @@ def search(
     if local:
         table = (index.postings.filter(F.col("term").isin(scan_terms)).toArrow()
                  if scan_terms else None)
-        hits = _segments_on_driver(table, synth, index.seg_size, _HITS, run)
+        hits = _segments_on_driver(table, synth, _HITS, run)
         return _top_docs(index, hits["docid"].to_numpy(dtype=np.int64),
                          hits["score"].to_numpy(dtype=np.float64), k, with_urls)
 
@@ -2688,7 +2690,7 @@ def search_many(
         # the driver by the same closure (see LOCAL_SCORE_MAX_POSTINGS)
         table = (index.postings.filter(F.col("term").isin(scan_terms)).toArrow()
                  if scan_terms else None)
-        hits = _segments_on_driver(table, synth, index.seg_size, _HITS, run)
+        hits = _segments_on_driver(table, synth, _HITS, run)
         return _top_docs_many(queries, zip(hits["qid"], hits["docid"], hits["score"]),
                               ks, k)
 
@@ -3045,11 +3047,11 @@ def match_any_docs(index: Index, terms: list[str]) -> DataFrame:
         index.postings.filter(F.col("term").isin(list(set(terms)))), index.seg_size).distinct()
 
 
-def _explode_postings(rows: DataFrame, seg_size: int,
-                      schema: str = "docid long") -> DataFrame:
+def _explode_postings(rows: DataFrame, seg_size: int, schema: str = "docid long",
+                      weights: dict[str, float] | None = None) -> DataFrame:
     """Posting rows → one row per posting with the columns of ``schema``
-    (of ``term``, global ``docid`` and ``tf``), decoded distributed in one
-    mapInPandas pass."""
+    (of ``term``, global ``docid``, ``tf`` and ``wf`` = tf · ``weights[term]``),
+    decoded distributed in one mapInPandas pass."""
     cols = [f.split()[0] for f in schema.split(",")]
 
     def explode(batches):
@@ -3060,6 +3062,8 @@ def _explode_postings(rows: DataFrame, seg_size: int,
             for r in pdf.to_dict("records"):
                 d, tf, _ = TermPostings(r, seg_size).decode()
                 got = {"docid": d + int(r["seg"]) * seg_size, "tf": tf}
+                if "wf" in parts:
+                    got["wf"] = tf.astype(np.float64) * weights[r["term"]]
                 if "term" in parts:
                     got["term"] = np.full(len(d), r["term"], dtype=object)
                 for c in cols:

@@ -1,6 +1,8 @@
 """search_many (batched multi-query execution) must be result-identical to
 query-at-a-time search — same contract, one Spark job."""
 
+import importlib
+
 import numpy as np
 import pytest
 
@@ -71,3 +73,20 @@ def test_per_query_k(midx):
 def test_all_unknown_queries(midx):
     out = search_many(midx, {"x": "zebra", "y": "qqq AND zzz"}, k=5)
     assert len(out["x"].docids) == 0 and len(out["y"].docids) == 0
+
+
+@pytest.mark.parametrize("bound", [None, 0])
+def test_or_with_dropped_phrase_keeps_surviving_and(midx, monkeypatch, bound):
+    # the phrase has a member absent from the index, so the OR collapses to
+    # its AND clause; the AND must not be judged against the phrase's terms
+    S = importlib.import_module("lucene_spark.search")  # the package exports search()
+    if bound is not None:
+        monkeypatch.setattr(S, "LOCAL_SCORE_MAX_POSTINGS", bound)
+    q = '(spark AND batch) OR "spark zebra"'
+    want = search(midx, "spark AND batch", k=10)
+    assert len(want.docids) > 0
+    single = search(midx, q, k=10)
+    batched = search_many(midx, {"q": q, "t": "fox"}, k=10)["q"]
+    for got in (single, batched):
+        np.testing.assert_array_equal(got.docids, want.docids)
+        np.testing.assert_array_equal(got.scores, want.scores)
