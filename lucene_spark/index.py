@@ -49,6 +49,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -106,6 +107,56 @@ class TermStats:
                         zip(self.df[pos].tolist(), self.cf[pos].tolist())))
 
 
+@dataclass(frozen=True)
+class PostingsSnapshot:
+    """Driver-resident copy of the whole postings table — the analog of the
+    postings a Lucene reader maps once at open instead of reading per query.
+    ``table`` holds every posting row, sorted by term; ``terms`` is its term
+    column as an object array, so a query's rows are found by binary search
+    (``np.searchsorted``) and cut out with one ``take``.  Loaded with one
+    Arrow collect.  ``source`` is the postings DataFrame the table was read
+    from — the cache key ``Index.resident_postings`` checks."""
+
+    source: DataFrame
+    table: pa.Table
+    terms: np.ndarray
+
+    @classmethod
+    def load(cls, postings: DataFrame) -> "PostingsSnapshot":
+        tab = postings.toArrow().sort_by("term")
+        return cls(postings, tab, np.asarray(tab.column("term").to_numpy(), dtype=object))
+
+    def rows(self, terms) -> pa.Table:
+        """The posting rows of ``terms`` as an Arrow table (absent terms have
+        none)."""
+        q = np.array(sorted(set(terms)), dtype=object)
+        lo = np.searchsorted(self.terms, q, side="left")
+        n = np.searchsorted(self.terms, q, side="right") - lo
+        # row ids of the ranges [lo, lo + n), concatenated
+        ids = np.arange(int(n.sum())) + np.repeat(lo - (np.cumsum(n) - n), n)
+        return self.table.take(ids)
+
+
+@dataclass(frozen=True)
+class LiveDocs:
+    """Driver-resident tombstones — the analog of the live-docs bitset (.liv)
+    a Lucene reader loads at open: the deleted docids as a sorted int64
+    array, or None when there are more than ``cap`` of them (the collect
+    stops at ``cap + 1`` rows, so a large tombstone table is never pulled to
+    the driver).  ``source`` is the tombstones DataFrame it was read from."""
+
+    source: DataFrame
+    deleted: np.ndarray | None
+    cap: int
+
+    @classmethod
+    def load(cls, tombstones: DataFrame, cap: int) -> "LiveDocs":
+        tab = tombstones.select("docid").limit(cap + 1).toArrow()
+        if tab.num_rows > cap:
+            return cls(tombstones, None, cap)
+        return cls(tombstones, np.unique(tab.column("docid").to_numpy().astype(np.int64)), cap)
+
+
 @dataclass
 class Index:
     """Handle over the index tables (in-memory DataFrames or parquet-backed).
@@ -115,6 +166,15 @@ class Index:
     Lucene stores 1 quantized byte/doc, we store exact uint32 lengths so both
     precision modes decode from one artifact): one row per segment,
     dl_blob = uint32[n_docs_in_seg] little-endian.
+
+    Reader-resident snapshots, each loaded by one collect on first use and
+    reloaded when its source DataFrame is replaced: ``term_stats`` (the
+    termdict, ~80 B per term), ``resident_postings`` (the whole postings
+    table, ~21 B per posting, only while the index holds at most
+    ``search.LOCAL_SCORE_MAX_POSTINGS`` postings) and ``deleted_docids``
+    (the tombstones, at most that many ids).  Once they are loaded, a
+    driver-scored ``search``/``search_many`` on a small index launches no
+    Spark job.
     """
 
     docs: DataFrame
@@ -145,6 +205,10 @@ class Index:
     head_terms: list | None = None
     _term_stats: TermStats | None = field(
         default=None, init=False, repr=False, compare=False)
+    _postings: PostingsSnapshot | None = field(
+        default=None, init=False, repr=False, compare=False)
+    _live_docs: LiveDocs | None = field(
+        default=None, init=False, repr=False, compare=False)
 
     @property
     def avgdl(self) -> float:
@@ -161,11 +225,43 @@ class Index:
         handle (``read_index``, ``refresh_reader``, ``add_indexes``) pays the
         whole-vocabulary collect, so the saving needs several queries per
         handle once the vocabulary is large.  ``delete_docs`` and
-        ``add_reversed_terms`` hand the snapshot on: the termdict is shared."""
+        ``add_reversed_terms`` hand the snapshot on: the termdict is shared
+        (they hand the postings snapshot on too)."""
         ts = self._term_stats
         if ts is None or ts.source is not self.termdict:
             ts = self._term_stats = TermStats.load(self.termdict)
         return ts
+
+    def resident_postings(self, max_postings: int) -> PostingsSnapshot | None:
+        """The whole postings table on the driver when the index holds at
+        most ``max_postings`` postings (Σ df of the term-stats snapshot), else
+        None.  Loaded by one collect on first use and reloaded whenever
+        ``postings`` is no longer the DataFrame it was read from; the bound is
+        checked at every call, so a caller may change it.  About 21 driver
+        bytes per posting (BENCH.md), so the snapshot is bounded by the bound
+        that already caps one driver-scored query's collect."""
+        if int(self.term_stats().df.sum()) > max_postings:
+            return None
+        ps = self._postings
+        if ps is None or ps.source is not self.postings:
+            ps = self._postings = PostingsSnapshot.load(self.postings)
+        return ps
+
+    def deleted_docids(self, cap: int) -> np.ndarray | None:
+        """The tombstoned docids, sorted, when there are at most ``cap`` of
+        them (an empty array when the index has no tombstones), else None.
+        Loaded by one collect on first use and reloaded whenever
+        ``tombstones`` is no longer the DataFrame it was read from, or when
+        it was over a smaller cap."""
+        if self.tombstones is None:
+            return np.empty(0, dtype=np.int64)
+        ld = self._live_docs
+        if (ld is None or ld.source is not self.tombstones
+                or (ld.deleted is None and cap > ld.cap)):
+            ld = self._live_docs = LiveDocs.load(self.tombstones, cap)
+        if ld.deleted is None or len(ld.deleted) > cap:
+            return None
+        return ld.deleted
 
     def delete_docs(self, docids: DataFrame) -> "Index":
         """Mark documents deleted — the tombstone-bitset model
@@ -179,7 +275,8 @@ class Index:
         deleted docs until the segment is rewritten).
 
         ``docids``: DataFrame with a ``docid`` column.  Returns a new handle
-        sharing the index tables and the term-statistics snapshot.
+        sharing the index tables and the term-statistics and postings
+        snapshots; it loads its own live docs.
         """
         t = docids.select("docid")
         if self.tombstones is not None:
@@ -191,7 +288,7 @@ class Index:
             seg_size=self.seg_size, tombstones=t, pulsed=self.pulsed,
             rterms=self.rterms, field_stats=self.field_stats,
         )
-        live._term_stats = self._term_stats
+        live._term_stats, live._postings = self._term_stats, self._postings
         return live
 
     def write_tombstones(self, out_dir: str) -> None:
@@ -1275,13 +1372,46 @@ def add_indexes(a: Index, b: Index) -> Index:
 # --- persistence + checkpointed resumable build (north rule) -------------------
 
 
+def _read_paths(df: DataFrame) -> list[str]:
+    """Real local paths of the files ``df`` reads, taken from its analyzed
+    plan, so a persisted frame still names the files behind its cache
+    (``DataFrame.inputFiles`` does not)."""
+    import os
+    from urllib.parse import unquote, urlparse
+
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    out = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if (leaf.getClass().getSimpleName() == "LogicalRelation"
+                and leaf.relation().getClass().getSimpleName() == "HadoopFsRelation"):
+            out.extend(os.path.realpath(unquote(urlparse(f).path))
+                       for f in leaf.relation().inputFiles())
+    return out
+
+
 def write_index(index: Index, out_dir: str, mode: str = "overwrite") -> None:
     """Persist the index tables. postings partitioned by seg (co-located
     reads), sorted by term within files so parquet min/max stats prune term
     lookups (the BlockTree/FST analog — SURVEY §4).  Tombstones persist as a
     fifth table — the Lucene90LiveDocsFormat .liv file analog — so a
-    delete → write → read round-trip keeps documents deleted."""
+    delete → write → read round-trip keeps documents deleted.
+
+    Raises ``ValueError``, before writing anything, when any table of
+    ``index`` is read from ``out_dir`` (e.g. ``write_index(read_index(spark,
+    d), d)``, or a ``split_index`` side of it): the overwrite would delete
+    files the write still reads and leave ``out_dir`` without postings."""
+    import os
     import shutil
+
+    root = os.path.realpath(out_dir)
+    tables = [index.postings, index.docs, index.termdict, index.norms, index.tombstones,
+              index.pulsed, index.rterms, *(index.field_docs or {}).values()]
+    if any(os.path.commonpath([root, p]) == root
+           for t in tables if t is not None for p in _read_paths(t)):
+        raise ValueError(
+            f"write_index: the index is read from {out_dir!r}; write it to another "
+            "directory")
 
     index.postings.sortWithinPartitions("term").write.mode(mode).partitionBy("seg").parquet(
         f"{out_dir}/postings"
@@ -1512,7 +1642,7 @@ def add_reversed_terms(index: Index) -> Index:
         seg_size=index.seg_size, tombstones=index.tombstones,
         pulsed=index.pulsed, rterms=rt,
     )
-    out._term_stats = index._term_stats
+    out._term_stats, out._postings = index._term_stats, index._postings
     return out
 
 

@@ -291,10 +291,10 @@ def payload_check_docs(
         for pdf in pdfs:
             out_docs, out_cnt = [], []
             for docid, grp in pdf.groupby("docid"):
-                per_term = {}
-                for _, r in grp.iterrows():
-                    per_term[r["term"]] = dict(
-                        zip(list(r["positions"]), list(r["payloads"])))
+                per_term = {
+                    t: dict(zip(list(pos), list(pay)))
+                    for t, pos, pay in zip(grp["term"], grp["positions"], grp["payloads"])
+                }
                 first = per_term.get(term_list[0])
                 if first is None:
                     continue
@@ -344,10 +344,10 @@ def payload_span_util(sidecar: DataFrame, terms: list[str]) -> DataFrame:
         for pdf in pdfs:
             out = {"docid": [], "position": [], "term": [], "payload": []}
             for docid, grp in pdf.groupby("docid"):
-                per_term = {}
-                for _, r in grp.iterrows():
-                    per_term[r["term"]] = dict(
-                        zip(list(r["positions"]), list(r["payloads"])))
+                per_term = {
+                    t: dict(zip(list(pos), list(pay)))
+                    for t, pos, pay in zip(grp["term"], grp["positions"], grp["payloads"])
+                }
                 first = per_term.get(term_list[0])
                 if first is None:
                     continue

@@ -22,26 +22,37 @@ traced in SURVEY §3.1) with only the collector varying:
      cogrouped by the one distributed executor (``_per_segment``): segment
      == Lucene leaf, executor == searcher slice.  search and search_many
      score with the block-max kernel (a search is a batch of one); a query
-     or batch of at most ``LOCAL_SCORE_MAX_POSTINGS`` postings, unmasked,
-     runs the same closure on the driver after one collect of its rows
-     (IndexSearcher runs leaves that fit one slice on the calling thread);
+     or batch of at most ``LOCAL_SCORE_MAX_POSTINGS`` postings without
+     ``filter_docs`` runs the same closure on the driver (IndexSearcher
+     runs leaves that fit one slice on the calling thread), its rows from
+     ``_driver_rows`` and its tombstones from the reader-resident live docs
+     (``Index.deleted_docids``, at most that many ids);
   4. reduce: each entry point's own collector and its own Spark action —
      top-k by (score desc, docID asc) (TopDocs.java:93-120; segments are
      docID ranges so docBase order == docID order), a per-query window, a
      count sum, sort-order probes, or the scored DataFrame itself.
 
-The driver collects k rows per segment — never postings, except a small
-query's (≤ ``LOCAL_SCORE_MAX_POSTINGS``) on the driver-scored path.
+Spark jobs per call on a warmed handle: a driver-scored search() or
+search_many batch launches none when the whole index holds at most
+``LOCAL_SCORE_MAX_POSTINGS`` postings (its rows are sliced from the
+reader-resident postings snapshot, ``Index.resident_postings``), and one
+collect of its own rows on a larger index; the distributed path launches 2
+(search) or 3 (search_many), plus one for a tombstone or filter mask.  The
+driver holds at most ``LOCAL_SCORE_MAX_POSTINGS`` postings of a query — or
+of the resident snapshot, ~21 bytes per posting (~5 MB at the bound) — and
+otherwise k rows per segment.
 """
 
 from __future__ import annotations
 
 import math
 import re
+from collections import Counter
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -2255,22 +2266,48 @@ def _plan(
 
 # Posting volume — Σ df over the scanned terms of a query, or of a
 # search_many batch's union of terms — at or below which search() and
-# search_many() score on the driver: one Arrow collect of the posting rows,
-# then the same per-segment closures the distributed path runs inside
-# applyInPandas, so docids and scores are bit-identical.  That skips the
-# groupBy("seg") shuffle, the Python-UDF stage and the top-k job: 1 Spark job
-# per search() or batch instead of 2 or 3.  Lucene's IndexSearcher likewise
-# scores on the calling thread when the leaves fit one slice
-# (MAX_DOCS_PER_SLICE = 250_000).  Measured crossover (BENCH.md; 50k docs,
+# search_many() score on the driver: the posting rows on the driver
+# (``_driver_rows``), then the same per-segment closures the distributed path
+# runs inside applyInPandas, so docids and scores are bit-identical.  That
+# skips the groupBy("seg") shuffle, the Python-UDF stage and the top-k job: 0
+# Spark jobs (resident postings) or 1 (a collect) per search() or batch
+# instead of 2 or 3.  Lucene's IndexSearcher likewise scores on the calling
+# thread when the leaves fit one slice (MAX_DOCS_PER_SLICE = 250_000).  Measured crossover (BENCH.md; 50k docs,
 # local[4]): the driver path is faster up to ~570k postings, slower from
-# ~950k, so this bound keeps a margin for hosts with more cores.
+# ~950k, so this bound keeps a margin for hosts with more cores.  The same
+# bound admits a whole index's postings to the reader-resident snapshot
+# (``_driver_rows``), and caps the reader-resident tombstones.
 LOCAL_SCORE_MAX_POSTINGS = 250_000
 
 
-def _fits_driver(dfs: dict[str, int], terms) -> bool:
-    """True when the postings of ``terms`` are few enough to score on the
-    driver — read from the term-stats snapshot, so choosing costs no job."""
-    return sum(dfs[t] for t in terms) <= LOCAL_SCORE_MAX_POSTINGS
+def _driver_deny(index: Index, dfs: dict[str, int], terms) -> np.ndarray | None:
+    """The sorted tombstoned docids to mask with when a query (or batch) is
+    scored on the driver — an empty array on an index without tombstones —
+    or None when it takes the distributed path: the postings of ``terms``
+    (Σ df, read from the term-stats snapshot, so choosing costs no job) or
+    the tombstones (``Index.deleted_docids``) exceed
+    ``LOCAL_SCORE_MAX_POSTINGS``."""
+    if sum(dfs[t] for t in terms) > LOCAL_SCORE_MAX_POSTINGS:
+        return None
+    return index.deleted_docids(LOCAL_SCORE_MAX_POSTINGS)
+
+
+def _driver_rows(index: Index, terms: list[str], seg: int | None = None):
+    """The posting rows of ``terms`` (of segment ``seg`` only, when given)
+    on the driver as an Arrow table, None when ``terms`` is empty.  An index
+    of at most ``LOCAL_SCORE_MAX_POSTINGS`` postings serves them from its
+    reader-resident snapshot (``Index.resident_postings``: no Spark job once
+    loaded); a larger one collects them, one job."""
+    if not terms:
+        return None
+    snap = index.resident_postings(LOCAL_SCORE_MAX_POSTINGS)
+    if snap is not None:
+        tab = snap.rows(terms)
+        return tab if seg is None else tab.filter(pc.equal(tab.column("seg"), seg))
+    rows = index.postings.filter(F.col("term").isin(terms))
+    if seg is not None:
+        rows = rows.filter(F.col("seg") == seg)
+    return rows.toArrow()
 
 
 def _pulsed_rows(index: Index, terms: list[str],
@@ -2326,18 +2363,23 @@ def _segment_runner(schema: str, run):
     return run_group
 
 
-def _segments_on_driver(table, synth: list[dict], schema: str, run) -> pd.DataFrame:
-    """Driver path: the collected posting rows (an Arrow table, or None when
-    every term was pulsed) plus the synthesized pulsed rows, grouped by
-    segment and handed to ``run`` as on the distributed path.  → the
-    concatenated results."""
+def _segments_on_driver(table, synth: list[dict], schema: str, run,
+                        deny: np.ndarray, seg_size: int) -> pd.DataFrame:
+    """Driver path: the posting rows (an Arrow table from ``_driver_rows``,
+    or None when every term was pulsed) plus the synthesized pulsed rows,
+    grouped by segment and handed to ``run`` as on the distributed path,
+    each with its segment's slice of the sorted tombstoned docids ``deny``
+    as local docids.  → the concatenated results."""
     run_group = _segment_runner(schema, run)
     parts = [] if table is None else [table.to_pandas()]
     if synth:
         parts.append(pd.DataFrame(synth))
     pdf = pd.concat(parts, ignore_index=True)
-    return pd.concat([run_group(g) for _, g in pdf.groupby("seg", sort=False)]
-                     or [run_group(pdf.iloc[:0])], ignore_index=True)
+    out = []
+    for seg, g in pdf.groupby("seg", sort=False):
+        lo, hi = np.searchsorted(deny, [seg * seg_size, (seg + 1) * seg_size])
+        out.append(run_group(g, None, deny[lo:hi] - seg * seg_size if hi > lo else None))
+    return pd.concat(out or [run_group(pdf.iloc[:0])], ignore_index=True)
 
 
 def _live_mask(index: Index, filter_docs: DataFrame | None = None):
@@ -2458,8 +2500,12 @@ def search(
 
     Small queries — at most ``LOCAL_SCORE_MAX_POSTINGS`` postings (Σ df of
     the scanned terms, read from ``Index.term_stats``), no ``filter_docs``,
-    no tombstones — are scored on the driver after one collect of their
-    posting rows: 1 Spark job instead of 2, bit-identical results.
+    at most that many tombstones — are scored on the driver, bit-identical
+    to the distributed path: 0 Spark jobs when the whole index holds at
+    most that many postings (the rows come from the reader-resident
+    postings snapshot, loaded by the handle's first such query), else 1
+    (a collect of the query's rows), instead of 2.  The driver holds at
+    most the bound's postings (~21 bytes each in the snapshot).
 
     ``after``: searchAfter cursor ``(score, docid)`` of the LAST hit of the
     previous page (IndexSearcher.searchAfter, search/IndexSearcher.java:
@@ -2477,13 +2523,11 @@ def search(
     run = _topk_segment(index.seg_size, {"q": (plan.node, plan.terms)}, plan.scorers,
                         {"q": k}, {} if after is None else {"q": after},
                         similarity, precision, prune)
-    local = (filter_docs is None and index.tombstones is None
-             and _fits_driver(plan.dfs, plan.terms))
+    deny = None if filter_docs is not None else _driver_deny(index, plan.dfs, plan.terms)
     synth, scan_terms = _pulsed_rows(index, plan.terms, plan.dfs)
-    if local:
-        table = (index.postings.filter(F.col("term").isin(scan_terms)).toArrow()
-                 if scan_terms else None)
-        hits = _segments_on_driver(table, synth, _HITS, run)
+    if deny is not None:
+        hits = _segments_on_driver(_driver_rows(index, scan_terms), synth, _HITS, run,
+                                   deny, index.seg_size)
         return _top_docs(index, hits["docid"].to_numpy(dtype=np.int64),
                          hits["score"].to_numpy(dtype=np.float64), k, with_urls)
 
@@ -2492,8 +2536,9 @@ def search(
     # hierarchical reduce: the per-segment top-k rows are cut to a global
     # top-k IN SPARK (TakeOrderedAndProject — per-partition heaps + a k-row
     # merge) before anything reaches the driver: it receives k rows, not k
-    # per segment.  Only queries over LOCAL_SCORE_MAX_POSTINGS postings, or
-    # with filter_docs or tombstones, come this way.
+    # per segment.  Only queries over LOCAL_SCORE_MAX_POSTINGS postings, on
+    # an index with more tombstones than that, or with filter_docs come
+    # this way.
     # (TopDocs.merge contract: score desc, docID asc — TopDocs.java:93-120.)
     out = (
         per_seg.orderBy(F.col("score").desc(), F.col("docid").asc())
@@ -2665,9 +2710,10 @@ def search_many(
     microseconds; the fixed Spark cost (3 jobs: the shuffle-map stage, the
     Python-UDF scoring stage and the per-query top-k window) is paid once for
     the whole batch instead of per query.  A batch whose union of terms holds
-    at most ``LOCAL_SCORE_MAX_POSTINGS`` postings, on an index without
-    tombstones, is scored on the driver after one collect of its posting
-    rows: 1 job per batch, same results.
+    at most ``LOCAL_SCORE_MAX_POSTINGS`` postings, on an index with at most
+    that many tombstones, is scored on the driver with the same results: 0
+    jobs when the whole index holds at most that many postings (reader-
+    resident snapshot), else 1 collect of the batch's rows.
     """
     empty = TopDocs(np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
     plans = {}
@@ -2683,14 +2729,13 @@ def search_many(
     ks = {qid: (ks or {}).get(qid, k) for qid in plans}
     run = _topk_segment(index.seg_size, {qid: (p.node, p.terms) for qid, p in plans.items()},
                         scorers, ks, afters or {}, similarity, precision, prune)
-    local = index.tombstones is None and _fits_driver(dfs, scorers)
+    deny = _driver_deny(index, dfs, scorers)
     synth, scan_terms = _pulsed_rows(index, sorted(scorers), dfs)
-    if local:
-        # small batch: one collect of the postings, every segment scored on
-        # the driver by the same closure (see LOCAL_SCORE_MAX_POSTINGS)
-        table = (index.postings.filter(F.col("term").isin(scan_terms)).toArrow()
-                 if scan_terms else None)
-        hits = _segments_on_driver(table, synth, _HITS, run)
+    if deny is not None:
+        # small batch: its postings on the driver, every segment scored there
+        # by the same closure (see LOCAL_SCORE_MAX_POSTINGS)
+        hits = _segments_on_driver(_driver_rows(index, scan_terms), synth, _HITS, run,
+                                   deny, index.seg_size)
         return _top_docs_many(queries, zip(hits["qid"], hits["docid"], hits["score"]),
                               ks, k)
 
@@ -2742,43 +2787,66 @@ def explain(
     k1: float = 1.2,
     b: float = 0.75,
     boosts: dict[str, float] | None = None,
+    similarity: str = "bm25",
+    analyzer=ENGLISH_STOP_WORDS,
 ) -> pd.DataFrame:
     """Per-term score breakdown for one document — the IndexSearcher.explain
     analog (search/IndexSearcher.java:714-726; BM25Similarity.explain,
     BM25Similarity.java:261-297).  Returns a pandas frame with one row per
-    query term present in the doc: (term, df, tf, dl, weight, score)."""
-    node = rewrite(
-        parse_query(query, fields=index_fields(index))
-        if isinstance(query, str) else query
-    )
+    scanned query term present in the doc: (term, df, tf, dl, weight,
+    score), planned by ``_plan`` exactly as ``search`` plans the query
+    (expansion, boosts, similarity, per-term scorers).  A constant-score
+    clause (wildcard, prefix, range) the doc matches gives one row, under
+    its first matching term, whose weight and score are the clause's boost.
+    So for term, boolean and multi-term queries the rows sum to the doc's
+    ``search`` score; a phrase, synonym or span clause is shown per member
+    term, each with its own term scorer.  A query that matches nothing — an
+    AND with an absent term — explains to an empty frame.  The doc's segment
+    rows come from ``_driver_rows``, so a resident index explains with no
+    Spark job."""
     cols = ["term", "df", "tf", "dl", "weight", "score"]
-    if node is None:
+    plan = _plan(index, query, analyzer, similarity, k1, b, precision, boosts)
+    if plan is None:
         return pd.DataFrame(columns=cols)
-    terms = sorted(set(query_terms(node)))
-    stats = CollectionStats(index.doc_count, index.sum_total_term_freq)
-    dfs = term_dfs(terms, index)
-    boosts = boosts or {}
-    seg = docid // index.seg_size
-    local = docid - seg * index.seg_size
-    rows = index.postings.filter(
-        (F.col("seg") == seg) & F.col("term").isin([t for t in terms if t in dfs])
-    ).collect()
-    out = []
+    seg, local = divmod(int(docid), index.seg_size)
+    synth, scan_terms = _pulsed_rows(index, plan.terms, plan.dfs)
+    table = _driver_rows(index, scan_terms, seg)
+    rows = ([] if table is None else table.to_pylist()) + [r for r in synth if r["seg"] == seg]
+    found = {}  # term -> its (freq, dl) slices at the doc
     for r in rows:
-        d, f, dl = TermPostings(r.asDict(), index.seg_size).decode()
+        d, f, dl = TermPostings(r, index.seg_size).decode()
         pos = np.searchsorted(d, local)
-        if pos >= len(d) or d[pos] != local:
-            continue
-        scorer = BM25Scorer(
-            dfs[r["term"]], _stats_resolver(index, stats)(r["term"]), k1=k1,
-            b=b, boost=boosts.get(r["term"], 1.0), precision=precision,
-        )
-        s = scorer.score_from_dl(f[pos : pos + 1], dl[pos : pos + 1])[0]
-        out.append(
-            (r["term"], dfs[r["term"]], int(f[pos]), int(dl[pos]),
-             float(scorer.weight), float(s))
-        )
+        if pos < len(d) and d[pos] == local:
+            found[r["term"]] = (f[pos : pos + 1], dl[pos : pos + 1])
+    out = []
+    const = _const_clauses(plan.node)
+    for terms, boost in const:
+        hit = [t for t in terms if t in found]
+        if hit:
+            f, dl = found[hit[0]]
+            out.append((hit[0], plan.dfs[hit[0]], int(f[0]), int(dl[0]),
+                        float(boost), float(boost)))
+    # a term scores on its own unless every clause holding it is constant
+    scored = Counter(query_terms(plan.node)) - Counter(t for terms, _ in const for t in terms)
+    for t, (f, dl) in found.items():
+        if scored[t]:
+            sc = plan.scorers[t]
+            out.append((t, plan.dfs[t], int(f[0]), int(dl[0]), float(sc.weight),
+                        float(sc.score_from_dl(f, dl)[0])))
     return pd.DataFrame(sorted(out), columns=cols)
+
+
+def _const_clauses(node: tuple) -> list[tuple[list[str], float]]:
+    """(terms, boost) of every constant-score clause in an executable node."""
+    if not node:
+        return []
+    if node[0] == "const":
+        return [(sorted(node[1]), node[2])]
+    subs = [c for c in node[1:] if isinstance(c, tuple)]
+    for c in node[1:]:
+        if isinstance(c, list):
+            subs.extend(x for x in c if isinstance(x, tuple))
+    return [cc for c in subs for cc in _const_clauses(c)]
 
 
 def more_like_this_terms(

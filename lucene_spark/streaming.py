@@ -240,11 +240,21 @@ def compact_index(spark: SparkSession, in_dir: str, out_dir: str, seg_size: int 
 
     No re-tokenization: (term, docid, tf, dl) is fully recoverable from the
     segment rows + norms.
+
+    ``out_dir`` must not be ``in_dir`` (compared after resolving links):
+    the rewrite would overwrite tables it is still reading, so that case
+    raises ``ValueError`` before anything is read or written.
     """
+    import os
+
     import numpy as np
     from .index import _ranged_with_offsets
     from .kernel import TermPostings
 
+    if os.path.realpath(in_dir) == os.path.realpath(out_dir):
+        raise ValueError(
+            f"compact_index: out_dir {out_dir!r} is in_dir; compact into another "
+            "directory")
     old = read_index(spark, in_dir)
     live = old.docs.select("docid", "url", "dl", "norm")
     if old.tombstones is not None:

@@ -5,11 +5,13 @@ Lucene90LiveDocsFormat (.liv persistence) + SegmentMerger drop-at-merge
 contract (reference: codecs/lucene90/Lucene90LiveDocsFormat.java,
 index/SegmentMerger.java:103-136)."""
 
+import os
+
 import numpy as np
 import pytest
 
 from lucene_spark.corpus import generate_pages
-from lucene_spark.index import build_index, read_index, write_index
+from lucene_spark.index import build_index, read_index, split_index, write_index
 from lucene_spark.search import count_hits, match_any_docs, score_docs, search, search_many
 from lucene_spark.streaming import append_batch, compact_index, refresh_reader
 
@@ -98,6 +100,49 @@ def test_compaction_purges_deletes_and_rebuilds_stats(tmp_path, spark, corpus, i
     want = search(fresh, "law judge", k=20, with_urls=True)
     np.testing.assert_array_equal(got.scores, want.scores)
     assert got.urls == want.urls
+
+
+def _listing(d):
+    return sorted((os.path.relpath(r, d), sorted(fs)) for r, _, fs in os.walk(d))
+
+
+@pytest.fixture
+def written(tmp_path, spark, idx):
+    """A persisted index with tombstones, and its file listing."""
+    d = str(tmp_path / "idx")
+    write_index(idx.delete_docs(_dead_df(spark, idx, "court")), d)
+    return d, _listing(d)
+
+
+@pytest.mark.parametrize("alias", ["same", "dotdot", "symlink"])
+def test_compaction_in_place_is_rejected(tmp_path, spark, written, alias):
+    """Compacting into the input directory would overwrite tables the
+    rewrite still reads; it is refused before anything is read or written."""
+    d, before = written
+    out = {"same": d, "dotdot": os.path.join(d, "..", "idx")}.get(alias)
+    if out is None:
+        out = str(tmp_path / "link")
+        os.symlink(d, out)
+    with pytest.raises(ValueError, match="in_dir"):
+        compact_index(spark, d, out, seg_size=64)
+    assert _listing(d) == before
+    assert read_index(spark, d).tombstones.count() > 0
+
+
+@pytest.mark.parametrize("shape", ["reread", "split"])
+def test_write_index_into_its_source_is_rejected(spark, written, shape):
+    """write_index of a handle read from the target directory would delete
+    the postings it still reads; it is refused before writing."""
+    d, before = written
+    src = read_index(spark, d)
+    if shape == "split":
+        src = split_index(src, at_seg=2)[0]
+    src.postings = src.postings.persist()  # a cached frame still names its files
+    with pytest.raises(ValueError, match="read from"):
+        write_index(src, d)
+    src.postings.unpersist()
+    assert _listing(d) == before
+    assert len(search(read_index(spark, d), "law", k=5).docids) == 5
 
 
 def test_compaction_mixed_positions_downgrades(tmp_path, spark):

@@ -2,9 +2,11 @@
 doc's postings AND its positions (the positions mask repeats the postings
 mask per freq), so count_hits, score_docs, sorted_topk, search and
 search_many agree with an exhaustive search() and never return a dead
-docid."""
+docid — on the driver path too, where the reader-resident live docs deny
+each segment's tombstones, bit-identical to the distributed path."""
 
 import importlib
+import itertools
 
 import numpy as np
 import pytest
@@ -13,6 +15,7 @@ from lucene_spark.index import build_index
 from lucene_spark.search import count_hits, score_docs, search, search_many, sorted_topk
 
 S = importlib.import_module("lucene_spark.search")  # the package exports search()
+_GROUPS = itertools.count()
 N = 160
 FILLER = ["orchard", "basket", "market", "farmer", "season", "harvest"]
 QUERIES = ['"red apple"', '"red apple"~1', '"red apple" pear']
@@ -81,3 +84,33 @@ def test_topk_entry_points_agree(live, monkeypatch, q, bound):
         assert td.docids.tolist() == full.docids[:10].tolist()
         assert td.scores.tolist() == full.scores[:10].tolist()
         assert not set(td.docids.tolist()) & dead
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs it launched)."""
+    sc = spark.sparkContext
+    group = f"live_docs_mask_{next(_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("q", QUERIES)
+def test_driver_path_matches_distributed_path(spark, live, monkeypatch, q):
+    _, deleted, dead, _ = live
+    bound = S.LOCAL_SCORE_MAX_POSTINGS
+    assert deleted.resident_postings(bound) is not None
+    assert deleted.deleted_docids(bound).tolist() == sorted(dead)
+    td, jobs = _jobs(spark, lambda: search(deleted, q, k=50, prune=False))
+    many, mjobs = _jobs(spark, lambda: search_many(deleted, {"q": q}, k=50)["q"])
+    assert (jobs, mjobs) == (0, 0)
+    monkeypatch.setattr(S, "LOCAL_SCORE_MAX_POSTINGS", 0)
+    want = search(deleted, q, k=50, prune=False)
+    for got in (td, many):
+        assert got.docids.tolist() == want.docids.tolist()
+        assert got.scores.tobytes() == want.scores.tobytes()
+    assert len(want.docids) and not set(want.docids.tolist()) & dead

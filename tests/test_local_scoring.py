@@ -1,22 +1,28 @@
 """Driver-side scoring of small queries (``LOCAL_SCORE_MAX_POSTINGS``).
 
 A query whose scanned terms hold at most that many postings is scored on the
-driver after one collect of its posting rows, by the same per-segment closure
-the distributed ``groupBy("seg").applyInPandas`` path runs.  Both paths must
-return identical docids and bit-identical float64 scores; the distributed
-path is forced by setting the bound to 0.  Queries with ``filter_docs`` and
-indexes with tombstones always take the distributed path."""
+driver by the same per-segment closure the distributed
+``groupBy("seg").applyInPandas`` path runs.  Its posting rows come from the
+index's reader-resident postings snapshot when the whole index holds at most
+that many postings (no Spark job once loaded), else from one collect; its
+tombstones come from the reader-resident live docs.  Every path must return
+identical docids and bit-identical float64 scores; the distributed path is
+forced by setting the bound to 0, the collecting driver path by setting it
+between the query's and the index's Σ df.  Queries with ``filter_docs``, and
+indexes with more tombstones than the bound, take the distributed path."""
 
 import importlib
 import itertools
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from lucene_spark.corpus import generate_pages
-from lucene_spark.index import build_index
+from lucene_spark.index import build_index, read_index, write_index
 from lucene_spark.pulsing import pulse_index
 from lucene_spark.search import search, search_many
+from lucene_spark.streaming import append_batch, refresh_reader
 
 S = importlib.import_module("lucene_spark.search")  # the package exports search()
 _GROUPS = itertools.count()
@@ -63,7 +69,8 @@ def idx(spark):
     index.postings = index.postings.persist()
     index.termdict = index.termdict.persist()
     index.postings.count()
-    search(index, "court", k=5)  # warm: loads the term-stats snapshot
+    search(index, "court", k=5)  # warm: loads the term-stats and postings snapshots
+    assert index.resident_postings(S.LOCAL_SCORE_MAX_POSTINGS) is not None
     return index
 
 
@@ -72,7 +79,7 @@ def pulsed(idx):
     p = pulse_index(idx)
     p.pulsed = p.pulsed.persist()
     p.pulsed.count()
-    p.term_stats()
+    p.resident_postings(S.LOCAL_SCORE_MAX_POSTINGS)  # a new handle: its own snapshots
     return p
 
 
@@ -112,7 +119,7 @@ def test_search_parity(spark, monkeypatch, idx, by_df, kind, k, similarity):
         spark, monkeypatch, lambda: search(idx, q, k=k, similarity=similarity))
     assert len(local.docids) > 0
     _assert_same(local, dist)
-    assert (lj, dj) == (1, 2)
+    assert (lj, dj) == (0, 2)
 
 
 @pytest.mark.parametrize("similarity", ["bm25", "classic", "lmd"])
@@ -126,7 +133,7 @@ def test_search_many_parity(spark, monkeypatch, idx, by_df, k, similarity):
     for qid in batch:
         assert len(local[qid].docids) > 0
         _assert_same(local[qid], dist[qid])
-    assert (lj, dj) == (1, 3)
+    assert (lj, dj) == (0, 3)
 
 
 def test_search_after_cursor_parity(spark, monkeypatch, idx, by_df):
@@ -160,8 +167,8 @@ def test_pulsed_index_parity(spark, monkeypatch, pulsed, by_df, singles):
         spark, monkeypatch, lambda: search(pulsed, q, k=100))
     assert len(local.docids) > 0
     _assert_same(local, dist)
-    # the sidecar lookup is one job on both paths
-    assert (lj, dj) == (2, 3)
+    # the sidecar lookup is one job on both paths; the postings are resident
+    assert (lj, dj) == (1, 3)
     (many, _), (many_d, _) = _both_paths(
         spark, monkeypatch,
         lambda: search_many(pulsed, {"mixed": q, "frequent": by_df[2]}, k=50))
@@ -192,22 +199,127 @@ def test_bound_is_inclusive_sum_of_df(spark, monkeypatch, idx, by_df):
     assert _counted(spark, lambda: search(idx, q, k=10))[1] == 2
 
 
+def _between(idx, terms):
+    """A bound that admits the query (Σ df of ``terms``) but not the whole
+    index, so the query is scored on the driver from one collect."""
+    want = sum(S.term_dfs(terms, idx).values())
+    assert want < int(idx.term_stats().df.sum())
+    return want
+
+
+@pytest.mark.parametrize("kind", KINDS)
+def test_collected_driver_path_parity(spark, monkeypatch, idx, by_df, kind):
+    q = _queries(by_df)[kind]
+    resident = search(idx, q, k=100)
+    monkeypatch.setattr(S, "LOCAL_SCORE_MAX_POSTINGS",
+                        _between(idx, S._plan(idx, q).terms))
+    assert idx.resident_postings(S.LOCAL_SCORE_MAX_POSTINGS) is None
+    collected, jobs = _counted(spark, lambda: search(idx, q, k=100))
+    _assert_same(collected, resident)
+    assert jobs == 1
+    batch = _queries(by_df)
+    monkeypatch.setattr(S, "LOCAL_SCORE_MAX_POSTINGS", _between(
+        idx, sorted({t for p in batch.values() for t in S._plan(idx, p).terms})))
+    many, jobs = _counted(spark, lambda: search_many(idx, batch, k=100))
+    assert jobs == 1
+    _assert_same(many[kind], resident)
+
+
+def test_resident_explain_launches_no_job(spark, idx, by_df):
+    q = _queries(by_df)["or"]
+    td = search(idx, q, k=3, precision="float64")
+    for docid, score in zip(td.docids.tolist(), td.scores.tolist()):
+        pdf, jobs = _counted(spark, lambda: S.explain(idx, q, docid, precision="float64"))
+        assert jobs == 0
+        assert pdf["score"].sum() == pytest.approx(score, abs=1e-12)
+
+
+def _small(spark, n=120, seed=21):
+    return build_index(spark, _pages(spark, n, seed), seg_size=32)
+
+
+def test_reassigned_postings_reload_the_snapshot(spark):
+    handle = _small(spark)
+    term = handle.term_stats().terms[np.argmax(handle.term_stats().df)]
+    assert len(search(handle, term, k=10).docids) == 10
+    snap = handle.resident_postings(S.LOCAL_SCORE_MAX_POSTINGS)
+    handle.postings = handle.postings.filter(F.col("term") != term)
+    assert handle.resident_postings(S.LOCAL_SCORE_MAX_POSTINGS) is not snap
+    assert len(search(handle, term, k=10).docids) == 0
+    assert handle.resident_postings(S.LOCAL_SCORE_MAX_POSTINGS) is \
+        handle.resident_postings(S.LOCAL_SCORE_MAX_POSTINGS)
+
+
+def test_refreshed_reader_scores_appended_docs(spark, monkeypatch, tmp_path):
+    out = str(tmp_path / "live")
+    write_index(_small(spark), out)
+    before = read_index(spark, out)
+    search(before, "court", k=5)  # the old handle's snapshot is loaded
+    extra = _pages(spark, 40, seed=22).withColumn(
+        "url", F.concat(F.lit("https://appended.example/"), F.col("url")))
+    assert append_batch(spark, extra, out, seg_size=32) == 40
+    after = refresh_reader(spark, out)
+    appended = set(range(128, 168))  # the next fresh segment base of 120 docs
+    q = "court OR planes OR river"
+    (local, _), (dist, _) = _both_paths(spark, monkeypatch, lambda: search(after, q, k=200))
+    _assert_same(local, dist)
+    assert set(local.docids.tolist()) & appended
+    assert not set(search(before, q, k=200).docids.tolist()) & appended
+
+
+def test_delete_docs_shares_postings_but_loads_own_live_docs(spark, idx):
+    bound = S.LOCAL_SCORE_MAX_POSTINGS
+    deleted = idx.delete_docs(spark.createDataFrame([(7,), (3,), (300,)], "docid long"))
+    assert deleted.resident_postings(bound) is idx.resident_postings(bound)
+    assert idx.deleted_docids(bound).tolist() == []
+    assert deleted.deleted_docids(bound).tolist() == [3, 7, 300]
+    again = deleted.delete_docs(spark.createDataFrame([(5,)], "docid long"))
+    assert again.resident_postings(bound) is idx.resident_postings(bound)
+    assert again.deleted_docids(bound).tolist() == [3, 5, 7, 300]
+
+
+def test_tombstoned_index_takes_driver_path(spark, monkeypatch, idx, by_df):
+    q = _queries(by_df)["or"]
+    top = search(idx, q, k=10).docids[:3].tolist()
+    deleted = idx.delete_docs(spark.createDataFrame([(d,) for d in top], "docid long"))
+    _, first = _counted(spark, lambda: search(deleted, q, k=10))
+    assert first == 1  # loads the live docs, once per handle
+    for kind in KINDS:
+        qk = _queries(by_df)[kind]
+        (td, lj), (dist, dj) = _both_paths(spark, monkeypatch,
+                                           lambda: search(deleted, qk, k=100))
+        _assert_same(td, dist)
+        assert (lj, dj) == (0, 3)
+        assert not set(td.docids.tolist()) & set(top)
+    batch = _queries(by_df)
+    (many, mj), (many_d, _) = _both_paths(spark, monkeypatch,
+                                          lambda: search_many(deleted, batch, k=10))
+    assert mj == 0
+    for qid in batch:
+        _assert_same(many[qid], many_d[qid])
+    assert many["or"].docids.tolist() == search(deleted, q, k=10).docids.tolist()
+
+
+def test_tombstones_over_the_bound_take_distributed_path(spark, monkeypatch, idx, singles):
+    """Above the bound the live docs are not collected: the deny cogroup
+    masks them, as before the reader-resident live docs."""
+    q = " OR ".join(singles[:40])
+    deleted = idx.delete_docs(spark.range(0, 600, 2).withColumnRenamed("id", "docid"))
+    want = search(deleted, q, k=100)
+    monkeypatch.setattr(S, "LOCAL_SCORE_MAX_POSTINGS", 200)  # < 300 tombstones
+    assert deleted.deleted_docids(S.LOCAL_SCORE_MAX_POSTINGS) is None
+    _forbid_driver_scoring(monkeypatch)
+    got, jobs = _counted(spark, lambda: search(deleted, q, k=100))
+    _assert_same(got, want)
+    assert jobs == 3  # as on the forced-distributed path: the deny cogroup
+    assert len(got.docids) and not (got.docids % 2 == 0).any()
+
+
 def _forbid_driver_scoring(monkeypatch):
     def fail(*a, **kw):
         raise AssertionError("took the driver-scored path")
 
     monkeypatch.setattr(S, "_segments_on_driver", fail)
-
-
-def test_tombstoned_index_takes_distributed_path(spark, monkeypatch, idx, by_df):
-    q = _queries(by_df)["or"]
-    top = search(idx, q, k=10).docids[:3].tolist()
-    _forbid_driver_scoring(monkeypatch)
-    deleted = idx.delete_docs(spark.createDataFrame([(d,) for d in top], "docid long"))
-    td = search(deleted, q, k=10)
-    assert len(td.docids) == 10 and not set(td.docids.tolist()) & set(top)
-    many = search_many(deleted, {"q": q}, k=10)
-    assert many["q"].docids.tolist() == td.docids.tolist()
 
 
 def test_filter_docs_takes_distributed_path(spark, monkeypatch, idx, by_df):

@@ -127,6 +127,28 @@ def test_explain_sums_to_search_score(pidx):
     assert got == td32.scores[0]
 
 
+@pytest.mark.parametrize("q", ["qui*", "qu?ck OR fox", "b* AND fox", "fox^2 OR [a TO c]",
+                               "quick OR qui*"])
+def test_explain_multiterm_sums_to_search_score(pidx, q):
+    """explain plans with search's own pipeline: a wildcard/prefix/range
+    clause is constant-score, so it explains as one row worth its boost."""
+    from lucene_spark.search import explain
+
+    td = search(pidx, q, k=10, precision="float64", prune=False)
+    assert len(td.docids)
+    for docid, score in zip(td.docids.tolist(), td.scores.tolist()):
+        pdf = explain(pidx, q, docid, precision="float64")
+        assert pdf["score"].sum() == pytest.approx(score, abs=1e-12), (q, docid)
+
+
+def test_explain_and_with_absent_term_is_empty(pidx):
+    from lucene_spark.search import explain
+
+    docid = int(search(pidx, "quick", k=1).docids[0])
+    assert len(explain(pidx, "quick", docid)) == 1
+    assert explain(pidx, "quick AND zzzabsent", docid).empty
+
+
 def test_more_like_this(pidx):
     from lucene_spark.search import more_like_this, more_like_this_terms
 

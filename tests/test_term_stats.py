@@ -1,10 +1,12 @@
 """Index-resident term statistics (``Index.term_stats``): every query entry
 point reads df/cf from a once-loaded snapshot of the termdict, so a query
 launches no Spark job for its term stats — and the snapshot agrees with the
-termdict on every kind of handle.  Job counts are pinned on both scoring
-paths: distributed (2 per search(), 3 per search_many batch) and, for
-queries within ``LOCAL_SCORE_MAX_POSTINGS``, driver-scored (1 each); and for
-count_hits, sorted_topk and score_docs on a plain and a tombstoned handle."""
+termdict on every kind of handle.  Job counts are pinned on every scoring
+path: distributed (2 per search(), 3 per search_many batch); for queries
+within ``LOCAL_SCORE_MAX_POSTINGS``, driver-scored from the reader-resident
+postings when the whole index is within the bound (0 each once loaded) or
+from one collect when only the query is (1 each); and for count_hits,
+sorted_topk and score_docs on a plain and a tombstoned handle."""
 
 import importlib
 import itertools
@@ -53,7 +55,7 @@ def idx(spark):
     index.postings = index.postings.persist()
     index.termdict = index.termdict.persist()
     index.postings.count()
-    search(index, "court", k=5)  # warm: loads the snapshot once
+    search(index, "court", k=5)  # warm: loads the snapshots once
     return index
 
 
@@ -79,14 +81,38 @@ def test_search_many_launches_three_jobs(spark, idx, similarity, distributed):
     assert _jobs(spark, lambda: search_many(idx, BATCH, k=5, similarity=similarity)) == 3
 
 
+def _bound_between(monkeypatch, index, terms):
+    """Admit queries over ``terms`` (Σ df) to the driver, but not the whole
+    index: its postings are collected per query instead of resident."""
+    want = sum(term_dfs(terms, index).values())
+    assert want < int(index.term_stats().df.sum())
+    monkeypatch.setattr(S, "LOCAL_SCORE_MAX_POSTINGS", want)
+
+
+BATCH_TERMS = ["court", "planes", "w00152", "w01420"]
+
+
 @pytest.mark.parametrize("similarity", ["bm25", "lmd", "dfi_standardized"])
-def test_small_search_launches_one_job(spark, idx, similarity):
+def test_small_search_launches_one_job(spark, idx, similarity, monkeypatch):
+    _bound_between(monkeypatch, idx, ["court", "planes", "w00152"])
     assert _jobs(spark, lambda: search(idx, QUERY, k=5, similarity=similarity)) == 1
 
 
 @pytest.mark.parametrize("similarity", ["bm25", "lmd", "dfi_standardized"])
-def test_small_search_many_launches_one_job(spark, idx, similarity):
+def test_small_search_many_launches_one_job(spark, idx, similarity, monkeypatch):
+    _bound_between(monkeypatch, idx, BATCH_TERMS)
     assert _jobs(spark, lambda: search_many(idx, BATCH, k=5, similarity=similarity)) == 1
+
+
+@pytest.mark.parametrize("similarity", ["bm25", "lmd", "dfi_standardized"])
+def test_resident_search_launches_no_job(spark, idx, similarity):
+    assert idx.resident_postings(S.LOCAL_SCORE_MAX_POSTINGS) is not None
+    assert _jobs(spark, lambda: search(idx, QUERY, k=5, similarity=similarity)) == 0
+
+
+@pytest.mark.parametrize("similarity", ["bm25", "lmd", "dfi_standardized"])
+def test_resident_search_many_launches_no_job(spark, idx, similarity):
+    assert _jobs(spark, lambda: search_many(idx, BATCH, k=5, similarity=similarity)) == 0
 
 
 # --- the other entry points: count_hits, sorted_topk, score_docs ----------------
@@ -113,17 +139,26 @@ def pulsed(idx):
     handle = pulse_index(idx)
     handle.pulsed = handle.pulsed.persist()
     handle.pulsed.count()
-    handle.term_stats()  # a new handle loads its own snapshot
+    # a new handle loads its own snapshots
+    handle.resident_postings(S.LOCAL_SCORE_MAX_POSTINGS)
     return handle
 
 
-def test_pulsed_query_without_singletons_launches_one_job(spark, pulsed):
+PULSED_BATCH = {"a": "court", "b": "planes AND court", "c": "court NOT planes"}
+
+
+def test_pulsed_query_without_singletons_launches_one_job(spark, pulsed, monkeypatch):
     """The sidecar holds only df == 1 terms, so a query without one must
-    not look it up."""
-    batch = {"a": "court", "b": "planes AND court", "c": "court NOT planes"}
+    not look it up: the postings collect is its only job."""
     assert min(term_dfs(["court", "planes"], pulsed).values()) > 1
+    _bound_between(monkeypatch, pulsed, ["court", "planes"])
     assert _jobs(spark, lambda: search(pulsed, "court", k=5)) == 1
-    assert _jobs(spark, lambda: search_many(pulsed, batch, k=5)) == 1
+    assert _jobs(spark, lambda: search_many(pulsed, PULSED_BATCH, k=5)) == 1
+
+
+def test_resident_pulsed_query_without_singletons_launches_no_job(spark, pulsed):
+    assert _jobs(spark, lambda: search(pulsed, "court", k=5)) == 0
+    assert _jobs(spark, lambda: search_many(pulsed, PULSED_BATCH, k=5)) == 0
 
 
 def test_fixture_has_five_or_more_segments(idx):
@@ -185,6 +220,39 @@ def test_handles_sharing_the_termdict_share_the_snapshot(spark, small):
     deleted = small.delete_docs(spark.range(0, 40).withColumnRenamed("id", "docid"))
     assert deleted.term_stats() is snap  # handed on: no reload job
     assert add_reversed_terms(deleted).term_stats() is snap
+
+
+def test_handles_sharing_the_postings_share_the_snapshot(spark, small):
+    bound = S.LOCAL_SCORE_MAX_POSTINGS
+    snap = small.resident_postings(bound)
+    assert snap is not None
+    deleted = small.delete_docs(spark.range(0, 40).withColumnRenamed("id", "docid"))
+    assert _jobs(spark, lambda: deleted.resident_postings(bound)) == 0
+    assert deleted.resident_postings(bound) is snap
+    assert add_reversed_terms(deleted).resident_postings(bound) is snap
+    # the live docs are per handle: the tombstones differ
+    assert deleted.deleted_docids(bound).tolist() == list(range(40))
+    assert small.deleted_docids(bound).tolist() == []
+
+
+def test_resident_postings_match_the_table(small):
+    snap = small.resident_postings(S.LOCAL_SCORE_MAX_POSTINGS)
+    want = small.postings.select("term", "seg", "df_local").toPandas()
+    got = snap.table.select(["term", "seg", "df_local"]).to_pandas()
+    key = ["term", "seg"]
+    assert got.sort_values(key).reset_index(drop=True).equals(
+        want.sort_values(key).reset_index(drop=True))
+    terms = sorted(set(want["term"]))[::5] + [ABSENT]
+    part = snap.rows(terms).to_pandas()
+    assert sorted(zip(part["term"], part["seg"])) == sorted(
+        zip(*[want[want["term"].isin(terms)][c] for c in key]))
+    assert len(snap.rows([ABSENT])) == 0 and len(snap.rows([])) == 0
+
+
+def test_resident_postings_follow_the_bound(small):
+    total = int(small.term_stats().df.sum())
+    assert small.resident_postings(total) is not None
+    assert small.resident_postings(total - 1) is None
 
 
 def test_parity_multifield_index(spark):
