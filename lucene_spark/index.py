@@ -170,7 +170,8 @@ class Index:
     Reader-resident snapshots, each loaded by one collect on first use and
     reloaded when its source DataFrame is replaced: ``term_stats`` (the
     termdict, ~80 B per term), ``resident_postings`` (the whole postings
-    table, ~21 B per posting, only while the index holds at most
+    table, ~21 B per posting plus ~1.5 B per position when the index has
+    positions, only while the index holds at most
     ``search.LOCAL_SCORE_MAX_POSTINGS`` postings) and ``deleted_docids``
     (the tombstones, at most that many ids).  Once they are loaded, a
     driver-scored ``search``/``search_many`` on a small index launches no
@@ -238,8 +239,9 @@ class Index:
         None.  Loaded by one collect on first use and reloaded whenever
         ``postings`` is no longer the DataFrame it was read from; the bound is
         checked at every call, so a caller may change it.  About 21 driver
-        bytes per posting (BENCH.md), so the snapshot is bounded by the bound
-        that already caps one driver-scored query's collect."""
+        bytes per posting, plus about 1.5 per position on a positional index
+        (``pos_blob`` grows with Σ tf; BENCH.md), so the snapshot is bounded
+        by the bound that already caps one driver-scored query's collect."""
         if int(self.term_stats().df.sum()) > max_postings:
             return None
         ps = self._postings

@@ -39,8 +39,9 @@ reader-resident postings snapshot, ``Index.resident_postings``), and one
 collect of its own rows on a larger index; the distributed path launches 2
 (search) or 3 (search_many), plus one for a tombstone or filter mask.  The
 driver holds at most ``LOCAL_SCORE_MAX_POSTINGS`` postings of a query — or
-of the resident snapshot, ~21 bytes per posting (~5 MB at the bound) — and
-otherwise k rows per segment.
+of the resident snapshot, ~21 bytes per posting plus ~1.5 per position on a
+positional index (~5–6 MB at the bound, BENCH.md) — and otherwise k rows per
+segment.
 """
 
 from __future__ import annotations
@@ -2787,17 +2788,15 @@ def explain(
     k1: float = 1.2,
     b: float = 0.75,
     boosts: dict[str, float] | None = None,
-    similarity: str = "bm25",
-    analyzer=ENGLISH_STOP_WORDS,
 ) -> pd.DataFrame:
     """Per-term score breakdown for one document — the IndexSearcher.explain
     analog (search/IndexSearcher.java:714-726; BM25Similarity.explain,
     BM25Similarity.java:261-297).  Returns a pandas frame with one row per
     scanned query term present in the doc: (term, df, tf, dl, weight,
-    score), planned by ``_plan`` exactly as ``search`` plans the query
-    (expansion, boosts, similarity, per-term scorers).  A constant-score
-    clause (wildcard, prefix, range) the doc matches gives one row, under
-    its first matching term, whose weight and score are the clause's boost.
+    score), planned by ``_plan`` exactly as ``search`` plans a BM25 query
+    (expansion, boosts, per-term scorers).  A constant-score clause
+    (wildcard, prefix, range) the doc matches gives one row, under its
+    first matching term, whose weight and score are the clause's boost.
     So for term, boolean and multi-term queries the rows sum to the doc's
     ``search`` score; a phrase, synonym or span clause is shown per member
     term, each with its own term scorer.  A query that matches nothing — an
@@ -2805,7 +2804,7 @@ def explain(
     rows come from ``_driver_rows``, so a resident index explains with no
     Spark job."""
     cols = ["term", "df", "tf", "dl", "weight", "score"]
-    plan = _plan(index, query, analyzer, similarity, k1, b, precision, boosts)
+    plan = _plan(index, query, k1=k1, b=b, precision=precision, boosts=boosts)
     if plan is None:
         return pd.DataFrame(columns=cols)
     seg, local = divmod(int(docid), index.seg_size)
