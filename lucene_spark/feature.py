@@ -18,10 +18,11 @@ Score functions (FeatureField.java):
              rounding-monotone rewrite of w * S/(S+k))
   sigmoid    (float)(w * (1 - k^a / (S^a + k^a)))    (:444-450)
 
-The Spark build path: one narrow groupBy(seg) over the feature values — the
-pseudo-term's postings are segment-range partitioned exactly like text terms,
-so at 10^12 docs the feature field adds one vocabulary row per segment, not a
-new shuffle topology.
+The Spark build path: the feature values are packed into the build's partial
+chunks and encoded by its ``merge_partials_stage`` — the pseudo-term's
+postings are segment-range partitioned exactly like text terms, so at 10^12
+docs the feature field adds one vocabulary row per segment, not a new
+shuffle topology.
 """
 
 from __future__ import annotations
@@ -29,12 +30,8 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from .codecs import BLOCK_SIZE, encode_postings
-from .impacts import block_frontiers
 
 FEATURE_PREFIX = "\x00feat\x00"
 
@@ -164,50 +161,41 @@ def add_feature_field(
     unioned into the index (FeatureField indexing path: one term per field
     whose freq encodes the value).
 
-    One narrow shuffle of (docid, freq) pairs grouped by segment — feature
+    Each Arrow batch of values is packed into partial chunks and encoded by
+    the build's ``merge_partials_stage`` — one shuffle of chunks; feature
     rows land in the same docID-range segments as the text postings, so query
     kernels cogroup them with zero extra topology.  Collection statistics are
     untouched: feature freqs are score encodings, not token counts
     (FeatureField indexes with IndexOptions.DOCS_AND_FREQS but omitNorms and
     no length accounting).
     """
-    from .index import Index
+    from .index import (
+        PARTIALS_SCHEMA, Index, _pack_partials, _rollup_termdict, merge_partials_stage,
+    )
 
     seg_size = index.seg_size
     term = feature_term(name)
 
-    enc = values.select(
+    def pack(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            docid = pdf["docid"].to_numpy(dtype=np.int64)
+            o = np.argsort(docid, kind="stable")
+            docid = docid[o]
+            yield _pack_partials(
+                np.full(len(docid), term, dtype=object), docid,
+                encode_feature_np(pdf["value"].to_numpy()[o]),
+                np.ones(len(docid), dtype=np.int64),  # norm=1 (FeatureQuery.java:135)
+                seg_size,
+            )
+
+    partials = values.select(
         F.col(id_col).cast("long").alias("docid"),
         F.col(value_col).cast("double").alias("value"),
-        (F.col(id_col).cast("long") / F.lit(seg_size)).cast("long").alias("seg"),
-    )
-
-    from .index import POSTINGS_SCHEMA
-
-    def build_seg(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("docid")
-        seg = int(pdf["seg"].iloc[0])
-        local = pdf["docid"].to_numpy(dtype=np.int64) - seg * seg_size
-        freqs = encode_feature_np(pdf["value"].to_numpy())
-        dls = np.ones(len(local), dtype=np.int64)  # norm=1 (FeatureQuery.java:135)
-        e = encode_postings(local, freqs, dls)
-        imp_f, imp_dl, imp_off = block_frontiers(local, freqs, dls, BLOCK_SIZE)
-        return pd.DataFrame({
-            "term": [term], "seg": [seg], "df_local": [len(local)],
-            "cf_local": [int(freqs.sum())],
-            "nblocks": [len(local) // BLOCK_SIZE], "n_tail": [e["n_tail"]],
-            "doc_blob": [e["doc_blob"]], "freq_blob": [e["freq_blob"]],
-            "dl_blob": [e["dl_blob"]], "tail_blob": [e["tail_blob"]],
-            "pos_blob": [b""],
-            "block_last_docid": [e["block_last_docid"].tolist()],
-            "imp_freqs": [imp_f.tolist()], "imp_dls": [imp_dl.tolist()],
-            "imp_offsets": [imp_off.tolist()],
-        })
-
-    rows = enc.groupBy("seg").applyInPandas(build_seg, schema=POSTINGS_SCHEMA)
-    td_row = rows.groupBy("term").agg(
-        F.sum("df_local").alias("df"), F.sum("cf_local").alias("cf")
-    )
+    ).mapInPandas(pack, schema=PARTIALS_SCHEMA)
+    rows = merge_partials_stage(partials, seg_size)
+    td_row = _rollup_termdict(rows)
     return Index(
         docs=index.docs,
         postings=index.postings.unionByName(rows),

@@ -4,11 +4,19 @@ Dataflow (reference analog: lucene/core/.../index/IndexingChain.java:583-660 →
 FreqProxTermsWriter.java:82-137 flush → SegmentMerger.java:103-136 merge):
 
   pages ──repartitionByRange(url)──▶ deterministic global docIDs
-        ──pandas UDF analyze──▶ tokens, dl, norm
-        ──partition-local pandas groupby──▶ (term, docid, tf)   (the invert)
-        ──groupBy(term, seg) applyInPandas──▶ compressed posting rows
+        ──Arrow pass: analyze + partition-local invert──▶ packed partials
+          (one docid-sorted chunk per (term, seg) per batch — _pack_partials)
+        ──repartition(term, seg) + sort, merge_partials_stage──▶ compressed
+          posting rows (the one posting encoder, _merge_partials)
         ──postings rollup──▶ termdict (df, cf)
         ──agg──▶ stats (docCount, sumTotalTermFreq)
+
+Every other posting writer — streaming appends, compaction, the tiered
+merge, rearrangement and feature fields — packs its postings with
+``_pack_partials`` and encodes them through the same ``merge_partials_stage``
+(Lucene's SegmentMerger writes merged segments through the flush codec the
+same way); index directories are written by ``_write_segments`` and
+published by ``_commit``.
 
 Segments are *docID ranges*: seg = docid // seg_size.  This plays the role of
 Lucene's per-DWPT segments (SegmentInfos.java:113) and simultaneously solves
@@ -22,9 +30,9 @@ delta gaps fit 32 bits regardless of corpus size, mirroring Lucene's
 segment-local docIDs + docBase remapping (index/DocIDMerger.java:32).
 
 Scale notes (100 TB / 1000 executors):
-  - exactly ONE wide shuffle in the whole build — groupBy(term, seg) for the
-    segment rows — moving deduplicated (term, docid, tf) tuples; the invert
-    itself is partition-local (each doc lives in one partition);
+  - exactly ONE wide shuffle in the whole build — (term, seg) for the
+    segment rows — moving packed partial posting lists; the invert itself
+    is partition-local (each doc lives in one partition);
   - groupBy(term, seg) keys are high-cardinality and bounded-skew by the
     docID-range segmentation;
   - AQE enabled callers get runtime coalescing; partition counts derived from
@@ -423,6 +431,38 @@ PARTIALS_SCHEMA = (
 )
 
 
+def _pack_partials(term: np.ndarray, docid: np.ndarray, tf: np.ndarray, dl: np.ndarray,
+                   seg_size: int, pos: np.ndarray | None = None) -> pd.DataFrame:
+    """Posting-level arrays → packed partials (PARTIALS_SCHEMA): one chunk
+    per run of consecutive postings with the same (term, seg) and rising
+    docid, its docids segment-local.  Every writer's postings reach
+    ``merge_partials_stage`` through here; input sorted by (term, docid)
+    packs to one chunk per (term, seg), any other order only to more
+    chunks.  ``pos``: the postings' positions concatenated in posting order
+    (tf each), or None."""
+    seg = docid // seg_size
+    local = (docid - seg * seg_size).astype(np.int32)
+    tf32 = tf.astype(np.int32)
+    dl32 = dl.astype(np.int32)
+    new = np.ones(len(docid), dtype=bool)
+    new[1:] = (term[1:] != term[:-1]) | (seg[1:] != seg[:-1]) | (docid[1:] <= docid[:-1])
+    starts = np.flatnonzero(new)
+    ends = np.append(starts[1:], len(docid))
+    if pos is not None:
+        pos32 = pos.astype(np.int32)
+        pbounds = np.zeros(len(tf) + 1, dtype=np.int64)
+        np.cumsum(tf, out=pbounds[1:])
+    cols = {"term": term[starts], "seg": seg[starts], "n": (ends - starts).astype(np.int64),
+            "doc_chunk": [], "tf_chunk": [], "dl_chunk": [], "pos_chunk": []}
+    for s, e in zip(starts.tolist(), ends.tolist()):
+        cols["doc_chunk"].append(local[s:e].tobytes())
+        cols["tf_chunk"].append(tf32[s:e].tobytes())
+        cols["dl_chunk"].append(dl32[s:e].tobytes())
+        cols["pos_chunk"].append(
+            pos32[pbounds[s]: pbounds[e]].tobytes() if pos is not None else b"")
+    return pd.DataFrame(cols)
+
+
 def _docs_meta_pass(offs: list[int] | None, text_col: str, key_col: str, stopwords):
     """mapInPandas body: (text, key[, docid]) → (docid, url, dl, norm)."""
     from .analysis import analyze
@@ -464,10 +504,10 @@ def _fused_invert_pass(
     + FreqProxTermsWriter flush, IndexingChain.java:1120-1217,
     FreqProxTermsWriter.java:82-137, fused the way a DWPT fuses them).
 
-    Each emitted chunk is internally sorted by docid; chunks of one (term,
-    seg) from different batches/partitions cover disjoint docid sets, so the
-    merge stage concatenates (and only re-sorts if ranges interleave —
-    impossible under rank-assigned docids, possible with caller docids).
+    Each emitted chunk (``_pack_partials``) is internally sorted by docid;
+    the merge stage concatenates one (term, seg)'s chunks in docid order and
+    re-sorts only when their ranges interleave — impossible under
+    rank-assigned docids, possible with caller docids.
     """
     from .analysis import analyze, analyze_with_positions
 
@@ -515,36 +555,14 @@ def _fused_invert_pass(
             # positions) ascending positions per posting, all in one pass
             order = np.lexsort((docid_flat, terms))
             t_s, d_s = terms[order], docid_flat[order]
-            dl_s = dl_flat[order]
             newp = np.ones(total, dtype=bool)
             newp[1:] = (t_s[1:] != t_s[:-1]) | (d_s[1:] != d_s[:-1])
             pstarts = np.flatnonzero(newp)
-            tf = np.diff(np.append(pstarts, total))
-            t_p, d_p, dl_p = t_s[pstarts], d_s[pstarts], dl_s[pstarts]
-            seg_p = d_p // seg_size
-            local_p = (d_p - seg_p * seg_size).astype(np.int32)
-            tf32 = tf.astype(np.int32)
-            dl32 = dl_p.astype(np.int32)
-            # (term, seg) chunk boundaries over the posting-level arrays
-            newg = np.ones(len(pstarts), dtype=bool)
-            newg[1:] = (t_p[1:] != t_p[:-1]) | (seg_p[1:] != seg_p[:-1])
-            gstarts = np.flatnonzero(newg)
-            gends = np.append(gstarts[1:], len(pstarts))
-            if with_positions:
-                p_s32 = pos_flat[order].astype(np.int32)
-                flat_bounds = np.append(pstarts, total)
-            cols = {"term": t_p[gstarts], "seg": seg_p[gstarts],
-                    "n": (gends - gstarts).astype(np.int64),
-                    "doc_chunk": [], "tf_chunk": [], "dl_chunk": [], "pos_chunk": []}
-            for gs, ge in zip(gstarts.tolist(), gends.tolist()):
-                cols["doc_chunk"].append(local_p[gs:ge].tobytes())
-                cols["tf_chunk"].append(tf32[gs:ge].tobytes())
-                cols["dl_chunk"].append(dl32[gs:ge].tobytes())
-                cols["pos_chunk"].append(
-                    p_s32[flat_bounds[gs] : flat_bounds[ge]].tobytes()
-                    if with_positions else b""
-                )
-            yield pd.DataFrame(cols)
+            yield _pack_partials(
+                t_s[pstarts], d_s[pstarts], np.diff(np.append(pstarts, total)),
+                dl_flat[order[pstarts]], seg_size,
+                pos_flat[order] if with_positions else None,
+            )
 
     return run
 
@@ -674,11 +692,22 @@ def _encode_tail_groups_vec(rows, gcounts, terms, segs, docc, tfc, dlc, posc, co
     cols["imp_offsets"].extend([0, int(c)] for c in kcounts)
 
 
+def _first_docid(chunk: bytes) -> int:
+    return int.from_bytes(chunk[:4], "little")
+
+
+def _last_docid(chunk: bytes) -> int:
+    return int.from_bytes(chunk[-4:], "little")
+
+
 def _merge_partials(seg_size: int):
     """mapInPandas body over (term, seg)-sorted packed partials: concatenate
-    each group's chunks (already docid-sorted and disjoint) and run the block
-    codec — the SegmentMerger analog (SegmentMerger.java:103-136) where
-    Spark's sort-based exchange did the k-way term merge."""
+    each group's docid-sorted chunks in docid order (re-sorting the postings
+    when chunk ranges interleave) and run the block codec — the
+    SegmentMerger analog (SegmentMerger.java:103-136) where Spark's
+    sort-based exchange did the k-way term merge.  The library's one
+    posting encoder: builds, appends, merges, rearranges and feature fields
+    all write their posting rows here."""
 
     def encode(pdf: pd.DataFrame, starts: np.ndarray) -> pd.DataFrame:
         terms = pdf["term"].to_numpy()
@@ -695,39 +724,34 @@ def _merge_partials(seg_size: int):
             "tail_blob": [], "pos_blob": [], "block_last_docid": [], "imp_freqs": [],
             "imp_dls": [], "imp_offsets": [],
         }
-        # fast path: single-chunk tail-only groups with no positions — the
+        # fast path: tail-only groups (< BLOCK_SIZE postings) — the
         # overwhelming majority at web vocabularies (median df_local is tiny)
         # — encoded for ALL groups at once instead of ~400 µs of per-group
         # numpy-call overhead each (measured: this stage was 3.3 s of a
         # 7.4 s 50k-doc build before vectorization)
         fast_rows: list[int] = []
         fast_counts: list[int] = []
-        slow_groups: list[int] = []
+        slow_groups: list[list[int]] = []
         for i in range(len(starts)):
             s, e = int(bounds[i]), int(bounds[i + 1])
-            if int(ns[s:e].sum()) < BLOCK_SIZE:
-                if e - s == 1:
-                    fast_rows.append(s)
-                else:
-                    # chunk ranges are docid-disjoint; order by first docid
-                    fast_rows.extend(sorted(
-                        range(s, e),
-                        key=lambda j: int.from_bytes(docc[j][:4], "little", signed=True),
-                    ))
+            # a group's chunks in order of first docid; the fast path needs
+            # their docid ranges disjoint too, which caller docids that
+            # interleave across partitions (and remap joins) break
+            chunks = [s] if e - s == 1 else sorted(
+                range(s, e), key=lambda j: _first_docid(docc[j]))
+            if int(ns[s:e].sum()) < BLOCK_SIZE and all(
+                    _first_docid(docc[b]) > _last_docid(docc[a])
+                    for a, b in zip(chunks, chunks[1:])):
+                fast_rows.extend(chunks)
                 fast_counts.append(e - s)
             else:
-                slow_groups.append(i)
+                slow_groups.append(chunks)
         if fast_rows:
             _encode_tail_groups_vec(
                 fast_rows, fast_counts, terms, segs, docc, tfc, dlc, posc, cols
             )
-        for i in slow_groups:
-            s, e = int(bounds[i]), int(bounds[i + 1])
-            chunks = list(range(s, e))
-            if e - s > 1:
-                # order chunks by first docid (chunks are disjoint ranges
-                # under rank-assigned docids)
-                chunks.sort(key=lambda j: np.frombuffer(docc[j][:4], dtype=np.int32)[0])
+        for chunks in slow_groups:
+            s = chunks[0]
             docids = np.concatenate(
                 [np.frombuffer(docc[j], dtype=np.int32) for j in chunks]
             ).astype(np.int64)
@@ -742,14 +766,14 @@ def _merge_partials(seg_size: int):
                 pos = np.concatenate(
                     [np.frombuffer(posc[j], dtype=np.int32) for j in chunks]
                 ).astype(np.int64)
-            if e - s > 1 and np.any(np.diff(docids) <= 0):
-                # caller-assigned docids may interleave partition ranges
+            if len(chunks) > 1 and np.any(np.diff(docids) <= 0):
+                # interleaved chunk ranges: sort the postings, and each
+                # posting's positions with it
                 o = np.argsort(docids, kind="stable")
                 if has_pos:
-                    st = np.cumsum(tfs) - tfs
-                    pos = np.concatenate(
-                        [pos[st[j] : st[j] + tfs[j]] for j in o.tolist()]
-                    )
+                    st, n = (np.cumsum(tfs) - tfs)[o], tfs[o]
+                    pos = pos[np.arange(int(n.sum()))
+                              + np.repeat(st - (np.cumsum(n) - n), n)]
                 docids, tfs, dls = docids[o], tfs[o], dls[o]
             enc = encode_postings(docids, tfs, dls)
             imp_f, imp_dl, imp_off = block_frontiers(docids, tfs, dls, BLOCK_SIZE)
@@ -933,111 +957,12 @@ def merge_partials_stage(
     )
 
 
-def _encode_groups(pdf: pd.DataFrame, starts: np.ndarray, seg_size: int) -> pd.DataFrame:
-    """Encode contiguous (term, seg) group slices of a sorted frame into
-    posting rows — one output DataFrame per Arrow batch, not per group."""
-    docid = pdf["docid"].to_numpy(dtype=np.int64)
-    tfv = pdf["tf"].to_numpy(dtype=np.int64)
-    dlv = pdf["dl"].to_numpy(dtype=np.int64)
-    terms = pdf["term"].to_numpy()
-    segs = pdf["seg"].to_numpy(dtype=np.int64)
-    has_pos = "positions" in pdf.columns
-    if has_pos:
-        row_pos = pdf["positions"].to_numpy()
-        # flat positions + per-ROW start offsets so group slices are O(1)
-        pos_all = (
-            np.concatenate([np.asarray(p, dtype=np.int64) for p in row_pos])
-            if len(row_pos)
-            else np.empty(0, dtype=np.int64)
-        )
-        row_off = np.zeros(len(pdf) + 1, dtype=np.int64)
-        np.cumsum(tfv, out=row_off[1:])
-    bounds = np.append(starts, len(pdf))
-    cols: dict[str, list] = {
-        "term": [], "seg": [], "df_local": [], "cf_local": [], "nblocks": [],
-        "n_tail": [], "doc_blob": [], "freq_blob": [], "dl_blob": [],
-        "tail_blob": [], "pos_blob": [], "block_last_docid": [], "imp_freqs": [],
-        "imp_dls": [], "imp_offsets": [],
-    }
-    for i in range(len(starts)):
-        s, e = int(bounds[i]), int(bounds[i + 1])
-        seg = int(segs[s])
-        local = docid[s:e] - seg * seg_size
-        tfs = tfv[s:e]
-        dls = dlv[s:e]
-        enc = encode_postings(local, tfs, dls)
-        imp_f, imp_dl, imp_off = block_frontiers(local, tfs, dls, BLOCK_SIZE)
-        cols["term"].append(terms[s])
-        cols["seg"].append(seg)
-        cols["df_local"].append(e - s)
-        cols["cf_local"].append(int(tfs.sum()))
-        cols["nblocks"].append((e - s) // BLOCK_SIZE)
-        cols["n_tail"].append(enc["n_tail"])
-        cols["doc_blob"].append(enc["doc_blob"])
-        cols["freq_blob"].append(enc["freq_blob"])
-        cols["dl_blob"].append(enc["dl_blob"])
-        cols["tail_blob"].append(enc["tail_blob"])
-        cols["pos_blob"].append(
-            encode_positions(pos_all[row_off[s] : row_off[e]], tfs) if has_pos else b""
-        )
-        cols["block_last_docid"].append(enc["block_last_docid"].tolist())
-        cols["imp_freqs"].append(imp_f.tolist())
-        cols["imp_dls"].append(imp_dl.tolist())
-        cols["imp_offsets"].append(imp_off.tolist())
-    return pd.DataFrame(cols)
-
-
 def _group_starts(pdf: pd.DataFrame) -> np.ndarray:
     terms = pdf["term"].to_numpy()
     segs = pdf["seg"].to_numpy()
     new = np.ones(len(pdf), dtype=bool)
     new[1:] = (terms[1:] != terms[:-1]) | (segs[1:] != segs[:-1])
     return np.flatnonzero(new)
-
-
-def _build_segment_partition(seg_size: int):
-    """mapInPandas body over a (term, seg)-sorted partition: encode every
-    complete group per Arrow batch, carrying the split last group forward.
-
-    This replaces a per-group applyInPandas (one pandas invocation per tiny
-    posting list — measured ~0.45 ms/group) with numpy boundary slicing:
-    the per-group cost drops to the codec work itself.
-    """
-
-    def run(batches):
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if len(pdf) == 0:
-                continue
-            starts = _group_starts(pdf)
-            if len(starts) == 1:
-                carry = pdf
-                continue
-            last = int(starts[-1])
-            carry = pdf.iloc[last:].reset_index(drop=True)
-            yield _encode_groups(pdf.iloc[:last], starts[:-1], seg_size)
-        if carry is not None and len(carry):
-            yield _encode_groups(carry, _group_starts(carry), seg_size)
-
-    return run
-
-
-def segment_rows_stage(tf: DataFrame, seg_size: int, num_partitions: int | None = None) -> DataFrame:
-    """(term, docid, seg, tf, dl) → compressed posting rows.
-
-    THE one wide shuffle of the build: hash repartition on (term, seg) +
-    sortWithinPartitions — Spark's sort-based exchange IS the segment merge
-    (SegmentMerger.java:103-136); group encoding streams over the sorted run.
-    """
-    parts = num_partitions or tf.sparkSession.sparkContext.defaultParallelism * 2
-    return (
-        tf.repartition(parts, "term", "seg")
-        .sortWithinPartitions("term", "seg", "docid")
-        .mapInPandas(_build_segment_partition(seg_size), schema=POSTINGS_SCHEMA)
-    )
 
 
 def build_norms(docs_tok: DataFrame, seg_size: int) -> DataFrame:
@@ -1121,6 +1046,40 @@ def invert(docs_tok: DataFrame, seg_size: int) -> DataFrame:
     )
 
 
+def _index_tables(
+    base: DataFrame, offs: list[int] | None, text_col: str, key_col: str, seg_size: int,
+    stopwords, with_positions: bool, shuffle_partitions: int | None = None,
+    head_terms: list[str] | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """(docs, postings) of ``base``'s documents: the docs-metadata pass and
+    the fused invert pass over ``base`` — docids from the ``__pid`` rank
+    offsets ``offs``, or from its ``docid`` column when ``offs`` is None —
+    and the partials encoded by ``merge_partials_stage``.  The table
+    construction of ``build_index`` and of every appended segment."""
+    key_type = base.schema[key_col].dataType.simpleString()
+    docs = base.mapInPandas(
+        _docs_meta_pass(offs, text_col, key_col, stopwords),
+        schema=f"docid long, url {key_type}, dl long, norm int",
+    )
+    partials = base.mapInPandas(
+        _fused_invert_pass(offs, text_col, seg_size, stopwords, with_positions),
+        schema=PARTIALS_SCHEMA,
+    )
+    postings = merge_partials_stage(
+        partials, seg_size, num_partitions=shuffle_partitions, head_terms=head_terms,
+    )
+    return docs, postings
+
+
+def _rollup_termdict(postings: DataFrame) -> DataFrame:
+    """Global term stats rolled up from segment rows — no wide shuffle over
+    the postings themselves (TermStates.build walks segments the same way,
+    index/TermStates.java:95)."""
+    return postings.groupBy("term").agg(
+        F.sum("df_local").alias("df"), F.sum("cf_local").alias("cf")
+    )
+
+
 def build_index(
     spark: SparkSession,
     pages: DataFrame,
@@ -1171,15 +1130,6 @@ def build_index(
         # target ~8 segments per shuffle partition at small scale, 1M docs/seg at large
         seg_size = max(1024, min(1_000_000, (doc_count // 32) + 1))
 
-    key_type = base.schema[key_col].dataType.simpleString()
-    docs = base.mapInPandas(
-        _docs_meta_pass(offs, text_col, key_col, stopwords),
-        schema=f"docid long, url {key_type}, dl long, norm int",
-    )
-    partials = base.mapInPandas(
-        _fused_invert_pass(offs, text_col, seg_size, stopwords, with_positions),
-        schema=PARTIALS_SCHEMA,
-    )
     # df-sketch pre-pass → head-salted encode shuffle (north rule's explicit
     # head-term salting; ~target_sample docs analyzed, driver state ≤ n_heads).
     # Adaptive: below HEAD_SALT_MIN_DOCS the whole encode stage is a couple
@@ -1191,17 +1141,11 @@ def build_index(
         if balance_heads and doc_count >= HEAD_SALT_MIN_DOCS
         else None
     )
-    postings = merge_partials_stage(
-        partials, seg_size, num_partitions=shuffle_partitions,
-        head_terms=head_terms,
+    docs, postings = _index_tables(
+        base, offs, text_col, key_col, seg_size, stopwords, with_positions,
+        shuffle_partitions=shuffle_partitions, head_terms=head_terms,
     )
-
-    # global term stats roll up from segment rows — no extra wide shuffle
-    # over the tf table (TermStates.build walks segments the same way,
-    # index/TermStates.java:95)
-    termdict = postings.groupBy("term").agg(
-        F.sum("df_local").alias("df"), F.sum("cf_local").alias("cf")
-    )
+    termdict = _rollup_termdict(postings)
 
     # one analysis pass feeds norms; sumTotalTermFreq rolls up from the tiny
     # per-segment norms table (persisted here so the pass runs exactly once)
@@ -1392,6 +1336,61 @@ def _read_paths(df: DataFrame) -> list[str]:
     return out
 
 
+def _write_segments(out_dir: str, seg_size: int, docs: DataFrame, postings: DataFrame,
+                    norms: DataFrame | None = None, mode: str = "append") -> None:
+    """Write segments' postings, docs and norms (``build_norms`` of ``docs``
+    when None), each partitioned by seg — the per-segment files (.doc/.fdt/
+    .nvd analog) that ``tiered_compact`` swaps and ``build_or_resume``
+    prunes one segment at a time, and the layout that lets any index
+    directory take streaming appends (mixing flat files with partition dirs
+    loses rows on read).  Postings are term-sorted within files so parquet
+    min/max stats prune term lookups (the BlockTree/FST analog — SURVEY
+    §4).  The table write of ``write_index``, ``append_batch``,
+    ``build_or_resume`` and ``tiered_compact``."""
+    postings.sortWithinPartitions("term").write.mode(mode).partitionBy("seg").parquet(
+        f"{out_dir}/postings"
+    )
+    if norms is None:
+        norms = build_norms(docs, seg_size)
+    if "seg" not in docs.columns:
+        docs = docs.withColumn("seg", (F.col("docid") / F.lit(seg_size)).cast("long"))
+    docs.write.mode(mode).partitionBy("seg").parquet(f"{out_dir}/docs")
+    norms.write.mode(mode).partitionBy("seg").parquet(f"{out_dir}/norms")
+
+
+def _write_stats(out_dir: str, doc_count: int, sum_ttf: int, seg_size: int,
+                 mode: str = "overwrite") -> None:
+    SparkSession.active().createDataFrame(
+        [(int(doc_count), int(sum_ttf), int(seg_size))],
+        "doc_count long, sum_total_term_freq long, seg_size long",
+    ).write.mode(mode).parquet(f"{out_dir}/stats")
+
+
+def _commit(out_dir: str, seg_size: int) -> None:
+    """Publish an index directory's commit point from the segments on disk —
+    the segments_N analog: the termdict rolled up from its postings and the
+    collection stats (doc count, Σ dl) from its docs.  Every writer that
+    adds, merges or drops segments in place ends here."""
+    spark = SparkSession.active()
+    _rollup_termdict(spark.read.parquet(f"{out_dir}/postings")).write.mode(
+        "overwrite").parquet(f"{out_dir}/termdict")
+    row = spark.read.parquet(f"{out_dir}/docs").agg(
+        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("dl")).collect()[0]
+    _write_stats(out_dir, row["n"], row["dl"] or 0, seg_size)
+
+
+def _append_segments(base: DataFrame, out_dir: str, text_col: str, key_col: str,
+                     seg_size: int, stopwords, with_positions: bool) -> None:
+    """Index ``base`` (docid, key, text) as new segments of ``out_dir``: the
+    ``build_index`` tables of its documents, appended by
+    ``_write_segments``.  The caller publishes them with ``_commit``."""
+    docs, postings = _index_tables(
+        base, None, text_col, key_col, seg_size, stopwords, with_positions)
+    docs = docs.persist()  # feeds both the docs and the norms table
+    _write_segments(out_dir, seg_size, docs, postings)
+    docs.unpersist()
+
+
 def write_index(index: Index, out_dir: str, mode: str = "overwrite") -> None:
     """Persist the index tables. postings partitioned by seg (co-located
     reads), sorted by term within files so parquet min/max stats prune term
@@ -1415,26 +1414,10 @@ def write_index(index: Index, out_dir: str, mode: str = "overwrite") -> None:
             f"write_index: the index is read from {out_dir!r}; write it to another "
             "directory")
 
-    index.postings.sortWithinPartitions("term").write.mode(mode).partitionBy("seg").parquet(
-        f"{out_dir}/postings"
-    )
-    # docs/norms are seg-partitioned to MATCH the streaming append_batch /
-    # tiered_compact layout — a batch-written index must accept streaming
-    # appends (mixing flat files with partition dirs loses rows on read)
-    docs = index.docs
-    if "seg" not in docs.columns:
-        docs = docs.withColumn(
-            "seg", (F.col("docid") / F.lit(index.seg_size)).cast("long")
-        )
-    docs.write.mode(mode).partitionBy("seg").parquet(f"{out_dir}/docs")
+    _write_segments(out_dir, index.seg_size, index.docs, index.postings, index.norms, mode)
     index.termdict.write.mode(mode).parquet(f"{out_dir}/termdict")
-    index.norms.write.mode(mode).partitionBy("seg").parquet(f"{out_dir}/norms")
+    _write_stats(out_dir, index.doc_count, index.sum_total_term_freq, index.seg_size, mode)
     spark = index.docs.sparkSession
-    stats = spark.createDataFrame(
-        [(index.doc_count, index.sum_total_term_freq, index.seg_size)],
-        "doc_count long, sum_total_term_freq long, seg_size long",
-    )
-    stats.write.mode(mode).parquet(f"{out_dir}/stats")
     if index.field_stats:
         spark.createDataFrame(
             [(f, dc, st) for f, (dc, st) in index.field_stats.items()],
@@ -1563,30 +1546,13 @@ def build_or_resume(
     subset = pages_id.filter(
         (F.col("docid") / F.lit(seg_size)).cast("long").isin([int(s) for s in todo])
     )
-    key_type = pages.schema[key_col].dataType.simpleString()
-    docs_meta = subset.select("docid", key_col, text_col).mapInPandas(
-        _docs_meta_pass(None, text_col, key_col, stopwords),
-        schema=f"docid long, url {key_type}, dl long, norm int",
-    ).persist()
-    partials = subset.select("docid", text_col).mapInPandas(
-        _fused_invert_pass(None, text_col, seg_size, stopwords, with_positions),
-        schema=PARTIALS_SCHEMA,
-    )
-    postings = merge_partials_stage(partials, seg_size).persist()
-
-    postings.sortWithinPartitions("term").write.mode("append").partitionBy("seg").parquet(
-        f"{out_dir}/postings"
-    )
-    docs_meta.withColumn(
-        "seg", (F.col("docid") / F.lit(seg_size)).cast("long")
-    ).write.mode("append").partitionBy("seg").parquet(f"{out_dir}/docs")
-    build_norms(docs_meta, seg_size).write.mode("append").partitionBy("seg").parquet(
-        f"{out_dir}/norms"
-    )
-
+    _append_segments(subset.select("docid", key_col, text_col), out_dir, text_col,
+                     key_col, seg_size, stopwords, with_positions)
     wall = time.time() - t0
     lineage = (
-        postings.groupBy("seg")
+        spark.read.parquet(f"{out_dir}/postings")
+        .filter(F.col("seg").isin(todo))
+        .groupBy(F.col("seg").cast("long").alias("seg"))
         .agg(
             F.sum("df_local").alias("n_postings"),
             F.count(F.lit(1)).alias("n_terms"),
@@ -1598,23 +1564,7 @@ def build_or_resume(
         .withColumn("built_at", F.lit(time.strftime("%Y-%m-%dT%H:%M:%S")))
     )
     lineage.write.mode("append").parquet(lineage_path)
-
-    # global tables rebuilt from the full postings set (cheap aggregations)
-    full_post = spark.read.parquet(f"{out_dir}/postings")
-    termdict = full_post.groupBy("term").agg(
-        F.sum("df_local").alias("df"), F.sum("cf_local").alias("cf")
-    )
-    full_docs = spark.read.parquet(f"{out_dir}/docs")
-    sum_ttf = full_docs.agg(F.sum("dl")).collect()[0][0] or 0
-    n_docs = full_docs.count()
-    termdict.write.mode("overwrite").parquet(f"{out_dir}/termdict")
-    spark.createDataFrame(
-        [(n_docs, int(sum_ttf), seg_size)],
-        "doc_count long, sum_total_term_freq long, seg_size long",
-    ).write.mode("overwrite").parquet(f"{out_dir}/stats")
-
-    docs_meta.unpersist()
-    postings.unpersist()
+    _commit(out_dir, seg_size)
     return {
         "doc_count": doc_count,
         "segments": len(all_segs),
@@ -1708,9 +1658,7 @@ def split_index(index: Index, at_seg: int) -> tuple[Index, Index]:
                 docs = docs.withColumn("seg", F.col("seg") - F.lit(at_seg))
             if tomb is not None:
                 tomb = tomb.withColumn("docid", F.col("docid") - F.lit(shift))
-        termdict = post.groupBy("term").agg(
-            F.sum("df_local").alias("df"), F.sum("cf_local").alias("cf")
-        )
+        termdict = _rollup_termdict(post)
         sttf = docs.agg(F.sum("dl")).collect()[0][0]
         return Index(
             docs=docs, postings=post, termdict=termdict, norms=norms,

@@ -29,7 +29,8 @@ def pulse_index(index):
     """Build the singleton sidecar from an existing index: one narrow
     broadcast-join of the df==1 vocabulary against the postings, decoding
     each single-posting row in an Arrow pass.  Returns a new handle with
-    ``pulsed`` set (persisted by write_index, reloaded by read_index).
+    ``pulsed`` set (persisted by write_index, reloaded by read_index),
+    sharing the term-statistics and postings snapshots.
 
     Compaction/merge drops the sidecar (docids are renumbered); re-pulse
     after a merge, exactly as Lucene rebuilds term metadata at merge."""
@@ -59,12 +60,15 @@ def pulse_index(index):
             yield pd.DataFrame(out)
 
     pulsed = rows.mapInPandas(extract, schema=PULSED_SCHEMA)
-    return Index(
+    out = Index(
         docs=index.docs, postings=index.postings, termdict=index.termdict,
         norms=index.norms, doc_count=index.doc_count,
         sum_total_term_freq=index.sum_total_term_freq,
         seg_size=index.seg_size, tombstones=index.tombstones, pulsed=pulsed,
     )
+    # the termdict and postings are shared, so are their snapshots
+    out._term_stats, out._postings = index._term_stats, index._postings
+    return out
 
 
 def synthesize_posting_rows(pulsed_rows: list) -> list[dict]:

@@ -29,10 +29,12 @@ Spark shapes:
   wide shuffle as a build, n parts = n passes, faithful to the tool.
 - Rearrange is ONE pass: postings decode to flat (term, docid, tf, dl
   [, positions]) rows, join a selector-built remap (new docid =
-  seg·seg_size + rank-within-selector), and re-encode per (term, new
-  seg).  The remap rank is a window partitioned BY SELECTOR (each output
-  segment ≤ seg_size docs by construction), so no global single-partition
-  window exists; the rewrite is one corpus-wide shuffle, same as a build.
+  seg·seg_size + rank-within-selector), pack into partial chunks and
+  re-encode per (term, new seg) through the build's
+  ``merge_partials_stage`` (``streaming._remapped_postings``).  The remap
+  rank is a window partitioned BY SELECTOR (each output segment ≤
+  seg_size docs by construction), so no global single-partition window
+  exists.
 
 Divergence, documented: this engine's docids are globally segment-ranged
 (docid // seg_size == seg), so a rearranged index has contiguous docids
@@ -50,14 +52,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .index import (
-    Index,
-    build_norms,
-    read_index,
-    segment_rows_stage,
-    write_index,
-)
-from .streaming import _explode_remap_pass, _flat_schema, compact_index
+from .index import Index, _rollup_termdict, build_norms, write_index
+from .streaming import _positions_mode, _remapped_postings, compact_index
 
 
 def _split_by_keep_sets(spark: SparkSession, index: Index,
@@ -131,7 +127,6 @@ def rearrange_index(index: Index, selectors: list[DataFrame],
     engine's segments are docid ranges.
     """
     seg_size = seg_size or index.seg_size
-    spark = index.docs.sparkSession
 
     tagged = None
     for i, sel in enumerate(selectors):
@@ -158,26 +153,15 @@ def rearrange_index(index: Index, selectors: list[DataFrame],
                     f"selector {i} holds {n} docs > seg_size {seg_size}; "
                     "raise seg_size so each selector fits one segment")
 
-        has_pos = bool(
-            index.postings.filter(F.length("pos_blob") > 0).limit(1).count())
-        flat = index.postings.mapInPandas(
-            _explode_remap_pass(index.seg_size, has_pos, None, None, None),
-            schema=_flat_schema(has_pos),
-        )
-        sel_cols = ["term", F.col("new_docid").alias("docid"), "tf", "dl"]
-        if has_pos:
-            sel_cols.append("positions")
-        tf = (flat.join(remap.select("docid", "new_docid"), "docid")
-              .select(*sel_cols)
-              .withColumn("seg", (F.col("docid") / F.lit(seg_size)).cast("long")))
-        postings = segment_rows_stage(tf, seg_size)
+        postings = _remapped_postings(
+            index.postings, index.seg_size, seg_size,
+            _positions_mode(index.postings), remap=remap)
         new_docs = (index.docs.join(remap, "docid")
                     .drop("docid", "sel")
                     .withColumnRenamed("new_docid", "docid")
                     .select("docid", "url", "dl", "norm"))
         norms = build_norms(new_docs, seg_size)
-        termdict = postings.groupBy("term").agg(
-            F.sum("df_local").alias("df"), F.sum("cf_local").alias("cf"))
+        termdict = _rollup_termdict(postings)
         sum_ttf = new_docs.agg(F.sum("dl")).collect()[0][0] or 0
         return Index(
             docs=new_docs,

@@ -2319,10 +2319,13 @@ def _pulsed_rows(index: Index, terms: list[str],
     1 are looked up: ``pulse_index`` pulses no other, and a pulsed term
     whose df has grown since (``append_batch`` keeps the sidecar) must come
     from the postings.  A query without such a term launches no sidecar
-    job.  → (synthesized rows, the terms left for the big postings scan —
-    none when every term is a singleton)."""
+    job, and neither does one on an index whose postings are resident
+    (``Index.resident_postings``): the snapshot holds the df == 1 rows too.
+    → (synthesized rows, the terms left for the big postings scan — none
+    when every term is a singleton)."""
     singles = [t for t in terms if dfs[t] == 1]
-    if getattr(index, "pulsed", None) is None or not singles:
+    if (getattr(index, "pulsed", None) is None or not singles
+            or index.resident_postings(LOCAL_SCORE_MAX_POSTINGS) is not None):
         return [], terms
     from .pulsing import synthesize_posting_rows
 

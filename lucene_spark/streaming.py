@@ -7,9 +7,13 @@ openIfChanged, search/SearcherManager.java), background merges compact.
 Spark mapping: a ``foreachBatch`` sink appends one *new segment generation*
 per micro-batch — each batch's docs get docIDs above the current maxDoc
 (batch = a DWPT flush), postings/norms rows are appended under fresh seg ids,
-and stats/termdict are refreshed.  ``compact_index`` is the merge policy
-analog: rebuilds appended mini-segments into uniform docID-range segments
-(SegmentMerger.java:103-136 — here a sorted shuffle, Spark's native merge).
+and stats/termdict are refreshed (``index._commit``).  ``compact_index`` is
+the merge policy analog: rebuilds appended mini-segments into uniform
+docID-range segments (SegmentMerger.java:103-136).  Appends and merges
+write their posting rows through the batch build's encoder: appends build
+their tables as ``build_index`` does, and merges pack the remapped postings
+into the build's partial chunks, so every write has the build's one wide
+shuffle — ``merge_partials_stage``, Spark's sorted exchange as the merge.
 
 Queries over the live index see a point-in-time snapshot (parquet listing =
 the segments_N commit analog).
@@ -27,12 +31,14 @@ from pyspark.sql import functions as F
 from .analysis import ENGLISH_STOP_WORDS
 from .index import (
     PARTIALS_SCHEMA,
-    _docs_meta_pass,
-    _fused_invert_pass,
+    _append_segments,
+    _commit,
+    _pack_partials,
+    _ranged_with_offsets,
+    _write_segments,
     build_norms,
     merge_partials_stage,
     read_index,
-    segment_rows_stage,
 )
 
 
@@ -69,8 +75,9 @@ def append_batch(
 
     docIDs continue from the next fresh segment base in batch arrival order
     (Lucene's arrival-order docIDs, IndexingChain.java:583 — the batch is the
-    arrival unit).  Returns the number of docs appended.  Uses the same
-    packed-partials flush as the batch build.
+    arrival unit).  Returns the number of docs appended.  Builds its tables
+    exactly as the batch build does, writes them as seg-partitioned
+    segments and publishes the new commit point (termdict + stats).
     """
     max_doc = _next_seg_base(spark, out_dir, seg_size)
 
@@ -85,41 +92,9 @@ def append_batch(
     w = Window.orderBy(key_col)
     pages = batch_df.withColumn("docid", F.row_number().over(w) - 1 + F.lit(max_doc))
 
-    key_type = batch_df.schema[key_col].dataType.simpleString()
-    docs_meta = pages.select("docid", key_col, text_col).mapInPandas(
-        _docs_meta_pass(None, text_col, key_col, stopwords),
-        schema=f"docid long, url {key_type}, dl long, norm int",
-    ).persist()
-    partials = pages.select("docid", text_col).mapInPandas(
-        _fused_invert_pass(None, text_col, seg_size, stopwords, with_positions),
-        schema=PARTIALS_SCHEMA,
-    )
-    postings = merge_partials_stage(partials, seg_size)
-    postings.sortWithinPartitions("term").write.mode("append").partitionBy("seg").parquet(
-        f"{out_dir}/postings"
-    )
-    # docs/norms are seg-partitioned too, so the tiered merge policy can
-    # surgically rewrite a run of mini-segments (per-segment files are the
-    # _N.fdt/.nvd analog)
-    docs_meta.withColumn(
-        "seg", (F.col("docid") / F.lit(seg_size)).cast("long")
-    ).write.mode("append").partitionBy("seg").parquet(f"{out_dir}/docs")
-    build_norms(docs_meta, seg_size).write.mode("append").partitionBy("seg").parquet(
-        f"{out_dir}/norms"
-    )
-
-    # refresh commit point (stats + termdict) — the segments_N publish analog
-    full_docs = spark.read.parquet(f"{out_dir}/docs")
-    n_docs = full_docs.count()
-    sum_ttf = full_docs.agg(F.sum("dl")).collect()[0][0] or 0
-    spark.read.parquet(f"{out_dir}/postings").groupBy("term").agg(
-        F.sum("df_local").alias("df"), F.sum("cf_local").alias("cf")
-    ).write.mode("overwrite").parquet(f"{out_dir}/termdict")
-    spark.createDataFrame(
-        [(n_docs, int(sum_ttf), seg_size)],
-        "doc_count long, sum_total_term_freq long, seg_size long",
-    ).write.mode("overwrite").parquet(f"{out_dir}/stats")
-    docs_meta.unpersist()
+    _append_segments(pages.select("docid", key_col, text_col), out_dir, text_col,
+                     key_col, seg_size, stopwords, with_positions)
+    _commit(out_dir, seg_size)
     return n_batch
 
 
@@ -162,14 +137,88 @@ def _flat_schema(has_pos: bool) -> str:
     return s + ", positions array<long>" if has_pos else s
 
 
-def _explode_remap_pass(old_seg_size, has_pos, run_old, run_new, run_len):
-    """mapInPandas body: posting rows → per-posting flat arrays, numpy
-    end-to-end (no per-posting Python objects).  With broadcast remap runs
-    (run_old/new/len arrays), docids falling in remap holes (deletes / gaps)
-    are dropped here and new ids assigned inline — no join; with runs=None,
-    global docids are emitted unchanged for a downstream remap join."""
-    import numpy as np
+def _positions_mode(postings: DataFrame) -> bool:
+    """Whether a rewrite of ``postings`` keeps the positions channel: only
+    if EVERY non-empty row has it — a base built with_positions plus
+    batches appended without downgrades to no positions, as Lucene's
+    FieldInfos merge takes the minimum IndexOptions across segments
+    (index/FieldInfo.java verifySameIndexOptions)."""
+    if not postings.filter(F.length("pos_blob") > 0).limit(1).count():
+        return False
+    return not postings.filter(
+        (F.col("df_local") > 0) & (F.length("pos_blob") == 0)).limit(1).count()
 
+
+def _dense_remap(docs: DataFrame, base: int = 0):
+    """Order-preserving dense renumbering of ``docs`` (docid, url, dl, norm)
+    from docid ``base`` — DocIDMerger's docBase remap (DocIDMerger.java:32)
+    in the scalable form of ``index.assign_docids`` (range partition +
+    offset broadcast, no single-partition window).
+
+    → (``docs`` plus ``new_docid``; the remap as broadcast runs, or None;
+    the live doc count; the persisted ranged frame, for the caller to
+    unpersist).  The remap is piecewise linear: surviving docids form
+    contiguous RUNS (old_start, new_start, len) broken only by deletes and
+    inter-batch gaps, so they are collected — bounded by #holes +
+    #partitions, not corpus size — for the posting pass to apply inline.
+    Above MAX_BROADCAST_REMAP_RUNS runs the caller joins the remap frame
+    instead."""
+    parallelism = docs.sparkSession.sparkContext.defaultParallelism
+    ranged, offs, n_live = _ranged_with_offsets(docs, "docid", parallelism)
+
+    def numbered(batches):
+        pid_base = None
+        seen = 0
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            if pid_base is None:
+                pid_base = base + offs[int(pdf["__pid"].iloc[0])]
+            pdf = pdf.drop(columns=["__pid"])
+            pdf["new_docid"] = np.arange(
+                pid_base + seen, pid_base + seen + len(pdf), dtype=np.int64
+            )
+            seen += len(pdf)
+            yield pdf
+
+    def emit_runs(batches):
+        for pdf in numbered(batches):
+            d, new = pdf["docid"].to_numpy(dtype=np.int64), pdf["new_docid"].to_numpy()
+            brk = np.flatnonzero(np.diff(d) != 1) + 1
+            starts = np.concatenate([[0], brk])
+            ends = np.concatenate([brk, [len(d)]])
+            yield pd.DataFrame({
+                "old_start": d[starts], "new_start": new[starts],
+                "run_len": ends - starts,
+            })
+
+    url_t = docs.schema["url"].dataType.simpleString()
+    norm_t = docs.schema["norm"].dataType.simpleString()
+    remap = ranged.mapInPandas(
+        numbered,
+        schema=f"docid long, url {url_t}, dl long, norm {norm_t}, new_docid long",
+    )
+    # a narrow second pass over the cached ranged frame reading only docid
+    run_rows = ranged.select("docid", "__pid").mapInPandas(
+        emit_runs, schema="old_start long, new_start long, run_len long"
+    ).limit(MAX_BROADCAST_REMAP_RUNS + 1).collect()
+    runs = None
+    if len(run_rows) <= MAX_BROADCAST_REMAP_RUNS:
+        arr = np.array(sorted((r["old_start"], r["new_start"], r["run_len"])
+                              for r in run_rows), dtype=np.int64).reshape(-1, 3)
+        runs = (arr[:, 0], arr[:, 1], arr[:, 2])
+    return remap, runs, n_live, ranged
+
+
+def _explode_remap_pass(old_seg_size, has_pos, seg_size=None, runs=None):
+    """mapInPandas body: posting rows → their postings as flat numpy arrays
+    (no per-posting Python objects).  With broadcast remap ``runs``
+    (run_old, run_new, run_len), docids falling in remap holes (deletes /
+    gaps) are dropped, new ids assigned inline — no join — and each batch
+    is packed into PARTIALS_SCHEMA chunks at ``seg_size`` (the remap keeps
+    docid order, so an old row packs to one chunk per new segment it
+    spans).  With runs=None, global docids are emitted unchanged, one row
+    per posting (``_flat_schema``), for a downstream remap join."""
     from .kernel import TermPostings
 
     def run(batches):
@@ -182,7 +231,8 @@ def _explode_remap_pass(old_seg_size, has_pos, run_old, run_new, run_len):
                 d, f, dls = tp.decode()
                 d = d + segs[i] * old_seg_size
                 pos = tp.positions_flat() if has_pos else None
-                if run_old is not None:
+                if runs is not None:
+                    run_old, run_new, run_len = runs
                     ri = np.searchsorted(run_old, d, side="right") - 1
                     ric = np.clip(ri, 0, max(len(run_old) - 1, 0))
                     keep = (ri >= 0) & (d - run_old[ric] < run_len[ric])
@@ -193,27 +243,72 @@ def _explode_remap_pass(old_seg_size, has_pos, run_old, run_new, run_len):
                     if len(d) == 0:
                         continue
                     d = run_new[ric] + (d - run_old[ric])
-                a_term.append(np.repeat(terms[i], len(d)))
+                a_term.append(np.full(len(d), terms[i], dtype=object))
                 a_doc.append(d)
                 a_tf.append(f)
                 a_dl.append(dls)
                 if pos is not None:
-                    # list-of-ndarray views per posting — Arrow serializes
-                    # without materializing per-int Python objects
-                    a_pos.extend(np.split(pos, np.cumsum(f)[:-1]))
+                    a_pos.append(pos)
             if not a_doc:
                 continue
-            cols = {
-                "term": np.concatenate(a_term),
-                "docid": np.concatenate(a_doc),
-                "tf": np.concatenate(a_tf),
-                "dl": np.concatenate(a_dl),
-            }
+            term, docid = np.concatenate(a_term), np.concatenate(a_doc)
+            tf, dl = np.concatenate(a_tf), np.concatenate(a_dl)
+            pos = np.concatenate(a_pos) if has_pos else None
+            if runs is not None:
+                yield _pack_partials(term, docid, tf, dl, seg_size, pos)
+                continue
+            cols = {"term": term, "docid": docid, "tf": tf, "dl": dl}
             if has_pos:
-                cols["positions"] = a_pos
+                # list-of-ndarray views per posting — Arrow serializes
+                # without materializing per-int Python objects
+                cols["positions"] = np.split(pos, np.cumsum(tf)[:-1])
             yield pd.DataFrame(cols)
 
     return run
+
+
+def _pack_joined(seg_size: int, has_pos: bool):
+    """mapInPandas body: remap-joined posting rows (term, docid, tf, dl
+    [, positions]) → PARTIALS_SCHEMA chunks, each Arrow batch sorted by
+    (term, docid) first so it packs to one chunk per (term, seg)."""
+
+    def run(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            term = pdf["term"].to_numpy()
+            docid = pdf["docid"].to_numpy(dtype=np.int64)
+            o = np.lexsort((docid, term))
+            pos = (np.concatenate(pdf["positions"].to_numpy()[o]).astype(np.int64)
+                   if has_pos else None)
+            yield _pack_partials(term[o], docid[o], pdf["tf"].to_numpy(dtype=np.int64)[o],
+                                 pdf["dl"].to_numpy(dtype=np.int64)[o], seg_size, pos)
+
+    return run
+
+
+def _remapped_postings(postings: DataFrame, old_seg_size: int, seg_size: int,
+                       has_pos: bool, runs=None, remap: DataFrame | None = None) -> DataFrame:
+    """Posting rows re-encoded under a docid remap at ``seg_size`` — the
+    rewrite of every merge (``compact_index``, ``tiered_compact``,
+    ``rearrange_index``).  With broadcast ``runs`` the remap is applied
+    inline by the decode pass; otherwise the postings explode to one row
+    per posting and join ``remap`` (docid → new_docid; unmatched postings
+    drop), and each Arrow batch of the join is packed.  Either way the
+    chunks go through the build's ``merge_partials_stage``: one encoder,
+    and a shuffle of chunks, not postings."""
+    if runs is not None:
+        partials = postings.mapInPandas(
+            _explode_remap_pass(old_seg_size, has_pos, seg_size, runs),
+            schema=PARTIALS_SCHEMA,
+        )
+    else:
+        flat = postings.mapInPandas(
+            _explode_remap_pass(old_seg_size, has_pos), schema=_flat_schema(has_pos))
+        joined = (flat.join(remap.select("docid", "new_docid"), "docid")
+                  .drop("docid").withColumnRenamed("new_docid", "docid"))
+        partials = joined.mapInPandas(_pack_joined(seg_size, has_pos), schema=PARTIALS_SCHEMA)
+    return merge_partials_stage(partials, seg_size)
 
 
 def compact_index(spark: SparkSession, in_dir: str, out_dir: str, seg_size: int = 4096):
@@ -222,21 +317,17 @@ def compact_index(spark: SparkSession, in_dir: str, out_dir: str, seg_size: int 
     the merge is where Lucene physically reclaims deletes
     (SegmentMerger.java:103-136 consults liveDocs via MergeState).
 
-    docIDs are remapped dense preserving global order (DocIDMerger.java:32
-    docBase remapping).  The remap is piecewise-linear: surviving docids form
-    contiguous RUNS broken only by deletes and inter-batch gaps, so instead
-    of a posting-granularity join (an extra corpus-wide shuffle), the runs
-    (old_start, new_start, len) are collected — bounded by #holes +
-    #partitions, NOT corpus size — and broadcast into the posting decode
-    pass.  Compaction then has exactly ONE wide shuffle (the (term, seg)
-    regroup), same as the build.  If deletes are so pathological that runs
-    exceed MAX_BROADCAST_REMAP_RUNS, falls back to the join path.
+    docIDs are remapped dense preserving global order (``_dense_remap``).
+    The remap normally travels as broadcast runs into the posting decode
+    pass, so compaction has exactly ONE wide shuffle — the build's
+    ``merge_partials_stage``, moving packed (term, seg) chunks; if deletes
+    are so pathological that runs exceed MAX_BROADCAST_REMAP_RUNS, the
+    postings join the remap frame first (``_remapped_postings``).
 
     Collection stats are recomputed over survivors (Lucene: merged segment
     stats exclude dropped docs).  Mixed positions (a base built
     with_positions + batches appended without) downgrade the merged index to
-    no-positions — Lucene resolves conflicting IndexOptions by taking the
-    minimum (index/FieldInfo.java verifySameIndexOptions / FieldInfos merge).
+    no-positions (``_positions_mode``).
 
     No re-tokenization: (term, docid, tf, dl) is fully recoverable from the
     segment rows + norms.
@@ -246,10 +337,7 @@ def compact_index(spark: SparkSession, in_dir: str, out_dir: str, seg_size: int 
     raises ``ValueError`` before anything is read or written.
     """
     import os
-
-    import numpy as np
-    from .index import _ranged_with_offsets
-    from .kernel import TermPostings
+    import shutil
 
     if os.path.realpath(in_dir) == os.path.realpath(out_dir):
         raise ValueError(
@@ -259,115 +347,17 @@ def compact_index(spark: SparkSession, in_dir: str, out_dir: str, seg_size: int 
     live = old.docs.select("docid", "url", "dl", "norm")
     if old.tombstones is not None:
         live = live.join(old.tombstones.select("docid"), "docid", "left_anti")
-    # dense rank over surviving docid — scalable form (range partition +
-    # offset broadcast, same as index.assign_docids), NOT a global
-    # single-partition window: compaction runs over the whole corpus
-    parallelism = spark.sparkContext.defaultParallelism
-    ranged, offs, n_live = _ranged_with_offsets(live, "docid", parallelism)
-
-    def add_new_ids(batches):
-        pid_base = None
-        seen = 0
-        for pdf in batches:
-            if pid_base is None and len(pdf):
-                pid_base = offs[int(pdf["__pid"].iloc[0])]
-            pdf = pdf.drop(columns=["__pid"])
-            pdf["new_docid"] = np.arange(
-                pid_base + seen, pid_base + seen + len(pdf), dtype=np.int64
-            )
-            seen += len(pdf)
-            yield pdf
-
-    url_t = old.docs.schema["url"].dataType.simpleString()
-    norm_t = old.docs.schema["norm"].dataType.simpleString()
-    remap = ranged.mapInPandas(
-        add_new_ids,
-        schema=f"docid long, url {url_t}, dl long, norm {norm_t}, new_docid long",
-    )
-
-    # remap runs: contiguous (old_start, new_start, len) stretches per
-    # partition — a narrow second pass over the cached ranged frame reading
-    # only docid
-    def emit_runs(batches):
-        pid_base = None
-        seen = 0
-        for pdf in batches:
-            if pid_base is None and len(pdf):
-                pid_base = offs[int(pdf["__pid"].iloc[0])]
-            d = pdf["docid"].to_numpy(dtype=np.int64)
-            if len(d) == 0:
-                continue
-            new = np.arange(pid_base + seen, pid_base + seen + len(d), dtype=np.int64)
-            seen += len(d)
-            brk = np.flatnonzero(np.diff(d) != 1) + 1
-            starts = np.concatenate([[0], brk])
-            ends = np.concatenate([brk, [len(d)]])
-            yield pd.DataFrame({
-                "old_start": d[starts], "new_start": new[starts],
-                "run_len": ends - starts,
-            })
-
-    run_rows = ranged.select("docid", "__pid").mapInPandas(
-        emit_runs, schema="old_start long, new_start long, run_len long"
-    ).limit(MAX_BROADCAST_REMAP_RUNS + 1).collect()
-
-    old_seg_size = old.seg_size
-
-    # positions channel survives only if EVERY non-empty row has it
-    # (FieldInfos merge takes the minimum IndexOptions across segments)
-    any_pos = bool(old.postings.filter(F.length("pos_blob") > 0).limit(1).count())
-    mixed = any_pos and bool(
-        old.postings.filter(
-            (F.col("df_local") > 0) & (F.length("pos_blob") == 0)
-        ).limit(1).count()
-    )
-    has_pos = any_pos and not mixed
-
-    use_runs = len(run_rows) <= MAX_BROADCAST_REMAP_RUNS
-    if use_runs:
-        runs = sorted((r["old_start"], r["new_start"], r["run_len"]) for r in run_rows)
-        run_old = np.array([r[0] for r in runs], dtype=np.int64)
-        run_new = np.array([r[1] for r in runs], dtype=np.int64)
-        run_len = np.array([r[2] for r in runs], dtype=np.int64)
-    else:
-        run_old = run_new = run_len = None
-
-    flat = old.postings.mapInPandas(
-        _explode_remap_pass(
-            old_seg_size, has_pos,
-            run_old if use_runs else None, run_new, run_len,
-        ),
-        schema=_flat_schema(has_pos),
-    )
-    if use_runs:
-        tf = flat.withColumn("seg", (F.col("docid") / F.lit(seg_size)).cast("long"))
-    else:
-        sel_cols = ["term", F.col("new_docid").alias("docid"), "tf", "dl"]
-        if has_pos:
-            sel_cols.append("positions")
-        tf = (
-            flat.join(remap.select("docid", "new_docid"), "docid")
-            .select(*sel_cols)
-            .withColumn("seg", (F.col("docid") / F.lit(seg_size)).cast("long"))
-        )
-    postings = segment_rows_stage(tf, seg_size)
+    remap, runs, _, ranged = _dense_remap(live)
+    postings = _remapped_postings(old.postings, old.seg_size, seg_size,
+                                  _positions_mode(old.postings), runs, remap)
     postings.sortWithinPartitions("term").write.mode("overwrite").partitionBy("seg").parquet(
         f"{out_dir}/postings"
     )
     new_docs = remap.select(F.col("new_docid").alias("docid"), "url", "dl", "norm")
     new_docs.write.mode("overwrite").parquet(f"{out_dir}/docs")
     build_norms(new_docs, seg_size).write.mode("overwrite").parquet(f"{out_dir}/norms")
-    new_docs.sparkSession.read.parquet(f"{out_dir}/postings").groupBy("term").agg(
-        F.sum("df_local").alias("df"), F.sum("cf_local").alias("cf")
-    ).write.mode("overwrite").parquet(f"{out_dir}/termdict")
     # stats over SURVIVORS (merged-away deletes leave the statistics)
-    sum_ttf = spark.read.parquet(f"{out_dir}/docs").agg(F.sum("dl")).collect()[0][0] or 0
-    spark.createDataFrame(
-        [(n_live, int(sum_ttf), seg_size)],
-        "doc_count long, sum_total_term_freq long, seg_size long",
-    ).write.mode("overwrite").parquet(f"{out_dir}/stats")
-    import shutil
-
+    _commit(out_dir, seg_size)
     shutil.rmtree(f"{out_dir}/tombstones", ignore_errors=True)
     ranged.unpersist()
     return read_index(spark, out_dir)
@@ -429,9 +419,6 @@ def tiered_compact(
     import os
     import shutil
 
-    import numpy as np
-    from .index import _ranged_with_offsets
-
     stats = spark.read.parquet(f"{out_dir}/stats").collect()[0]
     seg_size = int(stats["seg_size"])
     sizes = {
@@ -459,84 +446,15 @@ def tiered_compact(
         docs_run = docs_run.join(tomb.select("docid"), "docid", "left_anti")
         purged = before - docs_run.count()
 
-    base = run[0] * seg_size
-    parallelism = spark.sparkContext.defaultParallelism
-    ranged, offs, n_live = _ranged_with_offsets(docs_run, "docid", parallelism)
-
-    def add_new_ids(batches):
-        pid_base = None
-        seen = 0
-        for pdf in batches:
-            if pid_base is None and len(pdf):
-                pid_base = base + offs[int(pdf["__pid"].iloc[0])]
-            pdf = pdf.drop(columns=["__pid"])
-            pdf["new_docid"] = np.arange(
-                pid_base + seen, pid_base + seen + len(pdf), dtype=np.int64
-            )
-            seen += len(pdf)
-            yield pdf
-
-    def emit_runs(batches):
-        pid_base = None
-        seen = 0
-        for pdf in batches:
-            if pid_base is None and len(pdf):
-                pid_base = base + offs[int(pdf["__pid"].iloc[0])]
-            d = pdf["docid"].to_numpy(dtype=np.int64)
-            if len(d) == 0:
-                continue
-            new = np.arange(pid_base + seen, pid_base + seen + len(d), dtype=np.int64)
-            seen += len(d)
-            brk = np.flatnonzero(np.diff(d) != 1) + 1
-            starts = np.concatenate([[0], brk])
-            ends = np.concatenate([brk, [len(d)]])
-            yield pd.DataFrame({
-                "old_start": d[starts], "new_start": new[starts],
-                "run_len": ends - starts,
-            })
-
-    url_t = docs_run.schema["url"].dataType.simpleString()
-    norm_t = docs_run.schema["norm"].dataType.simpleString()
-    remap = ranged.mapInPandas(
-        add_new_ids,
-        schema=f"docid long, url {url_t}, dl long, norm {norm_t}, new_docid long",
-    )
-    run_rows = ranged.select("docid", "__pid").mapInPandas(
-        emit_runs, schema="old_start long, new_start long, run_len long"
-    ).collect()
-    runs = sorted((r["old_start"], r["new_start"], r["run_len"]) for r in run_rows)
-    run_old = np.array([r[0] for r in runs], dtype=np.int64)
-    run_new = np.array([r[1] for r in runs], dtype=np.int64)
-    run_len = np.array([r[2] for r in runs], dtype=np.int64)
-
+    remap, runs, n_live, ranged = _dense_remap(docs_run, base=run[0] * seg_size)
     post_run = spark.read.parquet(f"{out_dir}/postings").filter(seg_col)
-    any_pos = bool(post_run.filter(F.length("pos_blob") > 0).limit(1).count())
-    mixed = any_pos and bool(
-        post_run.filter(
-            (F.col("df_local") > 0) & (F.length("pos_blob") == 0)
-        ).limit(1).count()
-    )
-    has_pos = any_pos and not mixed
-
-    flat = post_run.mapInPandas(
-        _explode_remap_pass(seg_size, has_pos, run_old, run_new, run_len),
-        schema=_flat_schema(has_pos),
-    )
-    tf = flat.withColumn("seg", (F.col("docid") / F.lit(seg_size)).cast("long"))
-    new_postings = segment_rows_stage(tf, seg_size)
+    new_postings = _remapped_postings(post_run, seg_size, seg_size,
+                                      _positions_mode(post_run), runs, remap)
 
     staging = f"{out_dir}/_merging"
     shutil.rmtree(staging, ignore_errors=True)
-    new_postings.sortWithinPartitions("term").write.mode("overwrite").partitionBy(
-        "seg"
-    ).parquet(f"{staging}/postings")
     new_docs = remap.select(F.col("new_docid").alias("docid"), "url", "dl", "norm")
-    new_docs.withColumn(
-        "seg", (F.col("docid") / F.lit(seg_size)).cast("long")
-    ).write.mode("overwrite").partitionBy("seg").parquet(f"{staging}/docs")
-    build_norms(new_docs, seg_size).write.mode("overwrite").partitionBy("seg").parquet(
-        f"{staging}/norms"
-    )
+    _write_segments(staging, seg_size, new_docs, new_postings, mode="overwrite")
 
     # swap: drop the run's old partitions, move staged ones in
     for table in ("postings", "docs", "norms"):
@@ -549,16 +467,7 @@ def tiered_compact(
     shutil.rmtree(staging, ignore_errors=True)
 
     # refresh the commit point; stats/termdict change only if deletes purged
-    full_docs = spark.read.parquet(f"{out_dir}/docs")
-    n_docs = full_docs.count()
-    sum_ttf = full_docs.agg(F.sum("dl")).collect()[0][0] or 0
-    spark.read.parquet(f"{out_dir}/postings").groupBy("term").agg(
-        F.sum("df_local").alias("df"), F.sum("cf_local").alias("cf")
-    ).write.mode("overwrite").parquet(f"{out_dir}/termdict")
-    spark.createDataFrame(
-        [(n_docs, int(sum_ttf), seg_size)],
-        "doc_count long, sum_total_term_freq long, seg_size long",
-    ).write.mode("overwrite").parquet(f"{out_dir}/stats")
+    _commit(out_dir, seg_size)
     if tomb is not None and purged:
         # purged tombstones leave the liveDocs table; others stay
         remaining = tomb.join(

@@ -136,11 +136,17 @@ def test_vectorized_tail_encode_byte_identical(spark):
     from lucene_spark.index import build_index
     from lucene_spark.kernel import TermPostings
 
-    pages = spark.createDataFrame(generate_pages(3000, seed=9)).repartition(8)
-    idx = build_index(spark, pages, seg_size=300)
-    for r in idx.postings.collect():
+    pdf = generate_pages(3000, seed=9)
+    pdf["docid"] = np.arange(len(pdf))
+    pages = spark.createDataFrame(pdf).repartition(8)
+    # rank-assigned docids, and caller docids that the round-robin
+    # partitions interleave (each (term, seg) gets overlapping chunks)
+    rows = (build_index(spark, pages, seg_size=300).postings.collect()
+            + build_index(spark, pages, seg_size=300, docid_col="docid").postings.collect())
+    for r in rows:
         rd = r.asDict()
         d, f, dl = TermPostings(rd, 300).decode()
+        assert np.all(np.diff(d) > 0), rd["term"]
         enc = encode_postings(d, f, dl)
         imp_f, imp_dl, imp_off = block_frontiers(d, f, dl, BLOCK_SIZE)
         assert bytes(rd["tail_blob"]) == enc["tail_blob"], rd["term"]
@@ -152,6 +158,37 @@ def test_vectorized_tail_encode_byte_identical(spark):
         assert list(rd["imp_dls"]) == imp_dl.tolist()
         assert list(rd["imp_offsets"]) == imp_off.tolist()
         assert rd["df_local"] == len(d) and rd["cf_local"] == int(f.sum())
+
+
+def _apple_banana(spark, docid_order):
+    """60 one-segment docs, 30 per partition in ``docid_order``; docs
+    0..39 hold ``apple``, every third of them ``banana`` too."""
+    rows = [(f"u{d:02d}", "apple " * (d < 40) + ("banana" if d % 3 == 0 else "cherry"), d)
+            for d in docid_order]
+    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),
+                                 "url string, text string, docid long")
+
+
+def test_interleaved_caller_docids_merge_sorted(spark):
+    """Caller docids whose partitions interleave (evens in one, odds in the
+    other) give one (term, seg) two chunks with overlapping docid ranges:
+    the merge must sort their postings, not concatenate the chunks, or
+    ``apple`` decodes unsorted and the kernel's searchsorted intersects
+    wrongly."""
+    from lucene_spark.index import build_index
+    from lucene_spark.kernel import TermPostings
+    from lucene_spark.search import search
+
+    contiguous = build_index(spark, _apple_banana(spark, range(60)), docid_col="docid")
+    interleaved = build_index(spark, _apple_banana(spark, [*range(0, 60, 2), *range(1, 60, 2)]),
+                              docid_col="docid")
+    row = interleaved.postings.filter("term = 'apple'").collect()[0]
+    d, _, _ = TermPostings(row.asDict(), interleaved.seg_size).decode()
+    assert d.tolist() == list(range(40))
+    a = search(interleaved, "apple AND banana", k=10)
+    b = search(contiguous, "apple AND banana", k=10)
+    assert a.docids.tolist() == b.docids.tolist()
+    assert a.scores.tobytes() == b.scores.tobytes()
 
 
 def test_vectorized_positions_encode_byte_identical(spark):

@@ -79,7 +79,7 @@ def pulsed(idx):
     p = pulse_index(idx)
     p.pulsed = p.pulsed.persist()
     p.pulsed.count()
-    p.resident_postings(S.LOCAL_SCORE_MAX_POSTINGS)  # a new handle: its own snapshots
+    p.resident_postings(S.LOCAL_SCORE_MAX_POSTINGS)  # handed on by pulse_index: no job
     return p
 
 
@@ -167,8 +167,9 @@ def test_pulsed_index_parity(spark, monkeypatch, pulsed, by_df, singles):
         spark, monkeypatch, lambda: search(pulsed, q, k=100))
     assert len(local.docids) > 0
     _assert_same(local, dist)
-    # the sidecar lookup is one job on both paths; the postings are resident
-    assert (lj, dj) == (1, 3)
+    # the resident postings hold the df == 1 rows: no sidecar lookup on the
+    # driver path; the distributed path still reads the sidecar (1 job)
+    assert (lj, dj) == (0, 3)
     (many, _), (many_d, _) = _both_paths(
         spark, monkeypatch,
         lambda: search_many(pulsed, {"mixed": q, "frequent": by_df[2]}, k=50))
@@ -182,12 +183,18 @@ def test_all_pulsed_query_parity(spark, monkeypatch, pulsed, singles):
         spark, monkeypatch, lambda: search(pulsed, q, k=10))
     assert len(local.docids) == 5
     _assert_same(local, dist)
-    # no postings scan at all: the sidecar collect is the only job
-    assert lj == 1 and dj == 3
+    # resident postings: no job; distributed: the sidecar collect + 2
+    assert lj == 0 and dj == 3
     (many, mj), (many_d, _) = _both_paths(
         spark, monkeypatch, lambda: search_many(pulsed, {"s": q}, k=10))
     _assert_same(many["s"], many_d["s"])
-    assert mj == 1
+    assert mj == 0
+
+
+def test_pulse_index_hands_on_snapshots(idx):
+    p = pulse_index(idx)
+    assert p._term_stats is idx._term_stats is not None
+    assert p._postings is idx._postings is not None
 
 
 def test_bound_is_inclusive_sum_of_df(spark, monkeypatch, idx, by_df):

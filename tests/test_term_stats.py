@@ -139,7 +139,7 @@ def pulsed(idx):
     handle = pulse_index(idx)
     handle.pulsed = handle.pulsed.persist()
     handle.pulsed.count()
-    # a new handle loads its own snapshots
+    # pulse_index hands the snapshots on; loads them if idx had none
     handle.resident_postings(S.LOCAL_SCORE_MAX_POSTINGS)
     return handle
 
