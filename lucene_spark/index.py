@@ -1346,7 +1346,7 @@ def _write_segments(out_dir: str, seg_size: int, docs: DataFrame, postings: Data
     loses rows on read).  Postings are term-sorted within files so parquet
     min/max stats prune term lookups (the BlockTree/FST analog — SURVEY
     §4).  The table write of ``write_index``, ``append_batch``,
-    ``build_or_resume`` and ``tiered_compact``."""
+    ``build_or_resume``, ``compact_index`` and ``tiered_compact``."""
     postings.sortWithinPartitions("term").write.mode(mode).partitionBy("seg").parquet(
         f"{out_dir}/postings"
     )

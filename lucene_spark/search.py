@@ -26,7 +26,11 @@ traced in SURVEY §3.1) with only the collector varying:
      ``filter_docs`` runs the same closure on the driver (IndexSearcher
      runs leaves that fit one slice on the calling thread), its rows from
      ``_driver_rows`` and its tombstones from the reader-resident live docs
-     (``Index.deleted_docids``, at most that many ids);
+     (``Index.deleted_docids``, at most that many ids).  That driver path
+     builds no pandas frame: the Arrow rows are grouped by segment into
+     term → row dicts, and each segment's hits come back as plain
+     (qid, docid, score) arrays; only the distributed executor wraps them
+     in the frame applyInPandas needs;
   4. reduce: each entry point's own collector and its own Spark action —
      top-k by (score desc, docID asc) (TopDocs.java:93-120; segments are
      docID ranges so docBase order == docID order), a per-query window, a
@@ -2347,43 +2351,68 @@ def _posting_rows_df(index: Index, terms: list[str], synth: list[dict]) -> DataF
     return rows
 
 
-_DTYPES = {"string": object, "long": "int64", "double": "float64"}
+_DTYPES = {"string": object, "long": np.int64, "double": np.float64}
+
+
+def _fields(schema: str) -> list[tuple[str, type]]:
+    """``"name type, ..."`` → [(name, numpy dtype)]."""
+    return [(n, _DTYPES[t]) for n, t in (f.split() for f in schema.split(","))]
+
+
+def _rows(columns: dict) -> list[dict]:
+    """Posting rows given column-wise (name → values) → one dict per row, the
+    rows ``TermPostings`` decodes — the row builder of both executors."""
+    names = list(columns)
+    return [dict(zip(names, vals)) for vals in zip(*columns.values())]
+
+
+def _arrow_rows(table) -> list[dict]:
+    """The rows of an Arrow table from ``_driver_rows`` (none for None):
+    list and binary columns stay numpy arrays and bytes, no pandas."""
+    if table is None:
+        return []
+    return _rows({c: table.column(c).to_numpy(zero_copy_only=False)
+                  for c in table.column_names})
 
 
 def _segment_runner(schema: str, run):
-    """``run(seg, term_rows, allow, deny)`` → the group function both
-    executors call once per segment with its posting rows (and its sorted
-    local allow/deny docids).  A group without postings, or with nothing
-    allowed, yields the empty frame of ``schema`` without calling ``run``."""
-    empty = pd.DataFrame({c: pd.Series(dtype=_DTYPES[t])
-                          for c, t in (f.split() for f in schema.split(","))})
+    """The group function the distributed executor calls once per segment
+    with its posting rows (and its sorted local allow/deny docids): the
+    rows go column-wise into the term → row dicts of ``run(seg, term_rows,
+    allow, deny)``, and the arrays it returns, one per column of
+    ``schema``, into the pandas frame applyInPandas needs.  A group without
+    postings, or with nothing allowed, yields the empty frame without
+    calling ``run``."""
+    fields = _fields(schema)
 
     def run_group(post_pdf: pd.DataFrame, allow=None, deny=None) -> pd.DataFrame:
         if len(post_pdf) == 0 or (allow is not None and len(allow) == 0):
-            return empty
-        term_rows = {r["term"]: r for r in post_pdf.to_dict("records")}
-        return run(int(post_pdf["seg"].iloc[0]), term_rows, allow, deny)
+            cols = [np.empty(0, dtype) for _, dtype in fields]
+        else:
+            rows = _rows({c: post_pdf[c].to_numpy() for c in post_pdf.columns})
+            cols = run(int(rows[0]["seg"]), {r["term"]: r for r in rows}, allow, deny)
+        return pd.DataFrame({n: c for (n, _), c in zip(fields, cols)})
 
     return run_group
 
 
 def _segments_on_driver(table, synth: list[dict], schema: str, run,
-                        deny: np.ndarray, seg_size: int) -> pd.DataFrame:
+                        deny: np.ndarray, seg_size: int) -> list[np.ndarray]:
     """Driver path: the posting rows (an Arrow table from ``_driver_rows``,
     or None when every term was pulsed) plus the synthesized pulsed rows,
-    grouped by segment and handed to ``run`` as on the distributed path,
-    each with its segment's slice of the sorted tombstoned docids ``deny``
-    as local docids.  → the concatenated results."""
-    run_group = _segment_runner(schema, run)
-    parts = [] if table is None else [table.to_pandas()]
-    if synth:
-        parts.append(pd.DataFrame(synth))
-    pdf = pd.concat(parts, ignore_index=True)
-    out = []
-    for seg, g in pdf.groupby("seg", sort=False):
+    grouped by segment into term → row and handed to ``run`` as on the
+    distributed path, each with its segment's slice of the sorted tombstoned
+    docids ``deny`` as local docids.  → one array per column of ``schema``,
+    concatenated over the segments."""
+    groups: dict[int, dict[str, dict]] = {}
+    for r in _arrow_rows(table) + synth:
+        groups.setdefault(int(r["seg"]), {})[r["term"]] = r
+    parts = []
+    for seg, term_rows in groups.items():
         lo, hi = np.searchsorted(deny, [seg * seg_size, (seg + 1) * seg_size])
-        out.append(run_group(g, None, deny[lo:hi] - seg * seg_size if hi > lo else None))
-    return pd.concat(out or [run_group(pdf.iloc[:0])], ignore_index=True)
+        parts.append(run(seg, term_rows, None, deny[lo:hi] - seg * seg_size if hi > lo else None))
+    return [np.concatenate([p[i] for p in parts] or [np.empty(0, dtype)])
+            for i, (_, dtype) in enumerate(_fields(schema))]
 
 
 def _live_mask(index: Index, filter_docs: DataFrame | None = None):
@@ -2448,7 +2477,7 @@ def _topk_segment(seg_size: int, queries: dict[str, tuple], scorers: dict,
 
     def run(seg, term_rows, allow, deny):
         tps = {t: TermPostings(r, seg_size) for t, r in term_rows.items()}
-        out_q, out_d, out_s = [], [], []
+        out_q, out_d, out_s = [np.empty(0, object)], [np.empty(0, np.int64)], [np.empty(0)]
         for qid, (node, terms) in queries.items():
             sub = {t: tps[t] for t in terms if t in tps}
             if not sub:
@@ -2459,14 +2488,10 @@ def _topk_segment(seg_size: int, queries: dict[str, tuple], scorers: dict,
             d, s = segment_topk(node, sub, scorers, seg_size, ks[qid],
                                 precision=precision, prune=prune, allow=allow, deny=deny,
                                 after=None if a is None else (a[0], a[1] - seg * seg_size))
-            out_q.extend([qid] * len(d))
+            out_q.append(np.full(len(d), qid, dtype=object))
             out_d.append(d + seg * seg_size)
             out_s.append(s)
-        return pd.DataFrame({
-            "qid": out_q,
-            "docid": np.concatenate(out_d) if out_d else np.empty(0, dtype=np.int64),
-            "score": np.concatenate(out_s) if out_s else np.empty(0, dtype=np.float64),
-        })
+        return np.concatenate(out_q), np.concatenate(out_d), np.concatenate(out_s)
 
     return run
 
@@ -2509,7 +2534,10 @@ def search(
     most that many postings (the rows come from the reader-resident
     postings snapshot, loaded by the handle's first such query), else 1
     (a collect of the query's rows), instead of 2.  The driver holds at
-    most the bound's postings (~21 bytes each in the snapshot).
+    most the bound's postings (~21 bytes each in the snapshot).  That path
+    is pure driver Python with no pandas in it: the query's Arrow rows go
+    straight to the kernel, one segment at a time, and its hits come back
+    as arrays.
 
     ``after``: searchAfter cursor ``(score, docid)`` of the LAST hit of the
     previous page (IndexSearcher.searchAfter, search/IndexSearcher.java:
@@ -2530,10 +2558,9 @@ def search(
     deny = None if filter_docs is not None else _driver_deny(index, plan.dfs, plan.terms)
     synth, scan_terms = _pulsed_rows(index, plan.terms, plan.dfs)
     if deny is not None:
-        hits = _segments_on_driver(_driver_rows(index, scan_terms), synth, _HITS, run,
-                                   deny, index.seg_size)
-        return _top_docs(index, hits["docid"].to_numpy(dtype=np.int64),
-                         hits["score"].to_numpy(dtype=np.float64), k, with_urls)
+        _, docids, scores = _segments_on_driver(_driver_rows(index, scan_terms), synth,
+                                                _HITS, run, deny, index.seg_size)
+        return _top_docs(index, docids, scores, k, with_urls)
 
     per_seg = _per_segment(index, _posting_rows_df(index, scan_terms, synth), _HITS,
                            run, _live_mask(index, filter_docs))
@@ -2602,7 +2629,7 @@ def score_docs(
     def score(seg, term_rows, allow, deny):
         _, pbt, pos = decode_segment(node, term_rows, seg_size, allow, deny)
         d, s = score_query_node(node, pbt, scorers, precision, pos)
-        return pd.DataFrame({"docid": d + seg * seg_size, "score": s})
+        return d + seg * seg_size, s
 
     return _per_segment(index, rows, "docid long, score double", score, _live_mask(index))
 
@@ -2620,7 +2647,7 @@ def count_hits(index: Index, query: str | tuple, analyzer=ENGLISH_STOP_WORDS) ->
 
     def count(seg, term_rows, allow, deny):
         _, pbt, pos = decode_segment(node, term_rows, seg_size, allow, deny)
-        return pd.DataFrame({"n": [len(match_docids(node, pbt, pos))]})
+        return (np.array([len(match_docids(node, pbt, pos))], dtype=np.int64),)
 
     rows = index.postings.filter(F.col("term").isin(plan.terms))
     per_seg = _per_segment(index, rows, "n long", count, _live_mask(index))
@@ -2668,7 +2695,7 @@ def sorted_topk(
     def first_k(seg, term_rows, allow, deny):
         _, pbt, pos = decode_segment(node, term_rows, seg_size, allow, deny)
         d = match_docids(node, pbt, pos)  # sorted ascending
-        return pd.DataFrame({"docid": (d[:k] if ascending else d[-k:]) + seg * seg_size})
+        return ((d[:k] if ascending else d[-k:]) + seg * seg_size,)
 
     acc: list[int] = []
     i, batch = 0, max(1, probe_segments)
@@ -2717,7 +2744,10 @@ def search_many(
     at most ``LOCAL_SCORE_MAX_POSTINGS`` postings, on an index with at most
     that many tombstones, is scored on the driver with the same results: 0
     jobs when the whole index holds at most that many postings (reader-
-    resident snapshot), else 1 collect of the batch's rows.
+    resident snapshot), else 1 collect of the batch's rows.  As in
+    ``search``, that path builds no pandas frame: each segment's Arrow rows
+    are scored for every query of the batch, and one lexsort over the
+    (qid, score, docid) hit arrays cuts every query's top k.
     """
     empty = TopDocs(np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
     plans = {}
@@ -2738,10 +2768,9 @@ def search_many(
     if deny is not None:
         # small batch: its postings on the driver, every segment scored there
         # by the same closure (see LOCAL_SCORE_MAX_POSTINGS)
-        hits = _segments_on_driver(_driver_rows(index, scan_terms), synth, _HITS, run,
-                                   deny, index.seg_size)
-        return _top_docs_many(queries, zip(hits["qid"], hits["docid"], hits["score"]),
-                              ks, k)
+        qids, docids, scores = _segments_on_driver(_driver_rows(index, scan_terms), synth,
+                                                   _HITS, run, deny, index.seg_size)
+        return _top_docs_many(queries, qids, docids, scores, ks, k)
 
     # batched queries must not resurrect deleted docs (Lucene: every scorer
     # sees liveDocs)
@@ -2758,28 +2787,31 @@ def search_many(
         .filter(F.col("rn") <= F.lit(kmax))
         .collect()
     )
-    return _top_docs_many(
-        queries, ((r["qid"], r["docid"], r["score"]) for r in collected), ks, k)
+    return _top_docs_many(queries, np.array([r["qid"] for r in collected], dtype=object),
+                          np.array([r["docid"] for r in collected], dtype=np.int64),
+                          np.array([r["score"] for r in collected], dtype=np.float64), ks, k)
 
 
-def _top_docs_many(queries, hits, ks: dict[str, int], k: int) -> dict[str, TopDocs]:
-    """(qid, docid, score) hits → per-query top ``ks[qid]`` (default ``k``)
-    in (score desc, docid asc) order; queries without hits get empty
-    TopDocs."""
-    by_q: dict[str, list] = {}
-    for qid, docid, score in hits:
-        by_q.setdefault(qid, []).append((docid, score))
+def _top_docs_many(queries, qids: np.ndarray, docids: np.ndarray, scores: np.ndarray,
+                   ks: dict[str, int], k: int) -> dict[str, TopDocs]:
+    """Hits as aligned (qid, docid, score) arrays → per-query top ``ks[qid]``
+    (default ``k``) in (score desc, docid asc) order; queries without hits
+    get empty TopDocs.  Each TopDocs gathers its own arrays: a slice would
+    keep every hit of the batch alive for as long as the caller keeps one
+    query's result."""
+    names, code = np.unique(qids, return_inverse=True)
+    order = np.lexsort((docids, -scores, code))
+    starts = np.searchsorted(code[order], np.arange(len(names) + 1))
+    found = {q: (lo, hi) for q, lo, hi in zip(names.tolist(), starts[:-1], starts[1:])}
     empty = TopDocs(np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
     out: dict[str, TopDocs] = {}
     for qid in queries:
-        pairs = by_q.get(qid)
-        if not pairs:
+        if qid not in found:
             out[qid] = empty
             continue
-        docids = np.array([p[0] for p in pairs], dtype=np.int64)
-        scores = np.array([p[1] for p in pairs], dtype=np.float64)
-        order = np.lexsort((docids, -scores))[: ks.get(qid, k)]
-        out[qid] = TopDocs(docids[order], scores[order])
+        lo, hi = found[qid]
+        sel = order[lo:min(hi, lo + ks.get(qid, k))]
+        out[qid] = TopDocs(docids[sel], scores[sel])
     return out
 
 
@@ -2813,7 +2845,7 @@ def explain(
     seg, local = divmod(int(docid), index.seg_size)
     synth, scan_terms = _pulsed_rows(index, plan.terms, plan.dfs)
     table = _driver_rows(index, scan_terms, seg)
-    rows = ([] if table is None else table.to_pylist()) + [r for r in synth if r["seg"] == seg]
+    rows = _arrow_rows(table) + [r for r in synth if r["seg"] == seg]
     found = {}  # term -> its (freq, dl) slices at the doc
     for r in rows:
         d, f, dl = TermPostings(r, index.seg_size).decode()

@@ -36,7 +36,6 @@ from .index import (
     _pack_partials,
     _ranged_with_offsets,
     _write_segments,
-    build_norms,
     merge_partials_stage,
     read_index,
 )
@@ -350,12 +349,8 @@ def compact_index(spark: SparkSession, in_dir: str, out_dir: str, seg_size: int 
     remap, runs, _, ranged = _dense_remap(live)
     postings = _remapped_postings(old.postings, old.seg_size, seg_size,
                                   _positions_mode(old.postings), runs, remap)
-    postings.sortWithinPartitions("term").write.mode("overwrite").partitionBy("seg").parquet(
-        f"{out_dir}/postings"
-    )
     new_docs = remap.select(F.col("new_docid").alias("docid"), "url", "dl", "norm")
-    new_docs.write.mode("overwrite").parquet(f"{out_dir}/docs")
-    build_norms(new_docs, seg_size).write.mode("overwrite").parquet(f"{out_dir}/norms")
+    _write_segments(out_dir, seg_size, new_docs, postings, mode="overwrite")
     # stats over SURVIVORS (merged-away deletes leave the statistics)
     _commit(out_dir, seg_size)
     shutil.rmtree(f"{out_dir}/tombstones", ignore_errors=True)

@@ -335,3 +335,82 @@ def test_filter_docs_takes_distributed_path(spark, monkeypatch, idx, by_df):
     allow = spark.range(0, 300).withColumnRenamed("id", "docid")
     td = search(idx, q, k=10, filter_docs=allow)
     assert len(td.docids) > 0 and (td.docids < 300).all()
+
+
+def test_driver_scoring_builds_no_pandas_frame(monkeypatch, idx, by_df):
+    """A warmed resident search()/search_many reads its rows from Arrow into
+    the kernel and its hits out as arrays: no Arrow→pandas conversion (the
+    ``pyarrow.pandas_compat`` function ``Table.to_pandas`` calls, as the
+    Cython type cannot be patched), no per-row ``to_dict``, no ``groupby``,
+    no frame at all."""
+    import pandas as pd
+    import pyarrow.pandas_compat
+
+    batch = _queries(by_df)
+    want = {"one": search(idx, batch["and_or"], k=10), "many": search_many(idx, batch, k=10)}
+
+    def fail(*a, **kw):
+        raise AssertionError("pandas on the driver-scored path")
+
+    monkeypatch.setattr(pyarrow.pandas_compat, "table_to_dataframe", fail)
+    for name in ("to_dict", "groupby", "__init__"):
+        monkeypatch.setattr(pd.DataFrame, name, fail)
+    _assert_same(search(idx, batch["and_or"], k=10), want["one"])
+    got = search_many(idx, batch, k=10)
+    for qid in batch:
+        _assert_same(got[qid], want["many"][qid])
+
+
+@pytest.fixture(scope="module")
+def ties(spark):
+    """40 docs of 4 repeated texts in segments of 10, so equal scores recur
+    in every segment."""
+    texts = ["alpha beta", "alpha gamma delta", "beta gamma", "alpha alpha beta"]
+    rows = [(f"t{i:02d}", texts[i % 4]) for i in range(40)]
+    index = build_index(spark, spark.createDataFrame(rows, "url string, text string"),
+                        seg_size=10)
+    search(index, "alpha", k=1)  # warm: resident snapshots
+    return index
+
+
+def test_ties_across_segments_and_empty_qid_parity(spark, monkeypatch, ties):
+    """The k cut falls inside a run of equal scores spread over segments, and
+    one planned query ("delta" only occurs beside "gamma") matches in no
+    segment: both executors cut by (score desc, docid asc) and give that
+    query empty TopDocs."""
+    every = search(ties, "alpha", k=100)
+    assert len(every.docids) == 30
+    assert every.scores[14] == every.scores[15]
+    cut = every.docids[every.scores == every.scores[14]]
+    assert len(set((cut // 10).tolist())) > 1  # the tie spans segments
+    batch = {"tie": "alpha", "none": "delta NOT gamma", "or": "beta OR gamma"}
+    (local, lj), (dist, _) = _both_paths(
+        spark, monkeypatch,
+        lambda: search_many(ties, batch, k=7, ks={"tie": 15}))
+    assert lj == 0
+    for qid in batch:
+        _assert_same(local[qid], dist[qid])
+    assert len(local["none"].docids) == 0
+    assert local["tie"].docids.tolist() == every.docids[:15].tolist()
+    (one, _), (one_d, _) = _both_paths(spark, monkeypatch, lambda: search(ties, "alpha", k=15))
+    _assert_same(one, one_d)
+    _assert_same(one, local["tie"])
+
+
+def test_top_docs_many_matches_a_sorted_reference():
+    """The vectorized per-query cut against a plain sort of each query's hits."""
+    rng = np.random.default_rng(5)
+    n = 500
+    qids = rng.choice(np.array(["a", "b", "c"], dtype=object), n)
+    docids = rng.permutation(n).astype(np.int64)
+    scores = rng.integers(0, 6, n).astype(np.float64)  # many ties
+    ks = {"a": 3, "b": 1000}
+    got = S._top_docs_many(["a", "b", "c", "d"], qids, docids, scores, ks, 10)
+    for qid in "abcd":
+        ref = sorted((-s, d) for q, d, s in zip(qids, docids, scores) if q == qid)
+        ref = ref[:ks.get(qid, 10)]
+        assert got[qid].docids.tolist() == [d for _, d in ref]
+        assert got[qid].scores.tolist() == [-s for s, _ in ref]
+        assert got[qid].docids.dtype == np.int64 and got[qid].scores.dtype == np.float64
+        # its own arrays, not views that pin the whole batch's hits
+        assert got[qid].docids.base is None and got[qid].scores.base is None

@@ -6,6 +6,7 @@ import numpy as np
 import pytest
 
 from lucene_spark.corpus import generate_pages
+from lucene_spark.index import read_index
 from lucene_spark.oracle import OracleIndex
 from lucene_spark.search import search
 from lucene_spark.streaming import append_batch, compact_index, refresh_reader
@@ -74,6 +75,27 @@ def test_compaction_preserves_results(tmp_path, spark, batches):
     assert before.urls == after.urls
     # merged docids are dense 0..N-1
     assert merged.docs.agg({"docid": "max"}).collect()[0][0] == merged.doc_count - 1
+
+
+def test_append_after_compaction_keeps_compacted_docs(tmp_path, spark, batches):
+    """compact_index writes seg-partitioned tables like every other writer,
+    so a later append_batch adds its segments beside the compacted ones
+    instead of hiding them behind the new partition directories."""
+    out, merged_dir = str(tmp_path / "nrt3"), str(tmp_path / "merged3")
+    for b in batches[:2]:
+        append_batch(spark, spark.createDataFrame(b), out, 128)
+    merged = compact_index(spark, out, merged_dir, seg_size=128)
+    want = search(merged, "court", k=5)
+    assert len(want.docids)
+
+    append_batch(spark, spark.createDataFrame(batches[2]), merged_dir, 128)
+    idx = read_index(spark, merged_dir)
+    assert idx.doc_count == 600
+    # 400 compacted docs in segs 0-3, 200 appended from the next seg base
+    assert sorted(r["seg"] for r in idx.norms.select("seg").collect()) == [0, 1, 2, 3, 4, 5]
+    assert idx.docs.filter("docid < 400").count() == 400
+    hits = search(idx, "court", k=600).docids
+    assert set(want.docids.tolist()) <= set(hits.tolist())
 
 
 def test_positions_survive_append_and_compaction(tmp_path, spark):
