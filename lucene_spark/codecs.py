@@ -21,8 +21,14 @@ per-value Python on the hot path.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 BLOCK_SIZE = 128  # ForUtil.java:32
+
+# a posting row's encoded postings, and the columns a row decoded by
+# decode_rows carries instead (one list per row)
+ENCODED_COLUMNS = ("doc_blob", "freq_blob", "dl_blob", "tail_blob")
+DECODED_COLUMNS = ("docids", "freqs", "dls")
 
 
 def bits_required(max_value: int) -> int:
@@ -82,26 +88,28 @@ def read_vints(data: bytes, n: int, offset: int = 0) -> tuple[np.ndarray, int]:
     return out, pos
 
 
-def read_vints_all(data: bytes) -> np.ndarray:
+def read_vints_all(data) -> np.ndarray:
     """Decode EVERY varint in the buffer at once — fully vectorized.
 
     Byte k belongs to value `vid[k]`; its weight is 128^(index within the
     value).  Used for the positions channel where a posting row can hold
-    hundreds of thousands of varints (the per-value Python loop of
-    :func:`read_vints` is only for short tails/exception lists).
+    hundreds of thousands of varints, and for posting tails (the
+    per-value Python loop of :func:`read_vints` is only for exception
+    lists).  ValueError when the buffer ends inside a varint.
     """
     b = np.frombuffer(data, dtype=np.uint8)
     if b.size == 0:
         return np.empty(0, dtype=np.uint64)
     ends = b < 0x80
-    vid = np.zeros(len(b), dtype=np.int64)
-    np.cumsum(ends[:-1], out=vid[1:])
+    if not ends[-1]:
+        raise ValueError("the varints end inside a value")
     starts = np.flatnonzero(np.concatenate(([True], ends[:-1])))
+    if len(starts) == len(b):
+        return b.astype(np.uint64)
+    vid = np.cumsum(ends) - ends
     pos_in = np.arange(len(b), dtype=np.int64) - starts[vid]
     contrib = (b & 0x7F).astype(np.uint64) << (np.uint64(7) * pos_in.astype(np.uint64))
-    vals = np.zeros(int(ends.sum()), dtype=np.uint64)
-    np.add.at(vals, vid, contrib)
-    return vals
+    return np.add.reduceat(contrib, starts)
 
 
 # --- positions channel ---------------------------------------------------------
@@ -158,6 +166,8 @@ def decode_for_delta(data: bytes, offset: int) -> tuple[np.ndarray, int]:
     bpv = data[offset]
     if bpv == 0:
         return np.ones(BLOCK_SIZE, dtype=np.uint32), offset + 1
+    if bpv > 32:
+        raise ValueError(f"doc block bit width {bpv} > 32")
     nbytes = (BLOCK_SIZE * bpv + 7) // 8
     vals = unpack_bits(data[offset + 1 : offset + 1 + nbytes], BLOCK_SIZE, bpv)
     return vals, offset + 1 + nbytes
@@ -278,6 +288,77 @@ def encode_postings(docids: np.ndarray, freqs: np.ndarray, dls: np.ndarray | Non
     }
 
 
+class _RowError(ValueError):
+    """A corrupt posting row, by its number in the decoded rows."""
+
+    def __init__(self, row: int, what: str):
+        super().__init__(what)
+        self.row = row
+
+
+def _decode_blocks(doc: bytes, freq: bytes, dl: bytes | None, nblocks: int,
+                   gaps: np.ndarray, freqs: np.ndarray, dls: np.ndarray, at: int) -> None:
+    """Decode one row's ``nblocks`` FOR-delta/PFor blocks into
+    ``gaps``/``freqs``/``dls`` from index ``at`` (dls only with ``dl``);
+    ValueError when a block runs past its blob."""
+    doff = foff = loff = 0
+    try:
+        for _ in range(nblocks):
+            sl = slice(at, at + BLOCK_SIZE)
+            gaps[sl], doff = decode_for_delta(doc, doff)
+            freqs[sl], foff = decode_pfor(freq, foff)
+            if dl is not None:
+                dls[sl], loff = decode_pfor(dl, loff)
+            at += BLOCK_SIZE
+    except IndexError:
+        raise ValueError("a block runs past its blob") from None
+    # a short last block unpacks zero-padded: its end offset tells
+    if doff > len(doc) or foff > len(freq) or (dl is not None and loff > len(dl)):
+        raise ValueError("a block runs past its blob")
+
+
+def _split_tails(vals: np.ndarray, n_tail: np.ndarray, ends: np.ndarray) -> tuple[list, list, list]:
+    """The tail parser: one plain-int walk over the concatenated tail
+    varints of many rows (row i's end at ``ends[i]``) → (gaps, freqs, dls)
+    of every tail posting.  A row's tail is its ``n_tail`` codes
+    (docDelta<<1 | freq==1), each followed by its freq when the code's low
+    bit is 0, then its ``n_tail`` dls.  ``_RowError`` for the first row
+    whose varints do not match its codes, freqs and dls."""
+    walk = vals.tolist()
+    gaps: list[int] = []
+    freqs: list[int] = []
+    dls: list[int] = []
+    add_gap, add_freq = gaps.append, freqs.append
+    j = r = 0
+    try:
+        for r, (n, end) in enumerate(zip(n_tail.tolist(), ends.tolist())):
+            for _ in range(n):
+                code = walk[j]
+                add_gap(code >> 1)
+                if code & 1:
+                    add_freq(1)
+                    j += 1
+                else:
+                    add_freq(walk[j + 1])
+                    j += 2
+            if j + n != end:
+                raise IndexError
+            dls += walk[j:end]
+            j = end
+    except IndexError:
+        raise _RowError(r, "tail varints do not match its n_tail codes, freqs and dls") from None
+    return gaps, freqs, dls
+
+
+def _row_error(key, e: ValueError) -> ValueError:
+    """``e`` for the row named ``key`` (its (term, seg), as Arrow or numpy
+    scalars or plain values)."""
+    if isinstance(key, tuple):
+        key = tuple(k.as_py() if hasattr(k, "as_py") else k.item() if hasattr(k, "item") else k
+                    for k in key)
+    return ValueError(f"corrupt posting row {key!r}: {e}")
+
+
 def decode_postings(
     doc_blob: bytes,
     freq_blob: bytes,
@@ -286,41 +367,118 @@ def decode_postings(
     nblocks: int,
     first_prev: int = -1,
     dl_blob: bytes | None = None,
+    key=None,
 ) -> tuple[np.ndarray, np.ndarray] | tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Full decompression → (docids, freqs[, dls if dl_blob given]) int64."""
-    n = nblocks * BLOCK_SIZE + n_tail
+    """Full decompression → (docids, freqs[, dls if dl_blob given]) int64.
+    One row of :func:`decode_rows`, with the same block decoders and tail
+    walk; ``key`` names the row (its (term, seg)) in the ``ValueError`` a
+    corrupt row raises."""
+    head = nblocks * BLOCK_SIZE
+    n = head + n_tail
     docids = np.empty(n, dtype=np.int64)
     freqs = np.empty(n, dtype=np.int64)
-    dls = np.empty(n, dtype=np.int64) if dl_blob is not None else None
-    doff = foff = loff = 0
-    for bi in range(nblocks):
-        gaps, doff = decode_for_delta(doc_blob, doff)
-        fv, foff = decode_pfor(freq_blob, foff)
-        sl = slice(bi * BLOCK_SIZE, (bi + 1) * BLOCK_SIZE)
-        docids[sl] = gaps.astype(np.int64)
-        freqs[sl] = fv.astype(np.int64)
-        if dls is not None:
-            lv, loff = decode_pfor(dl_blob, loff)
-            dls[sl] = lv.astype(np.int64)
-    if n_tail:
-        vals = read_vints_all(tail_blob).astype(np.int64)
-        j = 0
-        for i in range(nblocks * BLOCK_SIZE, n):
-            code = vals[j]
-            j += 1
-            docids[i] = code >> 1
-            if code & 1:
-                freqs[i] = 1
-            else:
-                freqs[i] = vals[j]
-                j += 1
-        if dls is not None:
-            dls[nblocks * BLOCK_SIZE :] = vals[j : j + n_tail]
+    dls = np.zeros(n, dtype=np.int64)
+    try:
+        _decode_blocks(doc_blob, freq_blob, dl_blob, nblocks, docids, freqs, dls, 0)
+        if n_tail or tail_blob:
+            vals = read_vints_all(tail_blob).astype(np.int64)
+            docids[head:], freqs[head:], dls[head:] = _split_tails(
+                vals, np.array([n_tail]), np.array([len(vals)]))
+    except ValueError as e:
+        raise _row_error(key, e) from None
     np.cumsum(docids, out=docids)  # prefix-sum: gaps → (docid - first_prev)
     docids += first_prev
-    if dls is not None:
+    if dl_blob is not None:
         return docids, freqs, dls
     return docids, freqs
+
+
+def _binary(col) -> tuple[np.ndarray, np.ndarray]:
+    """A column of byte strings → (its bytes as one uint8 array, int64
+    offsets[n + 1] of each value): zero-copy from an Arrow binary array,
+    one join from a sequence of bytes."""
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    if isinstance(col, pa.Array):
+        _, offs, data = col.buffers()
+        width = np.int64 if pa.types.is_large_binary(col.type) else np.int32
+        offsets = np.frombuffer(offs, dtype=width)[col.offset : col.offset + len(col) + 1]
+        data = np.empty(0, np.uint8) if data is None else np.frombuffer(data, dtype=np.uint8)
+        return data, offsets.astype(np.int64)
+    offsets = np.zeros(len(col) + 1, dtype=np.int64)
+    np.cumsum([len(b) for b in col], out=offsets[1:])
+    return np.frombuffer(b"".join(col), dtype=np.uint8), offsets
+
+
+def index_ranges(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Concatenate [starts[i], starts[i]+counts[i]) index ranges, vectorized."""
+    ids = np.arange(int(counts.sum()), dtype=np.int64)
+    return ids + np.repeat(starts - (np.cumsum(counts) - counts), counts)
+
+
+def decode_rows(rows, out: tuple[np.ndarray, np.ndarray, np.ndarray] | None = None):
+    """Decode many posting rows at once → (row_starts int64[n_rows + 1],
+    docids, freqs, dls): row i's postings are ``[row_starts[i],
+    row_starts[i + 1])`` of the three flat arrays, docids local as from
+    :func:`decode_postings`.
+
+    ``rows`` maps a column name to its column (an Arrow table or record
+    batch, a pandas frame, a dict of lists): ``doc_blob``, ``freq_blob``,
+    ``dl_blob``, ``tail_blob``, ``n_tail`` and ``nblocks``, plus ``term``
+    and ``seg`` to name a corrupt row.  Blocks go through the per-block
+    FOR/PFor decoders; all tails are read by one vectorized varint read
+    over the concatenated tail bytes (zero-copy from Arrow) and split by
+    one plain-int walk; one segmented prefix sum turns the gaps into
+    docids.  ``out``: three preallocated arrays of the total posting count
+    (any integer dtype) to fill instead of new int64 arrays.
+
+    Raises ``ValueError`` naming the row's (term, seg) when its tail's
+    varints do not match its ``n_tail`` codes, freqs and dls, or a block
+    runs past its blob."""
+    nblocks = np.asarray(rows["nblocks"], dtype=np.int64)
+    n_tail = np.asarray(rows["n_tail"], dtype=np.int64)
+    head = nblocks * BLOCK_SIZE
+    counts = head + n_tail
+    starts = np.zeros(len(counts) + 1, dtype=np.int64)
+    np.cumsum(counts, out=starts[1:])
+    total = int(starts[-1])
+    gaps = np.empty(total, dtype=np.int64)
+    freqs = np.empty(total, dtype=np.int64)
+    dls = np.empty(total, dtype=np.int64)
+    r = 0
+    try:
+        blocked = np.flatnonzero(nblocks).tolist()
+        if blocked:
+            blobs = [_binary(rows[c]) for c in ENCODED_COLUMNS[:3]]
+            for r in blocked:
+                doc, freq, dl = (d[o[r] : o[r + 1]].tobytes() for d, o in blobs)
+                _decode_blocks(doc, freq, dl, int(nblocks[r]), gaps, freqs, dls, int(starts[r]))
+        data, offsets = _binary(rows["tail_blob"])
+        tail = data[offsets[0] : offsets[-1]]
+        r = int(np.searchsorted(offsets, offsets[-1])) - 1  # the last row with tail bytes
+        vals = read_vints_all(tail).astype(np.int64)
+        # each row's varints end where its bytes do
+        bounds = np.zeros(len(tail) + 1, dtype=np.int64)
+        np.cumsum(tail < 0x80, out=bounds[1:])
+        at = index_ranges(starts[:-1] + head, n_tail)
+        gaps[at], freqs[at], dls[at] = _split_tails(vals, n_tail, bounds[offsets[1:] - offsets[0]])
+    except ValueError as e:
+        r = getattr(e, "row", r)
+        try:
+            key = (rows["term"][r], rows["seg"][r])
+        except KeyError:
+            key = r
+        raise _row_error(key, e) from None
+    # segmented prefix sum: gaps → docids, each row from docid -1
+    csum = np.zeros(total + 1, dtype=np.int64)
+    np.cumsum(gaps, out=csum[1:])
+    docids = csum[1:]
+    docids -= np.repeat(csum[starts[:-1]] + 1, counts)
+    if out is None:
+        return starts, docids, freqs, dls
+    for dst, src in zip(out, (docids, freqs, dls)):
+        dst[:] = src
+    return (starts, *out)
 
 
 def decode_block(doc_blob_offsets, freq_blob_offsets, doc_blob, freq_blob, bi, prev_docid):

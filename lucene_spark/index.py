@@ -62,7 +62,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .analysis import ENGLISH_STOP_WORDS, make_analyze_udf
-from .codecs import BLOCK_SIZE, encode_positions, encode_postings
+from .codecs import (BLOCK_SIZE, DECODED_COLUMNS, ENCODED_COLUMNS, decode_rows,
+                     encode_positions, encode_postings, index_ranges)
 from .impacts import block_frontiers
 from .smallfloat import int_to_byte4_np
 
@@ -115,15 +116,30 @@ class TermStats:
                         zip(self.df[pos].tolist(), self.cf[pos].tolist())))
 
 
+# postings the snapshot fill decodes per slice of rows (a slice ends at the
+# first row boundary past it), so that the fill's transients — int64
+# arrays, the tail walk's Python ints — stay near a MB at any index size
+_FILL_POSTINGS = 1 << 13
+
+
 @dataclass(frozen=True)
 class PostingsSnapshot:
-    """Driver-resident copy of the whole postings table — the analog of the
-    postings a Lucene reader maps once at open instead of reading per query.
-    ``table`` holds every posting row, sorted by term; ``terms`` is its term
-    column as an object array, so a query's rows are found by binary search
-    (``np.searchsorted``) and cut out with one ``take``.  Loaded with one
-    Arrow collect.  ``source`` is the postings DataFrame the table was read
-    from — the cache key ``Index.resident_postings`` checks."""
+    """Driver-resident copy of the whole postings table, decoded once at
+    load — the analog of the postings a Lucene reader maps once at open
+    instead of reading per query.  ``table`` holds every posting row,
+    sorted by term, with its postings decoded into three ``list<int32>``
+    columns (``codecs.DECODED_COLUMNS``: local docids, freqs, dls) in place
+    of the encoded blobs, so a driver-scored query slices arrays and decodes
+    nothing; ``pos_blob`` stays encoded and is decoded by the phrase queries
+    that read it.  About 29 driver bytes per posting (12 of them the decoded
+    columns, against ~5 for the blobs they replace; the rest is per-row
+    metadata: term, counts and impacts), plus about 1.5 per position on a
+    positional index (BENCH.md).
+    ``terms`` is the term column as an object array, so a query's rows are
+    found by binary search (``np.searchsorted``) and cut out with one
+    ``take``.  Loaded with one Arrow collect.  ``source`` is the postings
+    DataFrame the table was read from — the cache key
+    ``Index.resident_postings`` checks."""
 
     source: DataFrame
     table: pa.Table
@@ -132,6 +148,22 @@ class PostingsSnapshot:
     @classmethod
     def load(cls, postings: DataFrame) -> "PostingsSnapshot":
         tab = postings.toArrow().sort_by("term")
+        counts = (np.asarray(tab.column("nblocks"), dtype=np.int64) * BLOCK_SIZE
+                  + np.asarray(tab.column("n_tail"), dtype=np.int64))
+        offsets = np.zeros(len(counts) + 1, dtype=np.int32)
+        np.cumsum(counts, out=offsets[1:])
+        total = int(offsets[-1])
+        values = [np.empty(total, dtype=np.int32) for _ in DECODED_COLUMNS]
+        cuts = np.unique(np.concatenate((
+            [0], np.searchsorted(offsets, np.arange(_FILL_POSTINGS, total, _FILL_POSTINGS)),
+            [tab.num_rows])))
+        for r0, r1 in zip(cuts[:-1].tolist(), cuts[1:].tolist()):
+            lo, hi = offsets[r0], offsets[r1]
+            decode_rows(tab.slice(r0, r1 - r0), out=tuple(v[lo:hi] for v in values))
+        tab = tab.drop_columns(list(ENCODED_COLUMNS))
+        shared = pa.array(offsets)  # zero-copy views, one offsets buffer for all three
+        for name, v in zip(DECODED_COLUMNS, values):
+            tab = tab.append_column(name, pa.ListArray.from_arrays(shared, pa.array(v)))
         return cls(postings, tab, np.asarray(tab.column("term").to_numpy(), dtype=object))
 
     def rows(self, terms) -> pa.Table:
@@ -140,9 +172,7 @@ class PostingsSnapshot:
         q = np.array(sorted(set(terms)), dtype=object)
         lo = np.searchsorted(self.terms, q, side="left")
         n = np.searchsorted(self.terms, q, side="right") - lo
-        # row ids of the ranges [lo, lo + n), concatenated
-        ids = np.arange(int(n.sum())) + np.repeat(lo - (np.cumsum(n) - n), n)
-        return self.table.take(ids)
+        return self.table.take(index_ranges(lo, n))
 
 
 @dataclass(frozen=True)
@@ -178,8 +208,8 @@ class Index:
     Reader-resident snapshots, each loaded by one collect on first use and
     reloaded when its source DataFrame is replaced: ``term_stats`` (the
     termdict, ~80 B per term), ``resident_postings`` (the whole postings
-    table, ~21 B per posting plus ~1.5 B per position when the index has
-    positions, only while the index holds at most
+    table with its postings decoded, ~29 B per posting plus ~1.5 B per
+    position when the index has positions, only while the index holds at most
     ``search.LOCAL_SCORE_MAX_POSTINGS`` postings) and ``deleted_docids``
     (the tombstones, at most that many ids).  Once they are loaded, a
     driver-scored ``search``/``search_many`` on a small index launches no
@@ -246,10 +276,12 @@ class Index:
         most ``max_postings`` postings (Σ df of the term-stats snapshot), else
         None.  Loaded by one collect on first use and reloaded whenever
         ``postings`` is no longer the DataFrame it was read from; the bound is
-        checked at every call, so a caller may change it.  About 21 driver
-        bytes per posting, plus about 1.5 per position on a positional index
-        (``pos_blob`` grows with Σ tf; BENCH.md), so the snapshot is bounded
-        by the bound that already caps one driver-scored query's collect."""
+        checked at every call, so a caller may change it.  About 29 driver
+        bytes per posting (``PostingsSnapshot``), plus about 1.5 per position
+        on a positional index (``pos_blob`` grows with Σ tf; BENCH.md), so the
+        snapshot is bounded by the bound that already caps one driver-scored
+        query's collect.  The load decodes every posting (~0.1 s per 200k
+        postings), which the handle's first driver-scored query pays."""
         if int(self.term_stats().df.sum()) > max_postings:
             return None
         ps = self._postings

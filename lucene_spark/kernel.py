@@ -33,21 +33,21 @@ from __future__ import annotations
 
 import numpy as np
 
-from .codecs import BLOCK_SIZE, decode_positions, decode_postings
+from .codecs import (BLOCK_SIZE, DECODED_COLUMNS, ENCODED_COLUMNS, decode_positions,
+                     decode_postings, index_ranges)
 from .impacts import max_scores_per_block
 from .similarity import BM25Scorer
 
 
 class TermPostings:
-    """Decoded-on-demand posting list for one (term, seg) row."""
+    """Decoded-on-demand posting list for one (term, seg) row.  A row that
+    carries its postings decoded (the ``DECODED_COLUMNS`` of a resident
+    snapshot row) is taken as decoded; any other row decodes its blobs on
+    the first ``decode()``."""
 
     def __init__(self, row: dict, seg_size: int):
         self.nblocks = int(row["nblocks"])
         self.n_tail = int(row["n_tail"])
-        self.doc_blob = bytes(row["doc_blob"])
-        self.freq_blob = bytes(row["freq_blob"])
-        self.dl_blob = bytes(row["dl_blob"])
-        self.tail_blob = bytes(row["tail_blob"])
         self.block_last = np.asarray(row["block_last_docid"], dtype=np.int64)
         self.imp_freqs = np.asarray(row["imp_freqs"], dtype=np.int64)
         self.imp_dls = np.asarray(row["imp_dls"], dtype=np.int64)
@@ -56,6 +56,11 @@ class TermPostings:
         pb = row.get("pos_blob")  # dict and pandas Series both support .get
         self.pos_blob = bytes(pb) if pb is not None else b""
         self._decoded: tuple[np.ndarray, np.ndarray, np.ndarray] | None = None
+        if row.get(DECODED_COLUMNS[0]) is not None:
+            self._decoded = tuple(np.asarray(row[c], dtype=np.int64) for c in DECODED_COLUMNS)
+        else:
+            self._blobs = tuple(bytes(row[c]) for c in ENCODED_COLUMNS)
+            self._key = (row.get("term"), row.get("seg"))
         self._positions: np.ndarray | None = None
 
     def positions_flat(self) -> np.ndarray:
@@ -77,10 +82,9 @@ class TermPostings:
     def decode(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         """→ (docids, freqs, dls) — posting rows are self-contained."""
         if self._decoded is None:
-            self._decoded = decode_postings(
-                self.doc_blob, self.freq_blob, self.tail_blob, self.n_tail,
-                self.nblocks, dl_blob=self.dl_blob,
-            )
+            doc, freq, dl, tail = self._blobs
+            self._decoded = decode_postings(doc, freq, tail, self.n_tail, self.nblocks,
+                                            dl_blob=dl, key=self._key)
         return self._decoded
 
     def block_ranges(self) -> tuple[np.ndarray, np.ndarray]:
@@ -100,19 +104,6 @@ class TermPostings:
         return firsts, lasts
 
 
-def _ranges(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
-    """Concatenate [starts[i], starts[i]+counts[i]) index ranges, vectorized."""
-    total = int(counts.sum())
-    if total == 0:
-        return np.empty(0, dtype=np.int64)
-    ends = np.cumsum(counts)
-    return (
-        np.arange(total, dtype=np.int64)
-        - np.repeat(ends - counts, counts)
-        + np.repeat(starts, counts)
-    )
-
-
 def window_max_scores(
     tp: TermPostings, scorer: BM25Scorer, n_windows: int, window_bits: int
 ) -> np.ndarray:
@@ -130,7 +121,7 @@ def window_max_scores(
     firsts, lasts = tp.block_ranges()
     w0 = firsts >> window_bits
     w1 = lasts >> window_bits
-    idx = _ranges(w0, w1 - w0 + 1)
+    idx = index_ranges(w0, w1 - w0 + 1)
     np.maximum.at(out, idx, np.repeat(bmax[:ntotal], w1 - w0 + 1))
     return out
 
@@ -146,7 +137,7 @@ def window_presence(tp: TermPostings, n_windows: int, window_bits: int) -> np.nd
     firsts, lasts = tp.block_ranges()
     w0 = firsts >> window_bits
     w1 = lasts >> window_bits
-    out[_ranges(w0, w1 - w0 + 1)] = True
+    out[index_ranges(w0, w1 - w0 + 1)] = True
     return out
 
 
@@ -1197,11 +1188,11 @@ class _WinBinned:
     def slice(self, windows_sorted: np.ndarray):
         starts = np.searchsorted(self.w, windows_sorted, side="left")
         ends = np.searchsorted(self.w, windows_sorted, side="right")
-        sel = _ranges(starts, ends - starts)
+        sel = index_ranges(starts, ends - starts)
         d, f, dl = self.d[sel], self.f[sel], self.dl[sel]
         pos = None
         if self.pos is not None:
-            pos = self.pos[_ranges(self.pstart[sel], f)] if len(sel) else \
+            pos = self.pos[index_ranges(self.pstart[sel], f)] if len(sel) else \
                 self.pos[:0]
         return (d, f, dl), pos
 

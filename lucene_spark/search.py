@@ -43,9 +43,9 @@ reader-resident postings snapshot, ``Index.resident_postings``), and one
 collect of its own rows on a larger index; the distributed path launches 2
 (search) or 3 (search_many), plus one for a tombstone or filter mask.  The
 driver holds at most ``LOCAL_SCORE_MAX_POSTINGS`` postings of a query — or
-of the resident snapshot, ~21 bytes per posting plus ~1.5 per position on a
-positional index (~5–6 MB at the bound, BENCH.md) — and otherwise k rows per
-segment.
+of the resident snapshot, decoded at load, ~29 bytes per posting plus ~1.5
+per position on a positional index (~7–8 MB at the bound, BENCH.md) — and
+otherwise k rows per segment.
 """
 
 from __future__ import annotations
@@ -2534,7 +2534,8 @@ def search(
     most that many postings (the rows come from the reader-resident
     postings snapshot, loaded by the handle's first such query), else 1
     (a collect of the query's rows), instead of 2.  The driver holds at
-    most the bound's postings (~21 bytes each in the snapshot).  That path
+    most the bound's postings (~29 bytes each in the snapshot, which holds
+    them decoded, so a resident query decodes no posting).  That path
     is pure driver Python with no pandas in it: the query's Arrow rows go
     straight to the kernel, one segment at a time, and its hits come back
     as arrays.

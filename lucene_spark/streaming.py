@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .analysis import ENGLISH_STOP_WORDS
+from .codecs import decode_positions, decode_rows
 from .index import (
     PARTIALS_SCHEMA,
     _append_segments,
@@ -211,48 +212,35 @@ def _dense_remap(docs: DataFrame, base: int = 0):
 
 def _explode_remap_pass(old_seg_size, has_pos, seg_size=None, runs=None):
     """mapInPandas body: posting rows → their postings as flat numpy arrays
-    (no per-posting Python objects).  With broadcast remap ``runs``
+    (no per-posting Python objects), each batch decoded at once by
+    ``decode_rows``.  With broadcast remap ``runs``
     (run_old, run_new, run_len), docids falling in remap holes (deletes /
     gaps) are dropped, new ids assigned inline — no join — and each batch
     is packed into PARTIALS_SCHEMA chunks at ``seg_size`` (the remap keeps
     docid order, so an old row packs to one chunk per new segment it
     spans).  With runs=None, global docids are emitted unchanged, one row
     per posting (``_flat_schema``), for a downstream remap join."""
-    from .kernel import TermPostings
 
     def run(batches):
         for pdf in batches:
-            a_term, a_doc, a_tf, a_dl, a_pos = [], [], [], [], []
-            terms = pdf["term"].to_numpy()
-            segs = pdf["seg"].to_numpy(dtype=np.int64)
-            for i in range(len(pdf)):
-                tp = TermPostings(pdf.iloc[i], old_seg_size)
-                d, f, dls = tp.decode()
-                d = d + segs[i] * old_seg_size
-                pos = tp.positions_flat() if has_pos else None
-                if runs is not None:
-                    run_old, run_new, run_len = runs
-                    ri = np.searchsorted(run_old, d, side="right") - 1
-                    ric = np.clip(ri, 0, max(len(run_old) - 1, 0))
-                    keep = (ri >= 0) & (d - run_old[ric] < run_len[ric])
-                    if not keep.all():
-                        if pos is not None:
-                            pos = pos[np.repeat(keep, f)]
-                        d, f, dls, ric = d[keep], f[keep], dls[keep], ric[keep]
-                    if len(d) == 0:
-                        continue
-                    d = run_new[ric] + (d - run_old[ric])
-                a_term.append(np.full(len(d), terms[i], dtype=object))
-                a_doc.append(d)
-                a_tf.append(f)
-                a_dl.append(dls)
-                if pos is not None:
-                    a_pos.append(pos)
-            if not a_doc:
+            starts, d, tf, dl = decode_rows(pdf)
+            counts = np.diff(starts)
+            term = np.repeat(pdf["term"].to_numpy(), counts)
+            docid = d + np.repeat(pdf["seg"].to_numpy(dtype=np.int64) * old_seg_size, counts)
+            # every row's positions follow one another, each posting's first one raw
+            pos = decode_positions(b"".join(pdf["pos_blob"]), tf) if has_pos else None
+            if runs is not None:
+                run_old, run_new, run_len = runs
+                ri = np.searchsorted(run_old, docid, side="right") - 1
+                ric = np.clip(ri, 0, max(len(run_old) - 1, 0))
+                keep = (ri >= 0) & (docid - run_old[ric] < run_len[ric])
+                if not keep.all():
+                    if pos is not None:
+                        pos = pos[np.repeat(keep, tf)]
+                    term, docid, tf, dl, ric = term[keep], docid[keep], tf[keep], dl[keep], ric[keep]
+                docid = run_new[ric] + (docid - run_old[ric])
+            if not len(docid):
                 continue
-            term, docid = np.concatenate(a_term), np.concatenate(a_doc)
-            tf, dl = np.concatenate(a_tf), np.concatenate(a_dl)
-            pos = np.concatenate(a_pos) if has_pos else None
             if runs is not None:
                 yield _pack_partials(term, docid, tf, dl, seg_size, pos)
                 continue
