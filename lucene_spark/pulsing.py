@@ -13,7 +13,9 @@ query time, pulsed terms are served by a pushdown-pruned scan of this
 vocabulary-sized table and synthesized back into standard posting rows on
 the driver (k tiny rows); the BIG postings table is scanned only for the
 remaining terms — and not at all when every query term is a singleton (the
-id-lookup / tail-term case that dominates at 10^12 docs).
+id-lookup / tail-term case).  The sidecar is read only when the postings are
+not reader-resident, and not by sorted_topk's probe rounds, whose scan is
+already pruned to the probed seg partitions.
 """
 
 from __future__ import annotations

@@ -18,34 +18,30 @@ traced in SURVEY §3.1) with only the collector varying:
      pulsed sidecar, when the index has one);
   3. per segment: each segment's rows are decoded and masked by
      ``kernel.decode_segment`` — tombstones (deny) or filter minus
-     tombstones (allow) as one (docid, seg) frame (``_live_mask``),
-     cogrouped by the one distributed executor (``_per_segment``): segment
-     == Lucene leaf, executor == searcher slice.  search and search_many
-     score with the block-max kernel (a search is a batch of one); a query
-     or batch of at most ``LOCAL_SCORE_MAX_POSTINGS`` postings without
-     ``filter_docs`` runs the same closure on the driver (IndexSearcher
-     runs leaves that fit one slice on the calling thread), its rows from
-     ``_driver_rows`` and its tombstones from the reader-resident live docs
-     (``Index.deleted_docids``, at most that many ids).  That driver path
-     builds no pandas frame: the Arrow rows are grouped by segment into
-     term → row dicts, and each segment's hits come back as plain
-     (qid, docid, score) arrays; only the distributed executor wraps them
-     in the frame applyInPandas needs;
-  4. reduce: each entry point's own collector and its own Spark action —
-     top-k by (score desc, docID asc) (TopDocs.java:93-120; segments are
-     docID ranges so docBase order == docID order), a per-query window, a
-     count sum, sort-order probes, or the scored DataFrame itself.
+     tombstones (allow) — segment == Lucene leaf, executor == searcher
+     slice.  ONE executor, ``_execute``, runs the collector's closure and
+     makes the one driver-or-distributed choice: a plan (or batch) of at
+     most ``LOCAL_SCORE_MAX_POSTINGS`` postings without ``filter_docs``, on
+     an index with at most that many tombstones, runs on the driver
+     (IndexSearcher runs leaves that fit one slice on the calling thread),
+     with no pandas frame: its Arrow rows (``_driver_rows``) are grouped by
+     segment into term → row dicts, masked by the reader-resident live docs
+     (``Index.deleted_docids``).  Anything else runs in ``_per_segment``,
+     the only ``applyInPandas``/``cogroup`` (the mask as one (docid, seg)
+     frame, ``_live_mask``), whose output is collected with one
+     ``toArrow()``; score_docs returns that DataFrame itself;
+  4. reduce, on the driver over arrays whichever path ran: top-k by (score
+     desc, docID asc) per query (TopDocs.java:93-120; a search is a batch of
+     one), a count sum, or sorted_topk's probe rounds.
 
-Spark jobs per call on a warmed handle: a driver-scored search() or
-search_many batch launches none when the whole index holds at most
-``LOCAL_SCORE_MAX_POSTINGS`` postings (its rows are sliced from the
-reader-resident postings snapshot, ``Index.resident_postings``), and one
-collect of its own rows on a larger index; the distributed path launches 2
-(search) or 3 (search_many), plus one for a tombstone or filter mask.  The
-driver holds at most ``LOCAL_SCORE_MAX_POSTINGS`` postings of a query — or
-of the resident snapshot, decoded at load, ~29 bytes per posting plus ~1.5
-per position on a positional index (~7–8 MB at the bound, BENCH.md) — and
-otherwise k rows per segment.
+Spark jobs per executor run on a warmed handle: none on the driver path
+when the whole index holds at most ``LOCAL_SCORE_MAX_POSTINGS`` postings
+(rows sliced from the reader-resident snapshot, ``Index.resident_postings``)
+and one collect on a larger index; 2 on the distributed path, plus one for
+a tombstone or filter mask.  The driver holds at most the bound's postings
+of a query — or of the resident snapshot, decoded at load, ~29 bytes per
+posting plus ~1.5 per position on a positional index (~7–8 MB at the bound,
+BENCH.md) — and otherwise k rows (a top k) or one row (a count) per segment.
 """
 
 from __future__ import annotations
@@ -57,6 +53,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -2205,9 +2202,10 @@ def term_cfs(terms: list[str], index: Index) -> dict[str, int]:
 class _Plan:
     """A query after the createWeight chain: the executable node (scorers
     attached), its scanned terms — present in the index, sorted — with their
-    dfs, and one scorer per scanned term."""
+    dfs, and one scorer per scanned term.  A batch's union, which is all
+    ``_execute`` reads, has no node."""
 
-    node: tuple
+    node: tuple | None
     terms: list[str]
     dfs: dict[str, int]
     scorers: dict
@@ -2270,13 +2268,12 @@ def _plan(
 
 
 # Posting volume — Σ df over the scanned terms of a query, or of a
-# search_many batch's union of terms — at or below which search() and
-# search_many() score on the driver: the posting rows on the driver
-# (``_driver_rows``), then the same per-segment closures the distributed path
-# runs inside applyInPandas, so docids and scores are bit-identical.  That
-# skips the groupBy("seg") shuffle, the Python-UDF stage and the top-k job: 0
-# Spark jobs (resident postings) or 1 (a collect) per search() or batch
-# instead of 2 or 3.  Lucene's IndexSearcher likewise scores on the calling
+# search_many batch's union of terms — at or below which ``_execute`` runs
+# on the driver: the posting rows on the driver (``_driver_rows``), then the
+# same per-segment closures the distributed path runs inside applyInPandas,
+# so results are bit-identical.  That skips the groupBy("seg") shuffle and
+# the Python-UDF stage: 0 Spark jobs (resident postings) or 1 (a collect)
+# per call instead of 2.  Lucene's IndexSearcher likewise scores on the calling
 # thread when the leaves fit one slice (MAX_DOCS_PER_SLICE = 250_000).  Measured crossover (BENCH.md; 50k docs,
 # local[4]): the driver path is faster up to ~570k postings, slower from
 # ~950k, so this bound keeps a margin for hosts with more cores.  The same
@@ -2297,21 +2294,23 @@ def _driver_deny(index: Index, dfs: dict[str, int], terms) -> np.ndarray | None:
     return index.deleted_docids(LOCAL_SCORE_MAX_POSTINGS)
 
 
-def _driver_rows(index: Index, terms: list[str], seg: int | None = None):
-    """The posting rows of ``terms`` (of segment ``seg`` only, when given)
-    on the driver as an Arrow table, None when ``terms`` is empty.  An index
-    of at most ``LOCAL_SCORE_MAX_POSTINGS`` postings serves them from its
-    reader-resident snapshot (``Index.resident_postings``: no Spark job once
-    loaded); a larger one collects them, one job."""
+def _driver_rows(index: Index, terms: list[str], segs: list[int] | None = None):
+    """The posting rows of ``terms`` (of the segments ``segs`` only, when
+    given) on the driver as an Arrow table, None when ``terms`` is empty.
+    An index of at most ``LOCAL_SCORE_MAX_POSTINGS`` postings serves them
+    from its reader-resident snapshot (``Index.resident_postings``: no Spark
+    job once loaded); a larger one collects them, one job."""
     if not terms:
         return None
     snap = index.resident_postings(LOCAL_SCORE_MAX_POSTINGS)
     if snap is not None:
         tab = snap.rows(terms)
-        return tab if seg is None else tab.filter(pc.equal(tab.column("seg"), seg))
+        if segs is not None:
+            tab = tab.filter(pc.is_in(tab.column("seg"), pa.array(segs, pa.int64())))
+        return tab
     rows = index.postings.filter(F.col("term").isin(terms))
-    if seg is not None:
-        rows = rows.filter(F.col("seg") == seg)
+    if segs is not None:
+        rows = rows.filter(F.col("seg").isin(segs))
     return rows.toArrow()
 
 
@@ -2461,6 +2460,38 @@ def _per_segment(index: Index, rows: DataFrame, schema: str, run,
     return grouped.cogroup(frame.groupBy("seg")).applyInPandas(run_masked, schema=schema)
 
 
+def _execute(index: Index, plan: _Plan, schema: str, run,
+             filter_docs: DataFrame | None = None,
+             segs: list[int] | None = None) -> list[np.ndarray]:
+    """The one executor of search, search_many, count_hits and sorted_topk
+    (IndexSearcher.search(Query, Collector): one leaf loop, whatever the
+    collector): ``run(seg, term_rows, allow, deny)`` over every segment
+    holding the plan's terms — only ``segs``, when given — → one array per
+    column of ``schema``, concatenated over the segments, whichever path ran.
+
+    The plan's terms (Σ df ≤ ``LOCAL_SCORE_MAX_POSTINGS``), no
+    ``filter_docs`` and tombstones within the bound run on the driver
+    (``_segments_on_driver``, rows from ``_driver_rows``); anything else runs
+    in ``_per_segment`` and its per-segment output comes back in one
+    ``toArrow()`` — for a top-k ``run``, k rows per segment.  ``segs`` prunes
+    the scan to those seg partitions, so the pulsed sidecar is not read
+    then: it would cost a job per call to spare a scan already pruned."""
+    deny = None if filter_docs is not None else _driver_deny(index, plan.dfs, plan.terms)
+    synth, scan_terms = (([], plan.terms) if segs is not None
+                         else _pulsed_rows(index, plan.terms, plan.dfs))
+    if deny is not None:
+        return _segments_on_driver(_driver_rows(index, scan_terms, segs), synth,
+                                   schema, run, deny, index.seg_size)
+    rows, mask = _posting_rows_df(index, scan_terms, synth), _live_mask(index, filter_docs)
+    if segs is not None:
+        probe = F.col("seg").isin(segs)
+        rows = rows.filter(probe)
+        mask = None if mask is None else (mask[0].filter(probe), mask[1])
+    tab = _per_segment(index, rows, schema, run, mask).toArrow()
+    return [np.asarray(tab.column(n).to_numpy(zero_copy_only=False), dtype=dtype)
+            for n, dtype in _fields(schema)]
+
+
 _HITS = "qid string, docid long, score double"
 
 
@@ -2527,76 +2558,41 @@ def search(
     a plain Catalyst filter producing the docid set, then cogroups with the
     postings by segment so each kernel masks before ranking).
 
-    Small queries — at most ``LOCAL_SCORE_MAX_POSTINGS`` postings (Σ df of
-    the scanned terms, read from ``Index.term_stats``), no ``filter_docs``,
-    at most that many tombstones — are scored on the driver, bit-identical
-    to the distributed path: 0 Spark jobs when the whole index holds at
-    most that many postings (the rows come from the reader-resident
-    postings snapshot, loaded by the handle's first such query), else 1
-    (a collect of the query's rows), instead of 2.  The driver holds at
-    most the bound's postings (~29 bytes each in the snapshot, which holds
-    them decoded, so a resident query decodes no posting).  That path
-    is pure driver Python with no pandas in it: the query's Arrow rows go
-    straight to the kernel, one segment at a time, and its hits come back
-    as arrays.
+    A search is a batch of one of ``search_many``'s scoring, run by
+    ``_execute``: small queries — at most ``LOCAL_SCORE_MAX_POSTINGS``
+    postings (Σ df of the scanned terms, read from ``Index.term_stats``), no
+    ``filter_docs``, at most that many tombstones — are scored on the
+    driver, bit-identical to the distributed path, in pure driver Python
+    with no pandas: 0 Spark jobs when the whole index holds at most that
+    many postings (the reader-resident snapshot, loaded by the handle's
+    first such query, holds them decoded), else 1 (a collect of the query's
+    rows), instead of 2.
 
     ``after``: searchAfter cursor ``(score, docid)`` of the LAST hit of the
     previous page (IndexSearcher.searchAfter, search/IndexSearcher.java:
     470-511 → PagingTopScoreDocCollector): only hits strictly after it in
     (score desc, docid asc) order are collected, so page N costs the same
-    as page 1 — k rows per segment, k rows to the driver — instead of the
+    as page 1 — k rows per segment to the driver — instead of the
     collect-(N·k)-and-slice driver-side skip.  Pass
     ``(td.scores[-1], td.docids[-1])`` from the previous page computed under
     the SAME precision/similarity/k1/b; scores are compared exactly."""
     plan = _plan(index, query, analyzer, similarity, k1, b, precision, boosts)
-    if plan is None:
-        return TopDocs(np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64),
-                       [] if with_urls else None)
-    # a batch of one: search_many's scoring closure, with this query's boosts
-    run = _topk_segment(index.seg_size, {"q": (plan.node, plan.terms)}, plan.scorers,
-                        {"q": k}, {} if after is None else {"q": after},
-                        similarity, precision, prune)
-    deny = None if filter_docs is not None else _driver_deny(index, plan.dfs, plan.terms)
-    synth, scan_terms = _pulsed_rows(index, plan.terms, plan.dfs)
-    if deny is not None:
-        _, docids, scores = _segments_on_driver(_driver_rows(index, scan_terms), synth,
-                                                _HITS, run, deny, index.seg_size)
-        return _top_docs(index, docids, scores, k, with_urls)
-
-    per_seg = _per_segment(index, _posting_rows_df(index, scan_terms, synth), _HITS,
-                           run, _live_mask(index, filter_docs))
-    # hierarchical reduce: the per-segment top-k rows are cut to a global
-    # top-k IN SPARK (TakeOrderedAndProject — per-partition heaps + a k-row
-    # merge) before anything reaches the driver: it receives k rows, not k
-    # per segment.  Only queries over LOCAL_SCORE_MAX_POSTINGS postings, on
-    # an index with more tombstones than that, or with filter_docs come
-    # this way.
-    # (TopDocs.merge contract: score desc, docID asc — TopDocs.java:93-120.)
-    out = (
-        per_seg.orderBy(F.col("score").desc(), F.col("docid").asc())
-        .limit(k)
-        .collect()
-    )
-    return _top_docs(index, np.array([r["docid"] for r in out], dtype=np.int64),
-                     np.array([r["score"] for r in out], dtype=np.float64), k, with_urls)
+    td = _search_batch(index, ["q"], {} if plan is None else {"q": plan}, {"q": k}, k,
+                       {} if after is None else {"q": after}, similarity, precision,
+                       prune, filter_docs)["q"]
+    return _with_urls(index, td) if with_urls else td
 
 
-def _top_docs(index: Index, docids: np.ndarray, scores: np.ndarray, k: int,
-              with_urls: bool) -> TopDocs:
-    """Per-segment hits → the global top k (TopDocs.merge: score desc, docID
-    asc — TopDocs.java:93-120), with urls when asked."""
-    order = np.lexsort((docids, -scores))[:k]
-    docids, scores = docids[order], scores[order]
-    urls = None
-    if with_urls:
-        urls = []
-        if len(docids):
-            url_rows = index.docs.filter(F.col("docid").isin(docids.tolist())).select(
-                "docid", "url"
-            ).collect()
-            umap = {r["docid"]: r["url"] for r in url_rows}
-            urls = [umap.get(int(d)) for d in docids]
-    return TopDocs(docids, scores, urls)
+def _with_urls(index: Index, td: TopDocs) -> TopDocs:
+    """``td`` with the url of each hit, looked up in ``index.docs``."""
+    urls = []
+    if len(td.docids):
+        url_rows = index.docs.filter(F.col("docid").isin(td.docids.tolist())).select(
+            "docid", "url"
+        ).collect()
+        umap = {r["docid"]: r["url"] for r in url_rows}
+        urls = [umap.get(int(d)) for d in td.docids]
+    return TopDocs(td.docids, td.scores, urls)
 
 
 def score_docs(
@@ -2636,11 +2632,17 @@ def score_docs(
 
 
 def count_hits(index: Index, query: str | tuple, analyzer=ENGLISH_STOP_WORDS) -> int:
-    """Distributed TotalHitCountCollector
-    (search/TotalHitCountCollector.java:28): per-segment match COUNTS are
-    computed inside the kernel (no scoring) and summed by a Spark
-    aggregation — only one number per segment ever moves, never hits.
-    Tombstoned docs are excluded (liveDocs semantics)."""
+    """TotalHitCountCollector (search/TotalHitCountCollector.java:28):
+    per-segment match COUNTS are computed inside the kernel (no scoring) by
+    ``_execute`` and summed on the driver — only one number per segment
+    ever moves, never hits.  Tombstoned docs are excluded (liveDocs
+    semantics).  A warmed resident index counts with no Spark job."""
+    return _count_hits(index, query, analyzer)
+
+
+def _count_hits(index: Index, query: str | tuple, analyzer,
+                filter_docs: DataFrame | None = None) -> int:
+    """count_hits, masked by ``filter_docs`` (an allow mask) when given."""
     plan = _plan(index, query, analyzer, precision="float64")
     if plan is None:
         return 0
@@ -2650,10 +2652,8 @@ def count_hits(index: Index, query: str | tuple, analyzer=ENGLISH_STOP_WORDS) ->
         _, pbt, pos = decode_segment(node, term_rows, seg_size, allow, deny)
         return (np.array([len(match_docids(node, pbt, pos))], dtype=np.int64),)
 
-    rows = index.postings.filter(F.col("term").isin(plan.terms))
-    per_seg = _per_segment(index, rows, "n long", count, _live_mask(index))
-    total = per_seg.agg(F.sum("n")).collect()[0][0]
-    return int(total or 0)
+    (n,) = _execute(index, plan, "n long", count, filter_docs)
+    return int(n.sum())
 
 
 def sorted_topk(
@@ -2672,12 +2672,14 @@ def sorted_topk(
     k competitive hits per leaf; IndexWriterConfig.setIndexSort,
     index/IndexSorter.java).
 
-    Spark shape: docID-range segments are ordered by the sort key, so the
-    engine probes segments in sort order, geometrically widening
+    Shape: docID-range segments are ordered by the sort key, so the engine
+    probes segments in sort order, geometrically widening
     (``probe_segments``, then 2x per round) until k matches accumulate —
-    segments past the answer are NEVER read, and the postings scan prunes to
-    the probed seg partitions (seg is the partition key on disk).  Each
-    probed segment returns at most k docids (its own early termination).
+    segments past the answer are NEVER read.  Each round is one
+    ``_execute`` over its segments (a distributed scan prunes to the probed
+    seg partitions), and each probed segment returns at most k docids (its
+    own early termination).  The segment list comes from the resident
+    postings (no job) or a distinct scan of the query's rows.
 
     Returns sorted docids (ascending or descending by index order); with
     ``return_stats`` → (docids, {"segments_probed": n, "segments_total": m}).
@@ -2686,12 +2688,14 @@ def sorted_topk(
     if plan is None:
         empty = np.empty(0, dtype=np.int64)
         return (empty, {"segments_probed": 0, "segments_total": 0}) if return_stats else empty
-    rows = index.postings.filter(F.col("term").isin(plan.terms))
-    segs = sorted(
-        (r["seg"] for r in rows.select("seg").distinct().collect()),
-        reverse=not ascending,
-    )
-    node, seg_size, mask = plan.node, index.seg_size, _live_mask(index)
+    snap = index.resident_postings(LOCAL_SCORE_MAX_POSTINGS)
+    if snap is not None:
+        found = np.unique(snap.rows(plan.terms).column("seg").to_numpy()).tolist()
+    else:
+        found = [r["seg"] for r in index.postings.filter(F.col("term").isin(plan.terms))
+                 .select("seg").distinct().collect()]
+    segs = sorted(found, reverse=not ascending)
+    node, seg_size = plan.node, index.seg_size
 
     def first_k(seg, term_rows, allow, deny):
         _, pbt, pos = decode_segment(node, term_rows, seg_size, allow, deny)
@@ -2701,12 +2705,8 @@ def sorted_topk(
     acc: list[int] = []
     i, batch = 0, max(1, probe_segments)
     while i < len(segs) and len(acc) < k:
-        probe = F.col("seg").isin([int(s) for s in segs[i : i + batch]])
-        got = _per_segment(
-            index, rows.filter(probe), "docid long", first_k,
-            None if mask is None else (mask[0].filter(probe), mask[1]),
-        ).collect()
-        acc.extend(r["docid"] for r in got)
+        (got,) = _execute(index, plan, "docid long", first_k, segs=segs[i : i + batch])
+        acc.extend(got.tolist())
         i += batch
         batch *= 2  # geometric widening: O(log segments) probe rounds worst case
     out = np.array(sorted(acc, reverse=not ascending)[:k], dtype=np.int64)
@@ -2739,67 +2739,51 @@ def search_many(
     ReadTask loop); Spark's analog is batching: a single postings scan +
     shuffle for the union of all query terms, with every segment kernel
     evaluating every query against its local rows.  Per-query driver work is
-    microseconds; the fixed Spark cost (3 jobs: the shuffle-map stage, the
-    Python-UDF scoring stage and the per-query top-k window) is paid once for
-    the whole batch instead of per query.  A batch whose union of terms holds
-    at most ``LOCAL_SCORE_MAX_POSTINGS`` postings, on an index with at most
-    that many tombstones, is scored on the driver with the same results: 0
-    jobs when the whole index holds at most that many postings (reader-
-    resident snapshot), else 1 collect of the batch's rows.  As in
-    ``search``, that path builds no pandas frame: each segment's Arrow rows
-    are scored for every query of the batch, and one lexsort over the
-    (qid, score, docid) hit arrays cuts every query's top k.
+    microseconds; the fixed Spark cost (2 jobs: the shuffle-map stage and
+    the Python-UDF scoring stage, whose per-segment top-k rows are
+    collected) is paid once for the whole batch instead of per query.  A
+    batch whose union of terms holds at most ``LOCAL_SCORE_MAX_POSTINGS``
+    postings, on an index with at most that many tombstones, is scored on
+    the driver with the same results: 0 jobs when the whole index holds at
+    most that many postings (reader-resident snapshot), else 1 collect of
+    the batch's rows.  Either way one lexsort over the (qid, score, docid)
+    hit arrays cuts every query's top k.
     """
-    empty = TopDocs(np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
     plans = {}
     for qid, q in queries.items():
         plan = _plan(index, q, analyzer, similarity, k1, b, precision, batch_qid=qid)
         if plan is not None:
             plans[qid] = plan
-    if not plans:
-        return {qid: empty for qid in queries}
-
-    scorers = {t: sc for p in plans.values() for t, sc in p.scorers.items()}
-    dfs = {t: p.dfs[t] for p in plans.values() for t in p.terms}
     ks = {qid: (ks or {}).get(qid, k) for qid in plans}
-    run = _topk_segment(index.seg_size, {qid: (p.node, p.terms) for qid, p in plans.items()},
-                        scorers, ks, afters or {}, similarity, precision, prune)
-    deny = _driver_deny(index, dfs, scorers)
-    synth, scan_terms = _pulsed_rows(index, sorted(scorers), dfs)
-    if deny is not None:
-        # small batch: its postings on the driver, every segment scored there
-        # by the same closure (see LOCAL_SCORE_MAX_POSTINGS)
-        qids, docids, scores = _segments_on_driver(_driver_rows(index, scan_terms), synth,
-                                                   _HITS, run, deny, index.seg_size)
-        return _top_docs_many(queries, qids, docids, scores, ks, k)
+    return _search_batch(index, queries, plans, ks, k, afters or {}, similarity,
+                         precision, prune)
 
-    # batched queries must not resurrect deleted docs (Lucene: every scorer
-    # sees liveDocs)
-    per_seg = _per_segment(index, _posting_rows_df(index, scan_terms, synth), _HITS,
-                           run, _live_mask(index))
-    # hierarchical per-query reduce in Spark: rank per qid and keep k before
-    # collect — ships sum(k_q) rows to the driver instead of k x num_segments
-    from pyspark.sql.window import Window
 
-    w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("docid").asc())
-    kmax = max(ks.values())
-    collected = (
-        per_seg.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= F.lit(kmax))
-        .collect()
-    )
-    return _top_docs_many(queries, np.array([r["qid"] for r in collected], dtype=object),
-                          np.array([r["docid"] for r in collected], dtype=np.int64),
-                          np.array([r["score"] for r in collected], dtype=np.float64), ks, k)
+def _search_batch(index: Index, queries, plans: dict[str, _Plan], ks: dict[str, int],
+                  k: int, afters: dict, similarity: str, precision: str, prune: bool,
+                  filter_docs: DataFrame | None = None) -> dict[str, TopDocs]:
+    """search/search_many's one batch: the planned queries' shared scoring
+    closure (``_topk_segment``) run by ``_execute`` over the union of their
+    terms, then each query's top k (``_top_docs_many``)."""
+    hits = [np.empty(0, dtype) for _, dtype in _fields(_HITS)]
+    if plans:
+        scorers = {t: sc for p in plans.values() for t, sc in p.scorers.items()}
+        dfs = {t: p.dfs[t] for p in plans.values() for t in p.terms}
+        run = _topk_segment(index.seg_size, {qid: (p.node, p.terms) for qid, p in plans.items()},
+                            scorers, ks, afters, similarity, precision, prune)
+        hits = _execute(index, _Plan(None, sorted(scorers), dfs, scorers), _HITS, run,
+                        filter_docs)
+    return _top_docs_many(queries, *hits, ks, k)
 
 
 def _top_docs_many(queries, qids: np.ndarray, docids: np.ndarray, scores: np.ndarray,
                    ks: dict[str, int], k: int) -> dict[str, TopDocs]:
     """Hits as aligned (qid, docid, score) arrays → per-query top ``ks[qid]``
-    (default ``k``) in (score desc, docid asc) order; queries without hits
-    get empty TopDocs.  Each TopDocs gathers its own arrays: a slice would
-    keep every hit of the batch alive for as long as the caller keeps one
-    query's result."""
+    (default ``k``) in (score desc, docid asc) order (TopDocs.merge,
+    TopDocs.java:93-120; segments are docID ranges, so docBase order ==
+    docID order); queries without hits get empty TopDocs.  Each TopDocs
+    gathers its own arrays: a slice would keep every hit of the batch alive
+    for as long as the caller keeps one query's result."""
     names, code = np.unique(qids, return_inverse=True)
     order = np.lexsort((docids, -scores, code))
     starts = np.searchsorted(code[order], np.arange(len(names) + 1))
@@ -2845,7 +2829,7 @@ def explain(
         return pd.DataFrame(columns=cols)
     seg, local = divmod(int(docid), index.seg_size)
     synth, scan_terms = _pulsed_rows(index, plan.terms, plan.dfs)
-    table = _driver_rows(index, scan_terms, seg)
+    table = _driver_rows(index, scan_terms, [seg])
     rows = _arrow_rows(table) + [r for r in synth if r["seg"] == seg]
     found = {}  # term -> its (freq, dl) slices at the doc
     for r in rows:
@@ -3189,15 +3173,16 @@ def search_with_total(
     exactly at the threshold and report GREATER_THAN_OR_EQUAL_TO beyond
     it, which is what unlocks block-max pruning in the reference.
 
-    Distributed contract: the count is ONE aggregate (per-segment counts
-    summed Spark-side, count_hits), so the exact value is kept even past
-    the threshold; the RELATION still follows the reference's API —
-    'EQUAL_TO' when count <= threshold, else 'GREATER_THAN_OR_EQUAL_TO'
-    (the reported value is trivially a valid >= bound).  Consumers that
-    branch on TotalHits.Relation behave identically.
+    The count is ONE aggregate (count_hits' per-segment counts, summed on
+    the driver, under the same ``filter_docs`` as the top k), so the exact
+    value is kept even past the threshold; the RELATION still follows the
+    reference's API — 'EQUAL_TO' when count <= threshold, else
+    'GREATER_THAN_OR_EQUAL_TO' (the reported value is trivially a valid >=
+    bound).  Consumers that branch on TotalHits.Relation behave identically.
     """
     td = search(index, query, k=k, **kw)
-    total = count_hits(index, query, analyzer=kw.get("analyzer", ENGLISH_STOP_WORDS))
+    total = _count_hits(index, query, kw.get("analyzer", ENGLISH_STOP_WORDS),
+                        kw.get("filter_docs"))
     rel = "EQUAL_TO" if total <= total_hits_threshold else "GREATER_THAN_OR_EQUAL_TO"
     return td, total, rel
 

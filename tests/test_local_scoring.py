@@ -133,7 +133,7 @@ def test_search_many_parity(spark, monkeypatch, idx, by_df, k, similarity):
     for qid in batch:
         assert len(local[qid].docids) > 0
         _assert_same(local[qid], dist[qid])
-    assert (lj, dj) == (0, 3)
+    assert (lj, dj) == (0, 2)
 
 
 def test_search_after_cursor_parity(spark, monkeypatch, idx, by_df):
@@ -189,6 +189,67 @@ def test_all_pulsed_query_parity(spark, monkeypatch, pulsed, singles):
         spark, monkeypatch, lambda: search_many(pulsed, {"s": q}, k=10))
     _assert_same(many["s"], many_d["s"])
     assert mj == 0
+
+
+@pytest.fixture(scope="module")
+def tombstoned(spark, idx):
+    """``idx`` with every tenth doc deleted, its live docs loaded."""
+    handle = idx.delete_docs(spark.range(0, 600, 10).withColumnRenamed("id", "docid"))
+    assert len(handle.deleted_docids(S.LOCAL_SCORE_MAX_POSTINGS)) == 60
+    return handle
+
+
+HANDLES = ["idx", "tombstoned", "pulsed"]
+# forced-distributed jobs of one executor run: the shuffle-map stage and the
+# scoring stage, one more for the tombstone mask and one for a sidecar lookup
+_DIST_JOBS = {"idx": 2, "tombstoned": 3, "pulsed": 2}
+
+
+@pytest.mark.parametrize("handle", HANDLES)
+@pytest.mark.parametrize("kind", KINDS)
+def test_count_hits_parity(spark, monkeypatch, request, by_df, handle, kind):
+    h = request.getfixturevalue(handle)
+    q = _queries(by_df)[kind]
+    (local, lj), (dist, dj) = _both_paths(spark, monkeypatch, lambda: S.count_hits(h, q))
+    assert local == dist > 0
+    assert (lj, dj) == (0, _DIST_JOBS[handle])
+    assert local == len(search(h, q, k=600, prune=False).docids)
+
+
+@pytest.mark.parametrize("handle", HANDLES)
+def test_count_hits_of_singletons_parity(spark, monkeypatch, request, by_df, singles, handle):
+    h = request.getfixturevalue(handle)
+    q = f"{by_df[3]} OR " + " OR ".join(singles[:6])
+    (local, lj), (dist, dj) = _both_paths(spark, monkeypatch, lambda: S.count_hits(h, q))
+    assert local == dist == len(search(h, q, k=600).docids)
+    assert (lj, dj) == (0, _DIST_JOBS[handle] + (handle == "pulsed"))
+
+
+@pytest.mark.parametrize("handle", HANDLES)
+@pytest.mark.parametrize("ascending", [True, False])
+def test_sorted_topk_parity(spark, monkeypatch, request, by_df, singles, handle, ascending):
+    h = request.getfixturevalue(handle)
+    q = f"{by_df[5]} OR {singles[0]} OR {singles[1]}"
+    (local, lj), (dist, dj) = _both_paths(spark, monkeypatch, lambda: S.sorted_topk(
+        h, q, k=150, ascending=ascending, probe_segments=1, return_stats=True))
+    (docids, stats), (dist_docids, dist_stats) = local, dist
+    assert docids.dtype == dist_docids.dtype == np.int64
+    assert docids.tolist() == dist_docids.tolist()
+    assert stats == dist_stats == {"segments_probed": 3, "segments_total": 6}
+    assert len(set((docids // 100).tolist())) > 1  # k crosses segments
+    want = sorted(search(h, q, k=600, prune=False).docids.tolist(), reverse=not ascending)
+    assert docids.tolist() == want[:150]
+    # two probe rounds; the distributed path lists the segments first
+    assert (lj, dj) == (0, 2 + 2 * _DIST_JOBS[handle])
+
+
+def test_search_with_total_counts_under_filter_docs(spark, idx):
+    allow = spark.range(0, 50).withColumnRenamed("id", "docid")
+    td, total, rel = S.search_with_total(idx, "court", k=100, filter_docs=allow)
+    assert 0 < len(td.docids) == total < 50
+    assert (td.docids < 50).all() and rel == "EQUAL_TO"
+    unfiltered = S.search_with_total(idx, "court", k=100)[1]
+    assert unfiltered == S.count_hits(idx, "court") > total
 
 
 def test_pulse_index_hands_on_snapshots(idx):

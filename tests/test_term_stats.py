@@ -2,11 +2,12 @@
 point reads df/cf from a once-loaded snapshot of the termdict, so a query
 launches no Spark job for its term stats — and the snapshot agrees with the
 termdict on every kind of handle.  Job counts are pinned on every scoring
-path: distributed (2 per search(), 3 per search_many batch); for queries
+path: distributed (2 per search() or search_many batch); for queries
 within ``LOCAL_SCORE_MAX_POSTINGS``, driver-scored from the reader-resident
 postings when the whole index is within the bound (0 each once loaded) or
 from one collect when only the query is (1 each); and for count_hits,
-sorted_topk and score_docs on a plain and a tombstoned handle."""
+sorted_topk and score_docs on a plain and a tombstoned handle, distributed
+and (count_hits, sorted_topk) resident."""
 
 import importlib
 import itertools
@@ -77,8 +78,8 @@ def test_search_launches_two_jobs(spark, idx, similarity, distributed):
 
 
 @pytest.mark.parametrize("similarity", ["bm25", "lmd", "dfi_standardized"])
-def test_search_many_launches_three_jobs(spark, idx, similarity, distributed):
-    assert _jobs(spark, lambda: search_many(idx, BATCH, k=5, similarity=similarity)) == 3
+def test_search_many_launches_two_jobs(spark, idx, similarity, distributed):
+    assert _jobs(spark, lambda: search_many(idx, BATCH, k=5, similarity=similarity)) == 2
 
 
 def _bound_between(monkeypatch, index, terms):
@@ -123,15 +124,33 @@ def deleted(spark, idx):
     return idx.delete_docs(spark.range(0, 600, 7).withColumnRenamed("id", "docid"))
 
 
-# (plain, tombstoned) — the tombstoned handle adds the liveDocs mask's job
+ENTRY_POINTS = {
+    "count_hits": lambda h: count_hits(h, QUERY),
+    "sorted_topk": lambda h: sorted_topk(h, "court", k=5),
+    "sorted_topk_rounds": lambda h: sorted_topk(h, QUERY, k=200, probe_segments=1),
+    "score_docs": lambda h: score_docs(h, QUERY).count(),
+}
+
+
+# distributed (plain, tombstoned) — the tombstoned handle adds the liveDocs
+# mask's job to each distributed executor run; sorted_topk's segment list
+# (a distinct scan off a non-resident index) is 2 more
 @pytest.mark.parametrize("name, call, want", [
-    ("count_hits", lambda h: count_hits(h, QUERY), (3, 4)),
-    ("sorted_topk", lambda h: sorted_topk(h, "court", k=5), (4, 5)),
-    ("sorted_topk_rounds", lambda h: sorted_topk(h, QUERY, k=200, probe_segments=1), (6, 8)),
-    ("score_docs", lambda h: score_docs(h, QUERY).count(), (3, 4)),
+    ("count_hits", ENTRY_POINTS["count_hits"], (2, 3)),
+    ("sorted_topk", ENTRY_POINTS["sorted_topk"], (4, 5)),
+    ("sorted_topk_rounds", ENTRY_POINTS["sorted_topk_rounds"], (6, 8)),
+    ("score_docs", ENTRY_POINTS["score_docs"], (3, 4)),
 ])
-def test_other_entry_point_jobs(spark, idx, deleted, name, call, want):
+def test_other_entry_point_jobs(spark, idx, deleted, name, call, want, distributed):
     assert (_jobs(spark, lambda: call(idx)), _jobs(spark, lambda: call(deleted))) == want
+
+
+@pytest.mark.parametrize("name", ["count_hits", "sorted_topk", "sorted_topk_rounds"])
+def test_resident_count_and_sorted_topk_launch_no_job(spark, idx, deleted, name):
+    assert idx.resident_postings(S.LOCAL_SCORE_MAX_POSTINGS) is not None
+    assert len(deleted.deleted_docids(S.LOCAL_SCORE_MAX_POSTINGS)) == 86  # warm: live docs
+    call = ENTRY_POINTS[name]
+    assert (_jobs(spark, lambda: call(idx)), _jobs(spark, lambda: call(deleted))) == (0, 0)
 
 
 @pytest.fixture(scope="module")
