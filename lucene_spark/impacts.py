@@ -71,13 +71,15 @@ def block_frontiers(
 def max_scores_per_block(
     imp_freqs: np.ndarray, imp_norms: np.ndarray, offsets: np.ndarray, scorer
 ) -> np.ndarray:
-    """Per-block max possible score for a given BM25Scorer — vectorized."""
-    if len(imp_freqs) == 0:
-        return np.zeros(max(len(offsets) - 1, 0), dtype=np.float64)
-    all_scores = scorer.score_from_dl(np.asarray(imp_freqs), np.asarray(imp_norms))
-    nblocks = len(offsets) - 1
-    out = np.empty(nblocks, dtype=np.float64)
-    for bi in range(nblocks):
-        s, e = offsets[bi], offsets[bi + 1]
-        out[bi] = all_scores[s:e].max() if e > s else 0.0
+    """Per-block max possible score for a given BM25Scorer — vectorized:
+    one ``np.maximum.reduceat`` over the non-empty blocks (their impacts
+    are contiguous runs of the flat arrays); an empty block scores 0.0."""
+    offsets = np.asarray(offsets)
+    out = np.zeros(max(len(offsets) - 1, 0), dtype=np.float64)
+    starts = offsets[:-1]
+    full = offsets[1:] > starts
+    if full.any():
+        end = int(offsets[-1])
+        all_scores = scorer.score_from_dl(np.asarray(imp_freqs)[:end], np.asarray(imp_norms)[:end])
+        out[full] = np.maximum.reduceat(all_scores, starts[full])
     return out

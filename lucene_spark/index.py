@@ -116,6 +116,14 @@ class TermStats:
                         zip(self.df[pos].tolist(), self.cf[pos].tolist())))
 
 
+def row_dicts(columns: dict) -> list[dict]:
+    """Posting rows given column-wise (name → values) → one dict per row, the
+    rows ``kernel.TermPostings`` reads — the row builder of the resident
+    snapshot and of both query executors."""
+    names = list(columns)
+    return [dict(zip(names, vals)) for vals in zip(*columns.values())]
+
+
 # postings the snapshot fill decodes per slice of rows (a slice ends at the
 # first row boundary past it), so that the fill's transients — int64
 # arrays, the tail walk's Python ints — stay near a MB at any index size
@@ -135,15 +143,20 @@ class PostingsSnapshot:
     columns, against ~5 for the blobs they replace; the rest is per-row
     metadata: term, counts and impacts), plus about 1.5 per position on a
     positional index (BENCH.md).
-    ``terms`` is the term column as an object array, so a query's rows are
-    found by binary search (``np.searchsorted``) and cut out with one
-    ``take``.  Loaded with one Arrow collect.  ``source`` is the postings
-    DataFrame the table was read from — the cache key
-    ``Index.resident_postings`` checks."""
+
+    ``table`` is the storage; the query path reads it through zero-copy
+    numpy views taken at load: ``scalars`` (column → one value per row;
+    the term column is an object array, so a query's rows are found by
+    binary search) and ``flat`` (list or binary column → its flat
+    values and per-row offsets).  ``rows`` cuts a row's fields out of those
+    views, so a query copies no postings.  Loaded with one Arrow collect.
+    ``source`` is the postings DataFrame the table was read from — the cache
+    key ``Index.resident_postings`` checks."""
 
     source: DataFrame
     table: pa.Table
-    terms: np.ndarray
+    scalars: dict[str, np.ndarray]
+    flat: dict[str, tuple[np.ndarray, np.ndarray]]
 
     @classmethod
     def load(cls, postings: DataFrame) -> "PostingsSnapshot":
@@ -164,15 +177,39 @@ class PostingsSnapshot:
         shared = pa.array(offsets)  # zero-copy views, one offsets buffer for all three
         for name, v in zip(DECODED_COLUMNS, values):
             tab = tab.append_column(name, pa.ListArray.from_arrays(shared, pa.array(v)))
-        return cls(postings, tab, np.asarray(tab.column("term").to_numpy(), dtype=object))
+        tab = tab.combine_chunks()
+        scalars, flat = {}, {}
+        for name, col in zip(tab.column_names, tab.columns):
+            # one chunk (none when empty); ChunkedArray.combine_chunks would copy it
+            arr = col.chunk(0) if col.num_chunks else col.combine_chunks()
+            if pa.types.is_list(arr.type):
+                flat[name] = (arr.values.to_numpy(), arr.offsets.to_numpy())
+            elif pa.types.is_binary(arr.type):
+                _, off, data = arr.buffers()
+                flat[name] = (np.frombuffer(data, dtype=np.uint8) if data is not None
+                              else np.empty(0, dtype=np.uint8),
+                              np.frombuffer(off, dtype=np.int32, count=len(arr) + 1,
+                                            offset=4 * arr.offset))
+            else:
+                scalars[name] = arr.to_numpy(zero_copy_only=False)
+        return cls(postings, tab, scalars, flat)
 
-    def rows(self, terms) -> pa.Table:
-        """The posting rows of ``terms`` as an Arrow table (absent terms have
-        none)."""
+    def rows(self, terms, segs=None) -> list[dict]:
+        """The posting rows of ``terms`` (of the segments ``segs`` only, when
+        given) as row dicts (absent terms have none): scalars as Python
+        values, list and binary fields as numpy slices of the snapshot's
+        views — the decoded postings stay the int32 arrays they were
+        decoded into."""
         q = np.array(sorted(set(terms)), dtype=object)
-        lo = np.searchsorted(self.terms, q, side="left")
-        n = np.searchsorted(self.terms, q, side="right") - lo
-        return self.table.take(index_ranges(lo, n))
+        keys = self.scalars["term"]
+        lo = np.searchsorted(keys, q, side="left")
+        idx = index_ranges(lo, np.searchsorted(keys, q, side="right") - lo)
+        if segs is not None:
+            idx = idx[np.isin(self.scalars["seg"][idx], segs)]
+        cols = {name: a[idx].tolist() for name, a in self.scalars.items()}
+        for name, (values, off) in self.flat.items():
+            cols[name] = [values[s:e] for s, e in zip(off[idx].tolist(), off[idx + 1].tolist())]
+        return row_dicts(cols)
 
 
 @dataclass(frozen=True)
@@ -281,7 +318,9 @@ class Index:
         on a positional index (``pos_blob`` grows with Σ tf; BENCH.md), so the
         snapshot is bounded by the bound that already caps one driver-scored
         query's collect.  The load decodes every posting (~0.1 s per 200k
-        postings), which the handle's first driver-scored query pays."""
+        postings), which the handle's first driver-scored query pays; after
+        it, ``PostingsSnapshot.rows`` hands out rows whose postings are
+        views of the snapshot, not copies."""
         if int(self.term_stats().df.sum()) > max_postings:
             return None
         ps = self._postings

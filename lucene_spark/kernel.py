@@ -9,15 +9,19 @@ block-at-a-time instead of doc-at-a-time: postings decode into numpy arrays
 rank-identical results, better constant factors in Python.
 
 Pruning design ("windowed BMW"): the segment's docID space is cut into fixed
-windows.  For each query term, per-block max impacts (impacts.py) are mapped
-onto the windows each block overlaps (block_last_docid gives block→docID-range
-— the skip-list analog, Lucene90SkipWriter.java:158-218).  A window's upper
+windows of 4096 docs (``window_bits=12``).  For each query term, per-block
+max impacts (impacts.py) are mapped onto the windows each block overlaps
+(block_last_docid gives block→docID-range — the skip-list analog,
+Lucene90SkipWriter.java:158-218).  A window's upper
 bound is the sum (OR) / bounded sum (AND) of per-term window maxima.  Windows
 are visited in DESCENDING upper-bound order, so once the top-k heap is full
 and the next window's bound is <= the k-th score, everything remaining is
 non-competitive and the kernel stops — the same early-termination contract as
 TopScoreDocCollector.updateMinCompetitiveScore (TopScoreDocCollector.java:
-203-222) + ImpactsDISI block skipping (ImpactsDISI.java:100-131).
+203-222) + ImpactsDISI block skipping (ImpactsDISI.java:100-131).  A segment
+whose docIDs all fall in ONE window (seg_size <= 4096: every index up to
+~131k docs with the default ``build_index`` seg_size) has nothing to skip,
+so it is scored exhaustively — the bounds would only cost time.
 
 Scoring contracts (must match oracle exactly):
   - per-term float32 score (similarity.BM25Scorer);
@@ -42,8 +46,9 @@ from .similarity import BM25Scorer
 class TermPostings:
     """Decoded-on-demand posting list for one (term, seg) row.  A row that
     carries its postings decoded (the ``DECODED_COLUMNS`` of a resident
-    snapshot row) is taken as decoded; any other row decodes its blobs on
-    the first ``decode()``."""
+    snapshot row: int32 views of the snapshot) is taken as decoded, as it
+    is; any other row decodes its blobs (to int64) on the first
+    ``decode()``."""
 
     def __init__(self, row: dict, seg_size: int):
         self.nblocks = int(row["nblocks"])
@@ -57,7 +62,7 @@ class TermPostings:
         self.pos_blob = bytes(pb) if pb is not None else b""
         self._decoded: tuple[np.ndarray, np.ndarray, np.ndarray] | None = None
         if row.get(DECODED_COLUMNS[0]) is not None:
-            self._decoded = tuple(np.asarray(row[c], dtype=np.int64) for c in DECODED_COLUMNS)
+            self._decoded = tuple(row[c] for c in DECODED_COLUMNS)
         else:
             self._blobs = tuple(bytes(row[c]) for c in ENCODED_COLUMNS)
             self._key = (row.get("term"), row.get("seg"))
@@ -845,9 +850,11 @@ def decode_segment(
     search_many batch decodes each posting list once, not once per query).
     ``tps`` keeps the unmasked TermPostings (their impact bounds remain
     valid upper bounds for pruning); ``pos_by_term`` holds the positions of
-    the node's phrase members, None when it has none.  ``allow`` / ``deny``:
-    sorted local docIDs to keep / drop; a term's positions are cut with the
-    same mask repeated per freq, so they stay aligned with its postings."""
+    the node's phrase members, None when it has none; positional evaluation
+    keys a posting by ``docid << 32``, so their docids are widened to int64
+    (resident rows carry int32).  ``allow`` / ``deny``: sorted local docIDs
+    to keep / drop; a term's positions are cut with the same mask repeated
+    per freq, so they stay aligned with its postings."""
     tps = {
         t: (r if isinstance(r, TermPostings) else TermPostings(r, seg_size))
         for t, r in term_rows.items()
@@ -857,6 +864,9 @@ def decode_segment(
     pos_by_term = {
         t: tps[t].positions_flat() for t in phrase_terms if t in tps
     } if phrase_terms else None
+    for t in pos_by_term or ():
+        d, f, dl = postings_by_term[t]
+        postings_by_term[t] = (d.astype(np.int64, copy=False), f, dl)
     if allow is not None or deny is not None:
         for t, (d, f, dl) in list(postings_by_term.items()):
             m = np.ones(len(d), dtype=bool)
@@ -883,11 +893,16 @@ def segment_topk(
     deny: np.ndarray | None = None,
     after: tuple[float, int] | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Top-k for one segment with windowed block-max pruning.
+    """Top-k for one segment with windowed block-max pruning over windows
+    of ``2**window_bits`` docs (4096).
 
     Returns (local docids, float64 scores holding float32-rounded values in
     lucene mode).  With ``prune=False`` runs the exhaustive path (the oracle
-    duel's "CheckHits" twin — CheckHits.java:602).
+    duel's "CheckHits" twin — CheckHits.java:602).  The exhaustive path
+    also runs when pruning cannot pay: a segment whose local docIDs all fall
+    in one window (``(seg_size - 1) >> window_bits == 0``), where no window
+    can be skipped, or a query whose postings are too few to make the k-th
+    score competitive.
 
     ``allow``: optional sorted array of local docIDs — the FILTER clause mask
     (non-scoring required match); postings are restricted BEFORE ranking, and
@@ -909,17 +924,18 @@ def segment_topk(
         node, term_rows, seg_size, allow, deny)
 
     # cost-based strategy selection (BooleanWeight.scorerSupplier cost
-    # heuristics, search/BooleanWeight.java:318-392): when the union of the
-    # query terms' postings cannot exceed ~2k docs, exhaustive scoring is
-    # cheaper than building per-window bounds — the pruning machinery would
-    # visit every window anyway because the k-th score never becomes
-    # competitive with so few candidates.  Both strategies are
+    # heuristics, search/BooleanWeight.java:318-392): exhaustive scoring is
+    # cheaper than building per-window bounds when the segment is one
+    # window (there is no other window to skip) or when the union of the
+    # query terms' postings cannot exceed ~2k docs (the pruning machinery
+    # would visit every window anyway because the k-th score never becomes
+    # competitive with so few candidates).  Both strategies are
     # rank-identical (asserted by the duel suite), so this is purely a
     # physical choice, like Lucene swapping BulkScorer implementations.
-    if prune:
-        upper_cost = sum(len(d) for d, _, _ in postings_by_term.values())
-        if upper_cost <= max(2 * k, 256):
-            prune = False
+    if prune and ((seg_size - 1) >> window_bits == 0
+                  or sum(len(d) for d, _, _ in postings_by_term.values())
+                  <= max(2 * k, 256)):
+        prune = False
 
     if not prune:
         d, s = score_query_node(node, postings_by_term, scorers_by_term, precision, pos_by_term)

@@ -24,7 +24,7 @@ traced in SURVEY §3.1) with only the collector varying:
      most ``LOCAL_SCORE_MAX_POSTINGS`` postings without ``filter_docs``, on
      an index with at most that many tombstones, runs on the driver
      (IndexSearcher runs leaves that fit one slice on the calling thread),
-     with no pandas frame: its Arrow rows (``_driver_rows``) are grouped by
+     with no pandas frame: its rows (``_driver_rows``) are grouped by
      segment into term → row dicts, masked by the reader-resident live docs
      (``Index.deleted_docids``).  Anything else runs in ``_per_segment``,
      the only ``applyInPandas``/``cogroup`` (the mask as one (docid, seg)
@@ -53,13 +53,11 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .analysis import ENGLISH_STOP_WORDS, analyze
-from .index import Index
+from .index import Index, row_dicts
 from .kernel import (TermPostings, decode_segment, match_docids, score_query_node,
                      segment_topk)
 from .similarity import SIMILARITIES, BM25Scorer, CollectionStats
@@ -2294,24 +2292,22 @@ def _driver_deny(index: Index, dfs: dict[str, int], terms) -> np.ndarray | None:
     return index.deleted_docids(LOCAL_SCORE_MAX_POSTINGS)
 
 
-def _driver_rows(index: Index, terms: list[str], segs: list[int] | None = None):
+def _driver_rows(index: Index, terms: list[str], segs: list[int] | None = None) -> list[dict]:
     """The posting rows of ``terms`` (of the segments ``segs`` only, when
-    given) on the driver as an Arrow table, None when ``terms`` is empty.
-    An index of at most ``LOCAL_SCORE_MAX_POSTINGS`` postings serves them
-    from its reader-resident snapshot (``Index.resident_postings``: no Spark
-    job once loaded); a larger one collects them, one job."""
+    given) on the driver as row dicts, none when ``terms`` is empty.  An
+    index of at most ``LOCAL_SCORE_MAX_POSTINGS`` postings serves them from
+    its reader-resident snapshot (``Index.resident_postings``: no Spark job
+    once loaded, rows whose postings are views of the snapshot); a larger
+    one collects them, one job."""
     if not terms:
-        return None
+        return []
     snap = index.resident_postings(LOCAL_SCORE_MAX_POSTINGS)
     if snap is not None:
-        tab = snap.rows(terms)
-        if segs is not None:
-            tab = tab.filter(pc.is_in(tab.column("seg"), pa.array(segs, pa.int64())))
-        return tab
+        return snap.rows(terms, segs)
     rows = index.postings.filter(F.col("term").isin(terms))
     if segs is not None:
         rows = rows.filter(F.col("seg").isin(segs))
-    return rows.toArrow()
+    return _arrow_rows(rows.toArrow())
 
 
 def _pulsed_rows(index: Index, terms: list[str],
@@ -2358,19 +2354,10 @@ def _fields(schema: str) -> list[tuple[str, type]]:
     return [(n, _DTYPES[t]) for n, t in (f.split() for f in schema.split(","))]
 
 
-def _rows(columns: dict) -> list[dict]:
-    """Posting rows given column-wise (name → values) → one dict per row, the
-    rows ``TermPostings`` decodes — the row builder of both executors."""
-    names = list(columns)
-    return [dict(zip(names, vals)) for vals in zip(*columns.values())]
-
-
 def _arrow_rows(table) -> list[dict]:
-    """The rows of an Arrow table from ``_driver_rows`` (none for None):
-    list and binary columns stay numpy arrays and bytes, no pandas."""
-    if table is None:
-        return []
-    return _rows({c: table.column(c).to_numpy(zero_copy_only=False)
+    """The rows of a collected Arrow table of posting rows: list and binary
+    columns become numpy arrays and bytes, no pandas."""
+    return row_dicts({c: table.column(c).to_numpy(zero_copy_only=False)
                   for c in table.column_names})
 
 
@@ -2388,23 +2375,22 @@ def _segment_runner(schema: str, run):
         if len(post_pdf) == 0 or (allow is not None and len(allow) == 0):
             cols = [np.empty(0, dtype) for _, dtype in fields]
         else:
-            rows = _rows({c: post_pdf[c].to_numpy() for c in post_pdf.columns})
+            rows = row_dicts({c: post_pdf[c].to_numpy() for c in post_pdf.columns})
             cols = run(int(rows[0]["seg"]), {r["term"]: r for r in rows}, allow, deny)
         return pd.DataFrame({n: c for (n, _), c in zip(fields, cols)})
 
     return run_group
 
 
-def _segments_on_driver(table, synth: list[dict], schema: str, run,
+def _segments_on_driver(rows: list[dict], synth: list[dict], schema: str, run,
                         deny: np.ndarray, seg_size: int) -> list[np.ndarray]:
-    """Driver path: the posting rows (an Arrow table from ``_driver_rows``,
-    or None when every term was pulsed) plus the synthesized pulsed rows,
-    grouped by segment into term → row and handed to ``run`` as on the
-    distributed path, each with its segment's slice of the sorted tombstoned
-    docids ``deny`` as local docids.  → one array per column of ``schema``,
-    concatenated over the segments."""
+    """Driver path: the posting rows from ``_driver_rows`` plus the
+    synthesized pulsed rows, grouped by segment into term → row and handed
+    to ``run`` as on the distributed path, each with its segment's slice of
+    the sorted tombstoned docids ``deny`` as local docids.  → one array per
+    column of ``schema``, concatenated over the segments."""
     groups: dict[int, dict[str, dict]] = {}
-    for r in _arrow_rows(table) + synth:
+    for r in rows + synth:
         groups.setdefault(int(r["seg"]), {})[r["term"]] = r
     parts = []
     for seg, term_rows in groups.items():
@@ -2520,7 +2506,7 @@ def _topk_segment(seg_size: int, queries: dict[str, tuple], scorers: dict,
                                 precision=precision, prune=prune, allow=allow, deny=deny,
                                 after=None if a is None else (a[0], a[1] - seg * seg_size))
             out_q.append(np.full(len(d), qid, dtype=object))
-            out_d.append(d + seg * seg_size)
+            out_d.append(d.astype(np.int64) + seg * seg_size)
             out_s.append(s)
         return np.concatenate(out_q), np.concatenate(out_d), np.concatenate(out_s)
 
@@ -2690,7 +2676,7 @@ def sorted_topk(
         return (empty, {"segments_probed": 0, "segments_total": 0}) if return_stats else empty
     snap = index.resident_postings(LOCAL_SCORE_MAX_POSTINGS)
     if snap is not None:
-        found = np.unique(snap.rows(plan.terms).column("seg").to_numpy()).tolist()
+        found = list({r["seg"] for r in snap.rows(plan.terms)})
     else:
         found = [r["seg"] for r in index.postings.filter(F.col("term").isin(plan.terms))
                  .select("seg").distinct().collect()]
@@ -2700,7 +2686,7 @@ def sorted_topk(
     def first_k(seg, term_rows, allow, deny):
         _, pbt, pos = decode_segment(node, term_rows, seg_size, allow, deny)
         d = match_docids(node, pbt, pos)  # sorted ascending
-        return ((d[:k] if ascending else d[-k:]) + seg * seg_size,)
+        return ((d[:k] if ascending else d[-k:]).astype(np.int64) + seg * seg_size,)
 
     acc: list[int] = []
     i, batch = 0, max(1, probe_segments)
@@ -2829,8 +2815,7 @@ def explain(
         return pd.DataFrame(columns=cols)
     seg, local = divmod(int(docid), index.seg_size)
     synth, scan_terms = _pulsed_rows(index, plan.terms, plan.dfs)
-    table = _driver_rows(index, scan_terms, [seg])
-    rows = _arrow_rows(table) + [r for r in synth if r["seg"] == seg]
+    rows = _driver_rows(index, scan_terms, [seg]) + [r for r in synth if r["seg"] == seg]
     found = {}  # term -> its (freq, dl) slices at the doc
     for r in rows:
         d, f, dl = TermPostings(r, index.seg_size).decode()

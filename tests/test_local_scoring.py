@@ -475,3 +475,141 @@ def test_top_docs_many_matches_a_sorted_reference():
         assert got[qid].docids.dtype == np.int64 and got[qid].scores.dtype == np.float64
         # its own arrays, not views that pin the whole batch's hits
         assert got[qid].docids.base is None and got[qid].scores.base is None
+
+
+def _head_or(by_df, n=6):
+    return " OR ".join(by_df[:n])
+
+
+def test_one_window_segments_skip_the_pruning_machinery(monkeypatch, idx, by_df):
+    """Every segment of ``idx`` (seg_size 100) is one 4096-doc window, so a
+    warmed resident query scores it exhaustively: no window bound and no
+    window batch, although the head-term OR below holds more postings per
+    segment than the cost rule's 256 (so the one-window rule, not that
+    rule, makes the choice)."""
+    from lucene_spark import kernel
+
+    q = _head_or(by_df)
+    snap = idx.resident_postings(S.LOCAL_SCORE_MAX_POSTINGS)
+    cost = {}
+    for r in snap.rows(S._plan(idx, q).terms):
+        cost[r["seg"]] = cost.get(r["seg"], 0) + r["df_local"]
+    assert max(cost.values()) > 256
+    batch = {"head": q, **_queries(by_df)}
+    want = {"one": search(idx, q, k=10, prune=False),
+            "many": search_many(idx, batch, k=10, prune=False)}
+
+    def fail(*a, **kw):
+        raise AssertionError("window pruning on a one-window segment")
+
+    monkeypatch.setattr(kernel, "_score_windows", fail)
+    monkeypatch.setattr(kernel, "window_max_scores", fail)
+    _assert_same(search(idx, q, k=10), want["one"])
+    got = search_many(idx, batch, k=10)
+    for qid in batch:
+        _assert_same(got[qid], want["many"][qid])
+
+
+def test_multi_window_segment_still_prunes(spark, monkeypatch):
+    """A segment of more than one window keeps the windowed block-max path:
+    1000 docs in one 1024-doc segment cut into 32-doc windows
+    (``window_bits=5``), and a k=10 OR of two head terms (in every doc)
+    and a selective term (in the first 20 docs) scores fewer windows than
+    hold postings, with the exhaustive path's exact answer."""
+    from lucene_spark import kernel
+
+    n = 1000
+    rows = [(f"mw{i:04d}", "alpha beta" + (" zeta" if i < 20 else "")) for i in range(n)]
+    index = build_index(spark, spark.createDataFrame(rows, "url string, text string"),
+                        seg_size=1024)
+    q = "alpha OR beta OR zeta"
+    plan = S._plan(index, q)
+    term_rows = {r["term"]: r for r in S._driver_rows(index, plan.terms)}  # one segment
+    window_bits = 5
+    occupied = np.unique(np.concatenate(
+        [np.asarray(r["docids"]) >> window_bits for r in term_rows.values()]))
+    scored = []
+    score_windows = kernel._score_windows
+
+    def spy(windows, *a, **kw):
+        scored.extend(windows)
+        return score_windows(windows, *a, **kw)
+
+    monkeypatch.setattr(kernel, "_score_windows", spy)
+    d, s = kernel.segment_topk(plan.node, term_rows, plan.scorers, index.seg_size, 10,
+                               window_bits=window_bits)
+    assert 0 < len(scored) < len(occupied)
+    want_d, want_s = kernel.segment_topk(plan.node, term_rows, plan.scorers,
+                                         index.seg_size, 10, prune=False)
+    assert d.tolist() == want_d.tolist() and s.tobytes() == want_s.tobytes()
+    assert sorted(d.tolist()) == list(range(10))
+
+
+class _NoTable:
+    """Stands in for a snapshot's Arrow table: any use of it fails."""
+
+    def __getattr__(self, name):
+        raise AssertionError(f"resident query read the snapshot table ({name})")
+
+
+def test_resident_rows_are_views_not_table_copies(monkeypatch, idx, by_df):
+    """A warmed resident search()/search_many reads its rows from the
+    snapshot's flat numpy views: it never touches the Arrow table (so no
+    list-column ``to_numpy``; the Cython types cannot be patched, so the
+    table itself is swapped for one that fails), no ``take`` (``Table.take``
+    calls ``pyarrow.compute.take``) and not the collecting path's
+    ``_arrow_rows``."""
+    import dataclasses
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    batch = _queries(by_df)
+    want = {"one": search(idx, batch["and_or"], k=10), "many": search_many(idx, batch, k=10)}
+    snap = idx.resident_postings(S.LOCAL_SCORE_MAX_POSTINGS)
+    assert {"docids", "freqs", "dls", "imp_freqs"} <= set(snap.flat)
+    for name, (values, offsets) in snap.flat.items():  # views of the table, not copies
+        chunk = snap.table.column(name).chunk(0)
+        data = chunk.values.buffers()[1] if pa.types.is_list(chunk.type) else chunk.buffers()[2]
+        assert len(offsets) == len(chunk) + 1
+        assert len(values) == 0 or values.ctypes.data == data.address
+
+    def fail(*a, **kw):
+        raise AssertionError("Arrow take or row conversion on the resident path")
+
+    monkeypatch.setattr(idx, "_postings", dataclasses.replace(snap, table=_NoTable()))
+    monkeypatch.setattr(pc, "take", fail)
+    monkeypatch.setattr(S, "_arrow_rows", fail)
+    _assert_same(search(idx, batch["and_or"], k=10), want["one"])
+    got = search_many(idx, batch, k=10)
+    for qid in batch:
+        _assert_same(got[qid], want["many"][qid])
+
+
+def test_docids_past_int32_parity(spark, monkeypatch):
+    """Caller docids around 2**31, in segments of 100 (so a segment's base
+    fits int32 while its docids do not): the resident path, whose postings
+    are int32 views, returns the same int64 docids and scores as the
+    forced-distributed path."""
+    n, first = 120, 2**31 - 150
+    pdf = generate_pages(n, seed=8)[["url", "text"]]
+    pdf["url"] = [f"https://big.example/{i}" for i in range(n)]
+    pdf["docid"] = [first + 3 * i for i in range(n)]
+    index = build_index(spark, spark.createDataFrame(pdf), seg_size=100, docid_col="docid")
+    search(index, "court", k=5)  # warm: resident snapshots
+    assert index.resident_postings(S.LOCAL_SCORE_MAX_POSTINGS) is not None
+    ts = index.term_stats()
+    t = ts.terms[np.argsort(-ts.df, kind="stable")].tolist()
+    batch = {**_queries(t), "head": _head_or(t, 4)}
+    (local, jobs), (dist, _) = _both_paths(spark, monkeypatch,
+                                          lambda: search_many(index, batch, k=n))
+    assert jobs == 0
+    for qid in batch:
+        _assert_same(local[qid], dist[qid])
+    got = local["head"].docids
+    assert set(got.tolist()) <= set(pdf["docid"].tolist()) and got.max() >= 2**31
+    (one, jobs), (one_d, _) = _both_paths(spark, monkeypatch,
+                                          lambda: search(index, batch["head"], k=n))
+    assert jobs == 0
+    _assert_same(one, one_d)
+    _assert_same(one, local["head"])

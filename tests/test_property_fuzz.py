@@ -16,6 +16,8 @@ inputs and assert the CONTRACT rather than golden values.
   - MemoryIndex duel: for ANY single-doc corpus and term query, the
     in-RAM index scores EXACTLY like the exhaustive oracle over a one-doc
     corpus (same analyzer, same float32 BM25)
+  - per-block impact maxima: the vectorized ``max_scores_per_block`` equals
+    a per-block loop for any block mix, empty and single-impact blocks too
 """
 
 import numpy as np
@@ -28,6 +30,7 @@ from lucene_spark.codecs import (
     encode_positions,
     encode_postings,
 )
+from lucene_spark.impacts import max_scores_per_block
 from lucene_spark.memory import memory_search
 from lucene_spark.oracle import OracleIndex
 from lucene_spark.search import damerau_levenshtein, parse_query
@@ -244,3 +247,35 @@ def test_bloom_fold_membership(data):
         s = half
     for hv in hashes:
         assert cur[hv & (s - 1)]
+
+
+# --- per-block impact maxima --------------------------------------------------
+
+
+def _max_scores_loop(imp_freqs, imp_dls, offsets, scorer):
+    out = np.zeros(len(offsets) - 1, dtype=np.float64)
+    for bi in range(len(offsets) - 1):
+        s, e = offsets[bi], offsets[bi + 1]
+        if e > s:
+            out[bi] = scorer.score_from_dl(imp_freqs[s:e], imp_dls[s:e]).max()
+    return out
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    st.lists(st.lists(st.tuples(st.integers(1, 300), st.integers(1, 5000)), max_size=4),
+             max_size=12),
+    st.sampled_from(["lucene", "float64"]),
+    st.integers(1, 999),
+)
+def test_max_scores_per_block_matches_a_block_loop(blocks, precision, df):
+    from lucene_spark.similarity import BM25Scorer, CollectionStats
+
+    scorer = BM25Scorer(df, CollectionStats(1000, 250_000), precision=precision)
+    pairs = [p for b in blocks for p in b]
+    imp_freqs = np.array([f for f, _ in pairs], dtype=np.int64)
+    imp_dls = np.array([dl for _, dl in pairs], dtype=np.int64)
+    offsets = np.concatenate(([0], np.cumsum([len(b) for b in blocks]))).astype(np.int64)
+    got = max_scores_per_block(imp_freqs, imp_dls, offsets, scorer)
+    want = _max_scores_loop(imp_freqs, imp_dls, offsets, scorer)
+    assert got.dtype == np.float64 and got.tobytes() == want.tobytes()

@@ -262,8 +262,8 @@ def test_resident_postings_match_the_table(small):
     assert got.sort_values(key).reset_index(drop=True).equals(
         want.sort_values(key).reset_index(drop=True))
     terms = sorted(set(want["term"]))[::5] + [ABSENT]
-    part = snap.rows(terms).to_pandas()
-    assert sorted(zip(part["term"], part["seg"])) == sorted(
+    part = snap.rows(terms)
+    assert sorted((r["term"], r["seg"]) for r in part) == sorted(
         zip(*[want[want["term"].isin(terms)][c] for c in key]))
     assert len(snap.rows([ABSENT])) == 0 and len(snap.rows([])) == 0
 
