@@ -315,7 +315,7 @@ def html_strip(text: str) -> str:
     """HTMLStripCharFilter analog (analysis/charfilter/HTMLStripCharFilter
     .java — a CharFilter, i.e. runs BEFORE the tokenizer): removes markup
     tags from the raw text.  Same tag semantics as the byte-exact
-    `multimodal.extract_text_from_html` (tags deleted, no replacement —
+    `textops.extract_text_from_html` (tags deleted, no replacement —
     entity decoding and offset correction not implemented)."""
     return _HTML_TAG_RE.sub("", text or "")
 

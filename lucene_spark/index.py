@@ -1080,43 +1080,6 @@ def tokenize_docs(pages: DataFrame, text_col: str = "text", key_col: str = "url"
     ).withColumn("dl", F.size("tokens")).withColumn("norm", norm_udf(F.col("dl")))
 
 
-def invert(docs_tok: DataFrame, seg_size: int) -> DataFrame:
-    """docs(docid, tokens, dl) → tf table (term, docid, seg, tf, dl).
-
-    Lucene's invert step (IndexingChain.java:1120-1217 accumulating into
-    TermsHashPerField) done as *partition-local* pandas aggregation: each doc
-    lives in exactly one partition, so per-partition (term, docid) counts are
-    already global — no shuffle here at all.  The only wide exchange in the
-    whole build is the downstream groupBy(term, seg), and it moves unique
-    (term, docid, tf) tuples rather than raw tokens (~3-5x less at web text's
-    token repetition rates).
-    """
-
-    def local_invert(batches):
-        for pdf in batches:
-            n = pdf["tokens"].map(len).to_numpy(dtype=np.int64)
-            if n.sum() == 0:
-                continue
-            flat = pd.DataFrame(
-                {
-                    "term": np.concatenate([np.asarray(t, dtype=object) for t in pdf["tokens"]]),
-                    "docid": np.repeat(pdf["docid"].to_numpy(dtype=np.int64), n),
-                    "dl": np.repeat(pdf["dl"].to_numpy(dtype=np.int64), n),
-                }
-            )
-            out = (
-                flat.groupby(["term", "docid"], sort=False)
-                .agg(tf=("dl", "size"), dl=("dl", "first"))
-                .reset_index()
-            )
-            out["seg"] = out["docid"] // seg_size
-            yield out[["term", "docid", "seg", "tf", "dl"]]
-
-    return docs_tok.select("docid", "dl", "tokens").mapInPandas(
-        local_invert, schema="term string, docid long, seg long, tf long, dl long"
-    )
-
-
 def _index_tables(
     base: DataFrame, offs: list[int] | None, text_col: str, key_col: str, seg_size: int,
     stopwords, with_positions: bool, shuffle_partitions: int | None = None,

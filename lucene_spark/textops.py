@@ -5,12 +5,15 @@ pure DataFrame ops (JVM-side, whole-stage codegen) except where hashing
 semantics require numpy (minhash/simhash), which run as Arrow-batched pandas
 UDFs.  Every exact op has an ANSI-SQL twin for the correctness gate.
 
-Ops: exact dedup (md5 hash-groupBy), n-gram Jaccard near-dup (exact),
-MinHash+LSH near-dup candidates (scale path), SimHash, language ID heuristic,
-quality scoring, token counting, document fingerprinting.
+Ops: HTML→text extraction (the pages table's html column), exact dedup
+(md5 hash-groupBy), n-gram Jaccard near-dup (exact), MinHash+LSH near-dup
+candidates (scale path), SimHash, language ID heuristic, quality scoring,
+token counting, document fingerprinting.
 """
 
 from __future__ import annotations
+
+import re
 
 import numpy as np
 import pandas as pd
@@ -18,6 +21,30 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .analysis import ENGLISH_STOP_WORDS
+
+# ---------------------------------------------------------------- HTML → text
+
+_TAG_RE = re.compile(rb"<[^>]+>")
+
+
+def extract_text_from_html(html: bytes) -> str:
+    """Strip tags; byte-identical inverse of the FIXTURES.md html wrapper."""
+    return _TAG_RE.sub(b"", html or b"").decode("utf-8", errors="replace")
+
+
+def html_to_text(pages: DataFrame, html_col: str = "html", out_col: str = "extracted_text") -> DataFrame:
+    """mapInPandas HTML→text: streams Arrow batches, appends one string col."""
+    fields = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in pages.schema.fields)
+    schema = f"{fields}, {out_col} string"
+
+    def run(batches):
+        for pdf in batches:
+            pdf = pdf.copy()
+            pdf[out_col] = [extract_text_from_html(h) for h in pdf[html_col]]
+            yield pdf
+
+    return pages.mapInPandas(run, schema=schema)
+
 
 # ---------------------------------------------------------------- exact dedup
 
@@ -1205,8 +1232,6 @@ def bpe_encode(docs: DataFrame, merges: list[tuple[str, str, int]] | list[tuple[
             syms[best_i:best_i + 2] = [syms[best_i] + syms[best_i + 1]]
         memo[w] = syms
         return syms
-
-    import re
 
     word_re = re.compile(r"[^\W\d_]+", re.UNICODE)
 

@@ -69,89 +69,6 @@ def test_classify(aidx, docs):
     assert out[0]["label"] == "en"
 
 
-# ---------------------------------------------------------------- multimodal: real decoders
-
-
-def test_bmp_roundtrip_and_padding():
-    import numpy as np
-
-    from lucene_spark.multimodal import decode_bmp, encode_bmp
-
-    rng = np.random.default_rng(7)
-    for shape in ((2, 2, 3), (5, 7, 3), (8, 8, 3), (1, 3, 3)):
-        img = rng.integers(0, 256, shape, dtype=np.uint8)
-        assert np.array_equal(decode_bmp(encode_bmp(img)), img), shape
-
-
-def test_bmp_rejects_non_bmp():
-    import pytest as _pt
-
-    from lucene_spark.multimodal import decode_bmp
-
-    with _pt.raises(ValueError):
-        decode_bmp(b"\x89PNG" + b"\x00" * 60)
-
-
-def test_image_dispatch():
-    import numpy as np
-    import pytest as _pt
-
-    from lucene_spark.multimodal import decode_image, encode_bmp
-
-    img = np.zeros((4, 4, 3), dtype=np.uint8)
-    assert decode_image(encode_bmp(img)).shape == (4, 4, 3)
-    # JPEG decodes for REAL now (lucene_spark.jpeg, r5); garbage after the
-    # magic is a hard error, never the fake fallback
-    from lucene_spark.jpeg import encode_jpeg
-
-    assert decode_image(encode_jpeg(img, quality=95)).shape == (4, 4, 3)
-    with _pt.raises(ValueError):
-        decode_image(b"\xff\xd8\xff" + b"\x00" * 10)
-    assert decode_image(b"arbitrary-bytes").shape == (8, 8)  # fake fallback
-
-
-def test_wav_roundtrip_exact():
-    import numpy as np
-
-    from lucene_spark.multimodal import decode_wav, encode_wav
-
-    sig = np.array([0, 100, -200, 32767, -32768, 5], dtype=np.int16)
-    samples, rate = decode_wav(encode_wav(sig, 8000))
-    assert rate == 8000
-    np.testing.assert_allclose(samples[:, 0] * 32768.0, sig.astype(np.float64))
-    st = np.stack([sig, -sig], axis=1).astype(np.int16)
-    s2, r2 = decode_wav(encode_wav(st, 44100))
-    assert s2.shape == (6, 2) and r2 == 44100
-
-
-def test_image_and_audio_features_spark(spark):
-    import numpy as np
-
-    from lucene_spark.multimodal import audio_features, encode_bmp, encode_wav, image_features
-
-    rng = np.random.default_rng(3)
-    img = rng.integers(0, 256, (16, 12, 3), dtype=np.uint8)
-    wav = (np.sin(np.linspace(0, 40, 8000)) * 10000).astype(np.int16)
-    df = spark.createDataFrame(
-        [(0, bytearray(encode_bmp(img))), (1, bytearray(b"fake-payload"))],
-        "doc_id long, payload binary",
-    )
-    feats = {r["doc_id"]: r for r in image_features(df).collect()}
-    assert feats[0]["width"] == 12 and feats[0]["height"] == 16
-    assert len(feats[0]["feature"]) == 64
-    assert feats[1]["width"] == 8  # fake fallback path still shapes correctly
-
-    adf = spark.createDataFrame(
-        [(0, bytearray(encode_wav(wav, 16000))), (1, bytearray(b"not-wav"))],
-        "doc_id long, payload binary",
-    )
-    arows = {r["doc_id"]: r for r in audio_features(adf).collect()}
-    assert set(arows) == {0}  # undecodable rows skipped
-    assert arows[0]["sample_rate"] == 16000
-    assert abs(arows[0]["duration_sec"] - 0.5) < 1e-9
-    assert 0 < arows[0]["rms"] < 1
-
-
 def test_classify_naive_bayes(aidx, docs):
     """Duel vs an independent pure-Python NB twin of
     SimpleNaiveBayesClassifier.java:49 on the module corpus."""
@@ -675,40 +592,3 @@ def test_big_integer_range(spark):
         "2000000000000000000000000000000000000",
         "5000000000000000000000000000000000000").collect())
     assert got == [2, 3, 4, 5]
-
-
-def test_rawvideo_roundtrip_and_frame_sample(spark):
-    import numpy as np
-
-    from lucene_spark.multimodal import (
-        decode_bmp, decode_rawvideo, encode_rawvideo, frame_sample,
-        video_features,
-    )
-
-    rng = np.random.default_rng(7)
-    vids = []
-    for vid in range(3):
-        frames = rng.integers(0, 256, (25, 6, 8, 3), dtype=np.uint8)
-        vids.append((vid, bytearray(encode_rawvideo(frames, fps=5))))
-    # roundtrip
-    fr, fps = decode_rawvideo(bytes(vids[0][1]))
-    assert fr.shape == (25, 6, 8, 3) and fps == 5
-    df = spark.createDataFrame(vids, "doc_id long, payload binary")
-    out = frame_sample(df, every_n=10).toPandas()
-    # frames 0, 10, 20 per video
-    assert sorted(out[out.doc_id == 0]["frame_idx"]) == [0, 10, 20]
-    assert len(out) == 9
-    assert (out["width"] == 8).all() and (out["height"] == 6).all()
-    # sampled frame re-encodes as a decodable BMP with identical pixels
-    f0 = out[(out.doc_id == 0) & (out.frame_idx == 10)].iloc[0]
-    img = decode_bmp(bytes(f0["frame_bmp"]))
-    fr0, _ = decode_rawvideo(bytes(vids[0][1]))
-    assert (img == fr0[10]).all()
-    feats = video_features(df).toPandas().set_index("doc_id")
-    assert (feats["n_frames"] == 25).all()
-    assert (feats["duration_s"] == 5.0).all()
-    assert (feats["temporal_energy"] > 0).all()
-    # compressed containers stay honestly stubbed
-    import pytest as _pt
-    with _pt.raises(NotImplementedError):
-        decode_rawvideo(b"\x00\x00\x00\x18ftypmp42" + b"x" * 64)

@@ -1,10 +1,10 @@
-"""textops + ann + multimodal unit/integration tests (pandas-checked)."""
+"""textops + ann unit/integration tests (pandas-checked)."""
 
 import numpy as np
 import pandas as pd
 import pytest
 
-from lucene_spark import ann, multimodal, textops
+from lucene_spark import ann, textops
 
 
 @pytest.fixture(scope="module")
@@ -180,7 +180,7 @@ def test_ivf_train_deterministic(emb_df):
     np.testing.assert_array_equal(c1, c2)
 
 
-# ---------------------------------------------------------------- multimodal
+# ---------------------------------------------------------------- HTML → text
 
 
 def test_html_to_text_roundtrip(spark):
@@ -188,26 +188,20 @@ def test_html_to_text_roundtrip(spark):
 
     pages = generate_pages(50, seed=42, n_stems=100)
     df = spark.createDataFrame(pages)
-    out = multimodal.html_to_text(df).select("url", "text", "extracted_text").collect()
+    out = textops.html_to_text(df).select("url", "text", "extracted_text").collect()
     for r in out:
         assert r["extracted_text"] == r["text"]  # byte-identical contract
 
 
-def test_image_features_stub_plumbing(spark):
-    rows = [(i, bytes([i % 251] * (i + 1))) for i in range(20)]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary").repartition(3)
-    out = multimodal.image_features(df).collect()
-    assert len(out) == 20
-    for r in out:
-        assert r["width"] == 8 and r["height"] == 8
-        assert len(r["feature"]) == 64
-        assert 0.0 <= r["mean_intensity"] <= 255.0
+def test_html_tags_stripped_before_decoding():
+    """Tags come out of the raw bytes, so a UTF-8 sequence split by a tag
+    rejoins; `filters.html_strip` sees the decoded string, where the split
+    bytes are already replacement characters."""
+    from lucene_spark.filters import html_strip
 
-
-def test_frame_sample_stub():
-    frames = multimodal.frame_sample_stub(bytes(range(160)), every_n=4)
-    assert len(frames) == 4
-    assert multimodal.frame_sample_stub(b"") == []
+    raw = b"\xe2<b>\x82\xac"
+    assert textops.extract_text_from_html(raw) == "\u20ac"
+    assert html_strip(raw.decode("utf-8", errors="replace")) == "\ufffd" * 3
 
 
 def test_embcos_pairs_exact_and_lsh(spark):
